@@ -13,7 +13,6 @@ exercises a distinct reference algorithm branch (citations inline).
 
 from __future__ import annotations
 
-import json
 from typing import Mapping, NamedTuple, Optional
 
 from .kernel import (
@@ -160,27 +159,3 @@ class ContextDict:
                 self.processor, base_ctx, ctx_iri, self.document_iri
             )
         return self._compiled[ctx_iri]
-
-    def compile_all(self) -> dict[str, Context]:
-        for iri in self.raw:
-            self.compiled(iri)
-        return dict(self._compiled)
-
-    def as_rows(self) -> list[tuple[str, str]]:
-        """(ctx_iri, ctx_json) rows for materializing the contexts table."""
-        return [(iri, json.dumps(doc, sort_keys=True)) for iri, doc in self.raw.items()]
-
-    @classmethod
-    def from_table(cls, spark, path_or_df, document_iri: str = DEFAULT_DOCUMENT_IRI):
-        """Load from a contexts(ctx_iri, ctx_json) parquet/table — the small
-        table is collected to the driver, matching broadcast sizing."""
-        df = (
-            spark.read.parquet(path_or_df)
-            if isinstance(path_or_df, str)
-            else path_or_df
-        )
-        raw = {
-            r["ctx_iri"]: json.loads(r["ctx_json"])
-            for r in df.select("ctx_iri", "ctx_json").collect()
-        }
-        return cls(raw, document_iri)

@@ -241,7 +241,3 @@ class ProcessorOptions:
         if looks_like_iri(context.base):
             return context.base
         return resolve_iri(context.base, self.document_iri)
-
-
-def new_context_with_base(base: Optional[str]) -> Context:
-    return Context(base=base)

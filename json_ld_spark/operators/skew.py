@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -37,26 +37,6 @@ def salted_count(
         .agg(F.count("*").alias("__partial"))
     )
     return partial.groupBy(*keys).agg(F.sum("__partial").alias(count_alias))
-
-
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    salt_cols: Sequence[str],
-    partial_aggs: Sequence[Column],
-    final_aggs: Sequence[Column],
-    n_salts: int = 32,
-) -> DataFrame:
-    """General two-phase aggregation. ``partial_aggs`` run per (key, salt);
-    ``final_aggs`` combine the partials per key and must reference the
-    partial aliases."""
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(n_salts))
-    partial = (
-        df.withColumn("__salt", salt)
-        .groupBy(*keys, "__salt")
-        .agg(*partial_aggs)
-    )
-    return partial.groupBy(*keys).agg(*final_aggs)
 
 
 def repartition_salted(

@@ -1,28 +1,107 @@
-"""Connected components over an edge list — large-star / small-star.
+"""Connected components over an edge list — driver union-find for small
+graphs, large-star / small-star for the rest.
 
-Implements the alternating large-star/small-star algorithm of
-Kiveris et al., "Connected Components in MapReduce and Beyond" (SoCC'14) —
-the same scheme GraphFrames uses — as pure DataFrame joins/aggregations so
-Catalyst/AQE handle skew and physical strategy (SURVEY.md §2 J2).
+Both branches label every node with the lexicographically-smallest member
+of its component (the W2 canonical tie-break of SURVEY.md §2), so no global
+id-assignment step is needed, and both return the same ``(id, component)``
+frame: one row per distinct endpoint, including nodes whose only edge is a
+self-loop (own label) and a null endpoint (null label).
 
-The algorithm runs directly on *string* node ids: Spark's ``min`` on strings
-is lexicographic, so the component label is deterministically the
-lexicographically-smallest member (the W2 canonical tie-break of SURVEY.md
-§2) without a global id-assignment step — a driver-side ``row_number`` over
-all nodes would be a single-partition bottleneck at 10^12 scale.
+Which branch runs is decided by the input size. ``connected_components``
+first collects at most ``_LOCAL_MAX_EDGES + 1`` edges:
 
-Scale notes:
-- Each iteration is join + groupBy().min(); lineage is cut with
-  ``localCheckpoint`` every iteration so Catalyst's plan doesn't grow
-  unboundedly and AQE re-plans each round (SURVEY.md §4.2).
-- Convergence in O(log^2 n) rounds; hub-heavy graphs converge faster since
-  stars centralize mass onto min-ids.
+- **Driver branch** (the graph fits): union-find on the collected edges,
+  then one DataFrame over an Arrow table. A distributed round costs a
+  handful of Spark jobs whatever the graph size, and the loop below needs
+  O(log^2 n) rounds plus a convergence check, so on the ~10-edge same-as
+  graphs of a typical build it costs ~24 jobs (about half of all jobs in a
+  build) for work the driver does in microseconds. This is the small-side
+  argument of Blanas et al., "A Comparison of Join Algorithms for Log
+  Processing in MapReduce" (SIGMOD'10): when one side is small, process it
+  on one node.
+  Python ``str`` ordering is code-point order, which equals the UTF-8 byte
+  order Spark's string ``min`` uses, so the labels are identical.
+- **Distributed branch** (larger graphs): the alternating
+  large-star/small-star algorithm of Kiveris et al., "Connected Components
+  in MapReduce and Beyond" (SoCC'14) — the same scheme GraphFrames uses —
+  as pure DataFrame joins/aggregations so Catalyst/AQE handle skew and
+  physical strategy (SURVEY.md §2 J2). It runs directly on string ids:
+  Spark's ``min`` on strings is lexicographic. Each iteration is join +
+  groupBy().min(); lineage is cut with ``localCheckpoint`` every iteration
+  so the plan does not grow unboundedly and AQE re-plans each round
+  (SURVEY.md §4.2). Convergence takes O(log^2 n) rounds; a loop that has
+  not converged after ``max_iterations`` raises instead of returning
+  partial labels.
+
+The bound: 10^5 edges are at most 2×10^5 distinct ids. The collected rows
+plus the union-find dict then take on the order of 100 MB of Python heap
+on the driver in the worst case of long IRIs (a few hundred bytes per row
+and per entry), well inside the default driver memory, and union-find over
+them takes well under a second — less than the fixed cost of the
+distributed loop's first round. It is a module constant, not an option:
+it depends on driver memory, not on the caller.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+
+_LOCAL_MAX_EDGES = 100_000
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    max_iterations: int = 25,
+) -> DataFrame:
+    """Return (id: string, component: string); ``component`` is the
+    lexicographically-smallest member of the node's component.
+
+    ``edges`` is treated as undirected; self-loops connect nothing.
+    ``max_iterations`` bounds the distributed loop, which raises
+    ``RuntimeError`` if it has not converged by then.
+    """
+    pairs = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    head = pairs.limit(_LOCAL_MAX_EDGES + 1).collect()
+    if len(head) <= _LOCAL_MAX_EDGES:
+        return _driver_components(pairs.sparkSession, head)
+    return _distributed_components(pairs, max_iterations)
+
+
+def _driver_components(spark: SparkSession, edges: list[Row]) -> DataFrame:
+    """Union-find over collected ``(src, dst)`` rows. The root of every set
+    is kept at its smallest member, so a root is its component's label."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        for v in (a, b):
+            parent.setdefault(v, v)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = list(parent)
+    labels = [find(v) for v in ids]  # a null id is its own (null) root
+    # an Arrow table, not a list of rows: a DataFrame over Python rows is
+    # re-read through Python worker tasks by every consumer, Arrow batches
+    # are decoded in the JVM
+    table = pa.table({
+        "id": pa.array(ids, pa.string()),
+        "component": pa.array(labels, pa.string()),
+    })
+    return spark.createDataFrame(table, "id string, component string")
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -59,37 +138,25 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """Return (id: string, component: string); ``component`` is the
-    lexicographically-smallest member of the node's component.
+def _fingerprint(df: DataFrame):
+    """(count, xor-of-row-hashes) — one cheap aggregate job."""
+    row = df.select(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
+    ).collect()[0]
+    return row["n"], row["h"]
 
-    ``edges`` is treated as undirected; self-loops are dropped.
-    """
+
+def _distributed_components(edges: DataFrame, max_iterations: int) -> DataFrame:
+    """Large-star/small-star over ``(src, dst)`` edges; same output as
+    :func:`_driver_components`."""
+    # read once, by the final join — no checkpoint needed
     ids = (
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id")))
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
         .distinct()
-        .localCheckpoint()
     )
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    def _fingerprint(df: DataFrame):
-        """(count, xor-of-row-hashes) — one cheap aggregate job."""
-        row = df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
+    e = edges.where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
     fp = _fingerprint(e)
     for _ in range(max_iterations):
         e2 = _small_star(_large_star(e)).localCheckpoint()
@@ -101,6 +168,11 @@ def connected_components(
             e = e2
             break
         e, fp = e2, fp2
+    else:
+        raise RuntimeError(
+            f"connected components did not converge within "
+            f"{max_iterations} iterations"
+        )
     # at convergence the graph is a union of stars rooted at component minima
     membership = (
         _symmetrize(e)

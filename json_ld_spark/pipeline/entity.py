@@ -12,8 +12,9 @@ Design for 10^12 turns:
   magnitude smaller than mentions, so Spark broadcasts it (AQE also rescues
   misestimates). Hot blocks (hub entities) are bounded by a per-block
   candidate cap.
-- same-as edges → large-star/small-star CC (cc.py) → canonical ids applied
-  to triples with two equi-joins (subject side, object side).
+- same-as edges → connected components (cc.py: driver union-find for small
+  graphs, large-star/small-star otherwise) → canonical ids applied to
+  triples with two equi-joins (subject side, object side).
 """
 
 from __future__ import annotations
@@ -179,7 +180,7 @@ def canonicalize(
         clean = clean.localCheckpoint()
     entities = entity_dictionary(clean).localCheckpoint()
     edges0 = same_as_edges(entities)
-    canon_map = connected_components(edges0).localCheckpoint()
+    canon_map = connected_components(edges0)
     # entities without any same-as edge are their own canon
     canon_full = (
         entities.join(canon_map, entities.entity_iri == canon_map.id, "left")

@@ -22,10 +22,13 @@ that is the difference between 1 pass and 32):
 2. ONE grouped metrics job aggregates clean/error/checksum for every
    written bucket directory (round 2 ran 3 jobs per bucket,
    driver-serially — the job-launch-latency wall at 10^3+ buckets).
-3. A driver-side loop then writes only the tiny atomic manifest rows. The
-   manifest row remains the commit point, so resume granularity is still
-   per-bucket: a crash mid-loop leaves later buckets pending, and the
-   re-run's dynamic overwrite of those partitions is idempotent.
+3. A driver-side loop then writes only the tiny atomic manifest rows —
+   each a one-row ``pyarrow.parquet`` write plus ``os.replace`` on the
+   driver, no Spark job (manifest.py; on a real deployment the Iceberg
+   ``writeTo(...).append()`` takes its place). The manifest row remains the
+   commit point, so resume granularity is still per-bucket: a crash
+   mid-loop leaves later buckets pending, and the re-run's dynamic
+   overwrite of those partitions is idempotent.
 """
 
 from __future__ import annotations

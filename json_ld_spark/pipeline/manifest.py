@@ -8,6 +8,16 @@ parquet with an atomic-rename commit per work unit; on a real deployment the
 (run_id, partition_id, input_rows, triples_out, errors, checksum, ts — the
 snapshot_id column then carries the Iceberg snapshot).
 
+A commit is a driver-side write, not a Spark job: the one-row file is
+written with ``pyarrow.parquet`` to ``manifest/bucket_<b>.parquet.tmp``,
+fsynced, and ``os.replace``d to ``bucket_<b>.parquet`` — the rename is the
+commit point. Only ``*.parquet`` files count as committed, so a crash
+between the write and the rename (a leftover ``.tmp``) leaves the bucket
+pending. A Spark job would add ~1 s of fixed job overhead to each one-row
+commit; the pyarrow write takes about a millisecond. The committed-bucket
+and pinned-snapshot lookups read the manifest files with pyarrow for the
+same reason; ``read_manifest`` still returns the table as a DataFrame.
+
 Resume = left-anti join of input work units against committed manifest rows:
 already-done units are skipped, so re-running after a failure appends only
 the missing partitions and the final table is byte-identical (FIXTURES.md
@@ -24,12 +34,35 @@ import os
 import time
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
+
+from .extract import TRIPLE_SCHEMA
 
 MANIFEST_SCHEMA = (
     "run_id string, partition_id int, input_rows long, triples_out long, "
     "errors long, checksum string, snapshot_id string, ts double"
+)
+
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+    "double": pa.float64(),
+}
+# the parquet schema of a manifest file; Spark reads it back as exactly
+# StructType.fromDDL(MANIFEST_SCHEMA) (pinned in test_pipeline_resume)
+MANIFEST_ARROW_SCHEMA = pa.schema([
+    (name, _ARROW_TYPES[ty])
+    for name, ty in (f.split() for f in MANIFEST_SCHEMA.split(","))
+])
+
+# the triples table: the extraction output plus its ``bucket`` partition
+# column. Reading with it given skips Spark's schema-inference job (one
+# Spark job per read, just to open a parquet footer).
+_TRIPLES_TABLE_SCHEMA = StructType(
+    TRIPLE_SCHEMA.fields + [StructField("bucket", IntegerType())]
 )
 
 
@@ -49,16 +82,20 @@ class ParquetManifest:
         os.makedirs(self.manifest_dir, exist_ok=True)
         os.makedirs(self.triples_dir, exist_ok=True)
 
-    def committed_buckets(self) -> set[int]:
-        files = [
-            f for f in os.listdir(self.manifest_dir) if f.endswith(".parquet")
+    def _manifest_files(self) -> list[str]:
+        return [
+            os.path.join(self.manifest_dir, f)
+            for f in os.listdir(self.manifest_dir)
+            if f.endswith(".parquet")
         ]
-        if not files:
-            return set()
-        df = self.spark.read.parquet(
-            *[os.path.join(self.manifest_dir, f) for f in files]
-        )
-        return {r.partition_id for r in df.select("partition_id").distinct().collect()}
+
+    def committed_buckets(self) -> set[int]:
+        return {
+            b
+            for f in self._manifest_files()
+            for b in pq.read_table(f, columns=["partition_id"])
+            .column(0).to_pylist()
+        }
 
     def pending_buckets(self) -> list[int]:
         done = self.committed_buckets()
@@ -69,21 +106,12 @@ class ParquetManifest:
         any — a resumed run MUST re-read the same snapshot (north rule:
         resume idempotently from the last committed snapshot), so new
         appends between crash and resume don't leak into this run."""
-        files = [
-            os.path.join(self.manifest_dir, f)
-            for f in os.listdir(self.manifest_dir)
-            if f.endswith(".parquet")
-        ]
-        if not files:
-            return None
-        rows = (
-            self.spark.read.parquet(*files)
-            .where(F.col("snapshot_id").isNotNull())
-            .select("snapshot_id")
-            .limit(1)
-            .collect()
-        )
-        return rows[0]["snapshot_id"] if rows else None
+        for f in self._manifest_files():
+            ids = pq.read_table(f, columns=["snapshot_id"]).column(0)
+            for sid in ids.to_pylist():
+                if sid is not None:
+                    return sid
+        return None
 
     def bucket_stats(self, buckets: list[int]) -> dict[int, dict]:
         """Per-bucket commit metrics (clean count, error count, checksum) in
@@ -107,8 +135,10 @@ class ParquetManifest:
         ]
         if not dirs:
             return {}
-        written = self.spark.read.option("basePath", self.triples_dir).parquet(
-            *dirs
+        written = (
+            self.spark.read.schema(_TRIPLES_TABLE_SCHEMA)
+            .option("basePath", self.triples_dir)
+            .parquet(*dirs)
         )
         rows = (
             written.groupBy("bucket")
@@ -168,18 +198,6 @@ class ParquetManifest:
         metrics["input_rows"] = input_rows
         return self._write_manifest_row(run_id, bucket, metrics, snapshot_id)
 
-    def commit_written_bucket(
-        self,
-        run_id: str,
-        bucket: int,
-        input_rows: int,
-        snapshot_id: Optional[str] = None,
-    ) -> dict:
-        """Single-bucket convenience over :meth:`bucket_stats` +
-        :meth:`commit_bucket` (one metrics job, was three in round 2)."""
-        stats = self.bucket_stats([bucket]).get(bucket)
-        return self.commit_bucket(run_id, bucket, input_rows, stats, snapshot_id)
-
     def _write_manifest_row(
         self, run_id: str, bucket: int, metrics: dict,
         snapshot_id: Optional[str],
@@ -191,22 +209,20 @@ class ParquetManifest:
             "ts": time.time(),
             **metrics,
         }
-        tmp = os.path.join(self.manifest_dir, f"_tmp_bucket_{bucket}")
         final = os.path.join(self.manifest_dir, f"bucket_{bucket}.parquet")
-        self.spark.createDataFrame([row], schema=MANIFEST_SCHEMA).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.replace(os.path.join(tmp, part), final)
+        tmp = final + ".tmp"
+        table = pa.Table.from_pylist([row], schema=MANIFEST_ARROW_SCHEMA)
+        with open(tmp, "wb") as fh:
+            pq.write_table(table, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.replace(tmp, final)  # atomic commit point
         return row
 
     def read_triples(self) -> DataFrame:
-        return self.spark.read.parquet(self.triples_dir)
+        return self.spark.read.schema(_TRIPLES_TABLE_SCHEMA).parquet(
+            self.triples_dir
+        )
 
     def read_manifest(self) -> DataFrame:
-        files = [
-            os.path.join(self.manifest_dir, f)
-            for f in os.listdir(self.manifest_dir)
-            if f.endswith(".parquet")
-        ]
-        return self.spark.read.parquet(*files)
+        return self.spark.read.parquet(*self._manifest_files())

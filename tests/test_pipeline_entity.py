@@ -1,9 +1,17 @@
 """Entity layer + connected components tests (SURVEY.md §7 M3)."""
 
+from collections import Counter
+
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from json_ld_spark.pipeline.cc import connected_components
+from json_ld_spark.pipeline.cc import (
+    _distributed_components,
+    _driver_components,
+    connected_components,
+)
 from json_ld_spark.pipeline.entity import (
     canonicalize,
     detect_mentions,
@@ -35,6 +43,75 @@ def test_connected_components_chain_and_star(spark):
     out = {r.id: r.component for r in connected_components(edges).collect()}
     assert set(out.values()) == {"n00"}
     assert len(out) == 21
+
+
+_CHAIN = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(20)]
+
+
+def _branch_rows(spark, pairs):
+    """(driver rows, distributed rows) of CC over ``pairs``, each branch
+    called directly, as multisets of (id, component)."""
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    driver = _driver_components(spark, edges.collect())
+    dist = _distributed_components(edges, max_iterations=25)
+    return (
+        Counter(tuple(r) for r in driver.collect()),
+        Counter(tuple(r) for r in dist.collect()),
+    )
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [("b", "a"), ("c", "b"), ("e", "d"), ("f", "e"), ("x", "y")],
+        _CHAIN + [("hub", f"s{i}") for i in range(6)],
+        [("a", "b"), ("a", "b"), ("b", "a"), ("c", "d"), ("d", "c")],
+        [("s", "s"), ("a", "b"), ("b", "b")],
+        [],
+        [("a", None), (None, "b"), ("b", "c"), (None, None)],
+        # U+FB01 < U+1F600 in code points and UTF-8 bytes, but not in UTF-16
+        [("\U0001f600y", "\ufb01x"), ("\U0001f601", "\U0001f600y"),
+         ("é", "日本")],
+    ],
+    ids=["basic", "chain_star", "duplicates", "self_loop", "empty",
+         "null_endpoint", "non_ascii"],
+)
+def test_cc_branches_agree(spark, pairs):
+    driver, dist = _branch_rows(spark, pairs)
+    assert driver == dist
+    ids = {v for p in pairs for v in p}
+    assert set(i for i, _ in driver) == ids  # one row per distinct id
+    assert max(driver.values(), default=1) == 1
+
+
+def test_cc_driver_labels(spark):
+    """Spot labels the branch-equality test cannot pin by itself."""
+    edges = spark.createDataFrame(
+        [("s", "s"), ("a", None), ("\U0001f600y", "\ufb01x"),
+         ("\U0001f601", "\U0001f600y")],
+        "src string, dst string",
+    )
+    out = {r.id: r.component for r in connected_components(edges).collect()}
+    assert out["s"] == "s"  # self-loop-only node labels itself
+    assert out["a"] == "a" and out[None] is None
+    members = ("\U0001f600y", "\ufb01x", "\U0001f601")
+    assert {out[k] for k in members} == {"\ufb01x"}
+
+
+_NODE = st.sampled_from(["a", "b", "c", "d", "e", "é", "日", "\U0001f600", None])
+
+
+@settings(max_examples=8, deadline=None)
+@given(pairs=st.lists(st.tuples(_NODE, _NODE), max_size=12))
+def test_cc_branches_agree_random(spark, pairs):
+    driver, dist = _branch_rows(spark, pairs)
+    assert driver == dist
+
+
+def test_cc_distributed_raises_without_convergence(spark):
+    edges = spark.createDataFrame(_CHAIN, "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        _distributed_components(edges, max_iterations=1)
 
 
 @pytest.fixture(scope="module")

@@ -1,11 +1,22 @@
 """Resume/idempotence + skew tests (FIXTURES.md §5.2-5.3, SURVEY.md §7 M2)."""
 
+import os
+import uuid
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from json_ld_spark.operators.skew import repartition_salted, salted_count
+from json_ld_spark.pipeline import manifest as manifest_mod
+from json_ld_spark.pipeline.cc import connected_components
 from json_ld_spark.pipeline.job import run_extraction_job
-from json_ld_spark.pipeline.manifest import ParquetManifest
+from json_ld_spark.pipeline.manifest import (
+    MANIFEST_ARROW_SCHEMA,
+    MANIFEST_SCHEMA,
+    ParquetManifest,
+)
 from json_ld_spark.pipeline.transcripts import synth_transcripts
 
 
@@ -84,6 +95,84 @@ def test_manifest_metrics(spark, sf_dir, tmp_path):
         F.col("error_code").isNull()
     ).count()
     assert all(r.checksum is not None for r in rows)
+
+
+def test_manifest_schema_matches_ddl(spark, tmp_path):
+    m = ParquetManifest(spark, str(tmp_path / "w"), 2)
+    m.commit_bucket("r", 0, 5, None, snapshot_id="7")
+    m.commit_bucket("r", 1, 0, {"triples_out": 3, "errors": 1, "checksum": "9"})
+    assert m.read_manifest().schema == StructType.fromDDL(MANIFEST_SCHEMA)
+    assert m.pending_buckets() == []
+    assert m.pinned_snapshot() == "7"
+    rows = {r.partition_id: r for r in m.read_manifest().collect()}
+    assert (rows[0].input_rows, rows[0].triples_out, rows[0].checksum) == (
+        5, 0, "0"
+    )
+    assert (rows[1].triples_out, rows[1].errors, rows[1].snapshot_id) == (
+        3, 1, None
+    )
+
+
+def test_uncommitted_manifest_leftovers_stay_pending(spark, tmp_path):
+    """A crash between the tmp-file write and the rename leaves
+    ``bucket_<b>.parquet.tmp`` behind; a crash inside the older Spark-based
+    commit left a ``_tmp_bucket_<b>/`` directory. Neither commits."""
+    m = ParquetManifest(spark, str(tmp_path / "w"), 3)
+    m.commit_bucket("r", 0, 1, None)
+
+    def crash(src, dst):
+        raise OSError("crash before rename")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(manifest_mod.os, "replace", crash)
+        with pytest.raises(OSError, match="crash before rename"):
+            m.commit_bucket("r", 1, 1, None, snapshot_id="9")
+    assert os.path.exists(
+        os.path.join(m.manifest_dir, "bucket_1.parquet.tmp")
+    )
+    legacy = os.path.join(m.manifest_dir, "_tmp_bucket_2")
+    os.makedirs(legacy)
+    pq.write_table(
+        MANIFEST_ARROW_SCHEMA.empty_table(),
+        os.path.join(legacy, "part-00000.parquet"),
+    )
+    assert m.committed_buckets() == {0}
+    assert m.pending_buckets() == [1, 2]
+    assert m.pinned_snapshot() is None
+    # the retried commit replaces the leftover tmp file
+    m.commit_bucket("r", 1, 1, None)
+    assert m.pending_buckets() == [2]
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted through a fresh job group."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_and_small_cc_job_counts(spark, tmp_path):
+    m = ParquetManifest(spark, str(tmp_path / "w"), 4)
+    assert _jobs_launched(
+        spark, lambda: [m.commit_bucket("r", b, 1, None) for b in range(4)]
+    ) == 0
+    # a shuffled (not local-relation) edge plan, like same_as_edges
+    edges = spark.range(12).select(
+        F.format_string("n%02d", F.col("id")).alias("src"),
+        F.format_string("n%02d", F.col("id") - F.col("id") % 3).alias("dst"),
+    ).distinct()
+    out = []
+    # ≥ 1: the edge plan itself needs a job, so the counter is live
+    assert 1 <= _jobs_launched(
+        spark, lambda: out.extend(connected_components(edges).collect())
+    ) <= 3
+    assert len(out) == 12
+    assert {r.component for r in out} == {"n00", "n03", "n06", "n09"}
 
 
 def test_hot_conv_skew_fixture(spark, sf_dir):
