@@ -781,9 +781,9 @@ def _kg_nodes_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental entity layer end-to-end (pipeline/job.py
     run_incremental_snapshot_pipeline): the corpus splits into two
     snapshot appends (conv-hash halves), the second half goes through
-    incremental_canonicalize — CC re-runs ONLY for blocks a new entity
-    touches, edge groups re-aggregate ONLY where an endpoint's canon
-    changed — and the final nodes table must equal the from-scratch
+    incremental_canonicalize — canon ids are recomputed ONLY for blocks a
+    new entity touches, edge groups re-aggregate ONLY where an endpoint's
+    canon changed — and the final nodes table must equal the from-scratch
     union-find golden (the SAME oracle kg_nodes uses): the driver-visible
     proof that the O(delta + affected blocks) append path is exact.
 

@@ -1,6 +1,13 @@
 """Connected components over an edge list — driver union-find for small
 graphs, large-star / small-star for the rest.
 
+Callers: ``operators/training.neardup_clusters`` (transitive near-duplicate
+clusters over LSH candidate pairs), the perfbench layer probe and the
+tests, where it is the reference the entity layer's closed form is checked
+against. The KG build does not call it: ``same_as_edges`` only draws
+stars inside one block, so ``entity.block_canon`` computes the same labels
+with one window over the block key.
+
 Both branches label every node with the lexicographically-smallest member
 of its component (the W2 canonical tie-break of SURVEY.md §2), so no global
 id-assignment step is needed, and both return the same ``(id, component)``
@@ -13,12 +20,11 @@ first collects at most ``_LOCAL_MAX_EDGES + 1`` edges:
 - **Driver branch** (the graph fits): union-find on the collected edges,
   then one DataFrame over an Arrow table. A distributed round costs a
   handful of Spark jobs whatever the graph size, and the loop below needs
-  O(log^2 n) rounds plus a convergence check, so on the ~10-edge same-as
-  graphs of a typical build it costs ~24 jobs (about half of all jobs in a
-  build) for work the driver does in microseconds. This is the small-side
-  argument of Blanas et al., "A Comparison of Join Algorithms for Log
-  Processing in MapReduce" (SIGMOD'10): when one side is small, process it
-  on one node.
+  O(log^2 n) rounds plus a convergence check, so on a ~10-edge graph it
+  costs ~24 jobs for work the driver does in microseconds. This is the
+  small-side argument of Blanas et al., "A Comparison of Join Algorithms
+  for Log Processing in MapReduce" (SIGMOD'10): when one side is small,
+  process it on one node.
   Python ``str`` ordering is code-point order, which equals the UTF-8 byte
   order Spark's string ``min`` uses, so the labels are identical.
 - **Distributed branch** (larger graphs): the alternating

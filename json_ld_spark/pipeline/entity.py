@@ -12,9 +12,17 @@ Design for 10^12 turns:
   magnitude smaller than mentions, so Spark broadcasts it (AQE also rescues
   misestimates). Hot blocks (hub entities) are bounded by a per-block
   candidate cap.
-- same-as edges → connected components (cc.py: driver union-find for small
-  graphs, large-star/small-star otherwise) → canonical ids applied to
-  triples with two equi-joins (subject side, object side).
+- J2 needs no connected-components run. ``same_as_edges`` links every
+  member of a block of 2..``_MAX_BLOCK`` IRIs to the block's minimum IRI
+  and adds no other edge, so every component is one block: a star around
+  the block minimum, or (blocks of one, or past the cap) a singleton.
+  ``block_canon`` computes exactly those labels in closed form with one
+  window over ``block_key``; tests/test_pipeline_entity.py checks it
+  against ``cc.connected_components(same_as_edges(...))``.
+- J3 applies the canonical ids to triples with two equi-joins (subject
+  side, object side). ``derive_nodes`` and ``rewrite_edges`` are the one
+  derivation of nodes and edges, shared by the full build
+  (``canonicalize``) and the snapshot append (``incremental_canonicalize``).
 """
 
 from __future__ import annotations
@@ -23,13 +31,42 @@ import re
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    IntegerType, StringType, StructField, StructType,
+    IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from .cc import connected_components
+# Largest block ``same_as_edges`` links by default, and the cap
+# ``block_canon`` applies: the closed form equals the CC labels only while
+# the two agree.
+_MAX_BLOCK = 64
+
+# The entity-layer tables, as the snapshot state stores them next to the
+# triples (TRIPLE_SCHEMA). Every field is nullable: a parquet read with an
+# explicit schema reports it that way.
+ENTITY_SCHEMA = StructType([
+    StructField("entity_iri", StringType()),
+    StructField("block_key", StringType()),
+])
+CANON_SCHEMA = StructType([
+    StructField("iri", StringType()),
+    StructField("canon_id", StringType()),
+])
+NODE_SCHEMA = StructType([
+    StructField("canon_id", StringType()),
+    StructField("iri", StringType()),
+    StructField("kind", StringType()),
+    StructField("n_aliases", LongType()),
+])
+EDGE_SCHEMA = StructType([
+    StructField("src_canon", StringType()),
+    StructField("pred", StringType()),
+    StructField("dst_canon", StringType()),
+    StructField("provenance", LongType()),
+])
+
+_RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 
 MENTION_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -133,17 +170,22 @@ def link_mentions(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     )
 
 
-def same_as_edges(entities: DataFrame, max_block: int = 64) -> DataFrame:
+def same_as_edges(
+    entities: DataFrame, max_block: int = _MAX_BLOCK
+) -> DataFrame:
     """Same-entity edges: IRIs sharing a blocking key are duplicates of one
     canonical entity (fixture semantics: ctx/base emits
     ``http://ex.org/d/person-N`` for the same entity as
     ``http://ex.org/person-N``).
 
     Instead of an O(k²) pairwise self-join per block, each block links all
-    members to the block's lexicographic minimum — a star, which is exactly
-    what connected components needs, computed with one groupBy + one join.
-    ``max_block`` guards against degenerate giant blocks (a block bigger
-    than the cap is almost certainly a bad key, not one entity).
+    members to the block's lexicographic minimum — a star, computed with
+    one groupBy + one join. ``max_block`` guards against degenerate giant
+    blocks (a block bigger than the cap is almost certainly a bad key, not
+    one entity).
+
+    This is the edge-list form of the same-as rule; the build uses its
+    closed-form components, ``block_canon``.
     """
     sized = entities.groupBy("block_key").agg(
         F.min("entity_iri").alias("canon_candidate"),
@@ -156,6 +198,75 @@ def same_as_edges(entities: DataFrame, max_block: int = 64) -> DataFrame:
             F.col("entity_iri").alias("src"),
             F.col("canon_candidate").alias("dst"),
         )
+    )
+
+
+def block_canon(entities: DataFrame) -> DataFrame:
+    """J2 in closed form: ``entities`` plus ``canon_id``, the component
+    label ``cc.connected_components(same_as_edges(entities))`` gives each
+    entity, with entities outside every edge labelled by themselves.
+
+    ``same_as_edges`` joins a block to itself only when it has
+    ``1 < k <= _MAX_BLOCK`` members, and then links each member to the
+    block minimum and nothing else, so the components are the blocks:
+    ``canon_id`` is the block's minimum IRI for such a block and the IRI
+    itself otherwise — including a null ``block_key``, which the
+    equi-join never matches. One window over ``block_key``; Spark's string
+    ``min`` is the UTF-8 byte order the CC labels use.
+    """
+    block = Window.partitionBy("block_key")
+    k = F.count(F.lit(1)).over(block)
+    return entities.withColumn(
+        "canon_id",
+        F.when(
+            F.col("block_key").isNotNull() & (k > 1) & (k <= _MAX_BLOCK),
+            F.min("entity_iri").over(block),
+        ).otherwise(F.col("entity_iri")),
+    )
+
+
+def derive_nodes(canon: DataFrame) -> DataFrame:
+    """nodes(canon_id, iri, kind, n_aliases) from canon(iri, canon_id): one
+    row per canonical entity with its alias count and smallest alias.
+
+    ``kind`` is a substring test on ``canon_id``. It has a known defect —
+    ``"org"`` also matches the ``http://ex.org/`` domain — which
+    tools/make_golden.py mirrors, so it stays as it is until ``kind`` gets
+    an independent derivation."""
+    return (
+        canon.groupBy("canon_id")
+        .agg(F.count("*").alias("n_aliases"), F.min("iri").alias("iri"))
+        .withColumn(
+            "kind",
+            F.when(F.col("canon_id").contains("person"), "person")
+            .when(F.col("canon_id").contains("event"), "event")
+            .when(F.col("canon_id").contains("org"), "org")
+            .otherwise("other"),
+        )
+        .select("canon_id", "iri", "kind", "n_aliases")
+    )
+
+
+def rewrite_edges(triples: DataFrame, canon: DataFrame) -> DataFrame:
+    """J3 — edges(src_canon, pred, dst_canon, provenance): the clean
+    IRI-object triples with subject and object rewritten to canonical ids
+    by two equi-joins against canon(iri, canon_id), ``rdf:`` predicates
+    dropped, and ``provenance`` the number of triples per edge."""
+    subj_map = canon.select(
+        F.col("iri").alias("subj"), F.col("canon_id").alias("src_canon")
+    )
+    obj_map = canon.select(
+        F.col("iri").alias("obj_value"), F.col("canon_id").alias("dst_canon")
+    )
+    return (
+        triples.where(
+            F.col("error_code").isNull() & (F.col("obj_kind") == "iri")
+        )
+        .join(subj_map, "subj", "inner")
+        .join(obj_map, "obj_value", "inner")
+        .where(~F.col("pred").startswith(_RDF_NS))
+        .groupBy("src_canon", "pred", "dst_canon")
+        .agg(F.count("*").alias("provenance"))
     )
 
 
@@ -178,52 +289,19 @@ def canonicalize(
     clean = triples.where(F.col("error_code").isNull())
     if materialize:
         clean = clean.localCheckpoint()
-    entities = entity_dictionary(clean).localCheckpoint()
-    edges0 = same_as_edges(entities)
-    canon_map = connected_components(edges0)
-    # entities without any same-as edge are their own canon
+    # read three times: the nodes aggregation and both rewrite joins
     canon_full = (
-        entities.join(canon_map, entities.entity_iri == canon_map.id, "left")
-        .select(
-            F.col("entity_iri").alias("iri"),
-            F.coalesce("component", "entity_iri").alias("canon_id"),
-        )
+        block_canon(entity_dictionary(clean))
+        .select(F.col("entity_iri").alias("iri"), "canon_id")
+        .localCheckpoint()
     )
-    nodes = (
-        canon_full.groupBy("canon_id")
-        .agg(
-            F.count("*").alias("n_aliases"),
-            F.min("iri").alias("iri"),
-        )
-        .withColumn(
-            "kind",
-            F.when(F.col("canon_id").contains("person"), "person")
-            .when(F.col("canon_id").contains("event"), "event")
-            .when(F.col("canon_id").contains("org"), "org")
-            .otherwise("other"),
-        )
-        .select("canon_id", "iri", "kind", "n_aliases")
+    return (
+        canon_full.select(
+            F.col("iri").alias("id"), F.col("canon_id").alias("component")
+        ),
+        derive_nodes(canon_full),
+        rewrite_edges(clean, canon_full),
     )
-    # J3 — two equi-joins rewrite subj and obj to canonical ids
-    subj_map = canon_full.select(
-        F.col("iri").alias("subj"), F.col("canon_id").alias("src_canon")
-    )
-    obj_map = canon_full.select(
-        F.col("iri").alias("obj_value"), F.col("canon_id").alias("dst_canon")
-    )
-    rewritten = (
-        clean.where(F.col("obj_kind") == "iri")
-        .join(subj_map, "subj", "inner")
-        .join(obj_map, "obj_value", "inner")
-        .where(~F.col("pred").startswith("http://www.w3.org/1999/02/22-rdf-syntax-ns#"))
-    )
-    edges = (
-        rewritten.groupBy("src_canon", "pred", "dst_canon")
-        .agg(F.count("*").alias("provenance"))
-    )
-    return canon_full.select(
-        F.col("iri").alias("id"), F.col("canon_id").alias("component")
-    ), nodes, edges
 
 
 def incremental_canonicalize(
@@ -235,117 +313,105 @@ def incremental_canonicalize(
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Incremental entity layer for snapshot appends: canonicalize ONLY the
     blocks a genuinely-new entity touches and rewrite ONLY the triples an
-    affected canon touches, instead of re-running CC + the two rewrite
-    joins over the whole corpus (``canonicalize``).
+    affected canon touches, instead of re-labelling every entity and
+    re-running the two rewrite joins over the whole corpus
+    (``canonicalize``).
 
     Why this is exact (not an approximation): ``block_key`` is a pure
-    function of the entity IRI and ``same_as_edges`` only links entities
-    within one block, so connected components NEVER span blocks —
-    components of untouched blocks are untouched, bit-for-bit. Edge
-    groups whose endpoints' canon ids did not change keep their previous
-    counts; every triple with a changed-canon endpoint, plus every new
-    triple, re-aggregates. Equality with the full recompute is pinned by
-    tests/test_pipeline_entity.py.
+    function of the entity IRI and the components are the blocks
+    (``block_canon``), so the canons of untouched blocks are untouched,
+    bit-for-bit. Edge groups whose endpoints' canon ids did not change
+    keep their previous counts; every triple touching a recomputed entity,
+    plus every new triple, re-aggregates. Equality with the full recompute
+    is pinned by tests/test_pipeline_entity.py.
+
+    One delta-bounded frame drives the rest. ``aff`` holds every entity of
+    an affected block (the blocks of the genuinely-new entities) with its
+    new canon, its previous canon (``prev_canon`` semi-joined to the
+    broadcast ``affected_keys``; null for a new entity) and a per-block
+    ``moved`` flag: some previous member's canon changed. A moved block
+    recomputes the triples of ALL its previous members and marks ALL their
+    previous canons stale — ``changed_iris`` and ``stale_canons`` are two
+    filters of ``aff``. The rule is needed for the dissolution case: an
+    append pushing a block past ``_MAX_BLOCK`` makes every member its own
+    canon, the old representative keeps its canon id verbatim, yet all
+    its edge groups are stale, so its triples (and triples pointing at
+    it) must re-aggregate
+    (tests/test_pipeline_entity.py::test_incremental_block_cap_dissolution).
+    It equals the closure "every previous member of a component with a
+    changed member", because a block's previous components are either one
+    star (all share the block minimum's canon) or all singletons; and a
+    block of singletons with more than one member is past the cap, stays
+    past it, and never moves.
 
     At 10^12 turns this is the difference between an append costing
-    O(delta + affected blocks) and re-running the CC loop over 10^9
-    entities: the only full-corpus touches left are two semi-join-filtered
-    scans of the OLD triples (subj/obj membership in the changed-entity
-    set).
+    O(delta + affected blocks) and re-labelling 10^9 entities: the only
+    full-corpus touches left are two semi-join-filtered scans of the OLD
+    triples (subj/obj membership in the changed-entity set) and the
+    entity-scale canon table.
 
     Join-strategy note: ``affected_keys`` (distinct block keys of the
     delta) is bounded by the delta and safely broadcast-hinted. The
     ``stale_canons`` / ``changed_iris`` sets are NOT hinted — they scale
     with the append (a large backfill or a block-dissolution cascade makes
     them O(new entities)), so a forced broadcast would collect-and-replicate
-    an unbounded set on the driver. Both are localCheckpointed, so AQE sees
-    their true materialized size and picks broadcast-hash when they are
-    actually small, degrading to a shuffled semi-/anti-join when they are
-    not (tests/test_pipeline_entity.py::test_incremental_no_forced_broadcast
+    an unbounded set on the driver. Both are filters of the
+    localCheckpointed ``aff``, so AQE sees their true materialized size and
+    picks broadcast-hash when they are actually small, degrading to a
+    shuffled semi-/anti-join when they are not
+    (tests/test_pipeline_entity.py::test_incremental_no_forced_broadcast
     pins that a disabled broadcast threshold yields a broadcast-free plan
     with unchanged results).
 
     Returns ``(entities, canon_full, nodes, edges)`` where ``canon_full``
     is (iri, canon_id) for every known entity.
     """
-    clean_new = new_triples.where(F.col("error_code").isNull())
-    new_ents = entity_dictionary(clean_new)
-    genuinely_new = new_ents.join(
-        prev_entities.select("entity_iri"), "entity_iri", "left_anti"
+    genuinely_new = (
+        entity_dictionary(new_triples.where(F.col("error_code").isNull()))
+        .join(prev_entities.select("entity_iri"), "entity_iri", "left_anti")
+        .localCheckpoint()
     )
-    entities = prev_entities.unionByName(genuinely_new).localCheckpoint()
-    affected_keys = genuinely_new.select("block_key").distinct()
+    entities = prev_entities.unionByName(genuinely_new)
+    affected_keys = F.broadcast(genuinely_new.select("block_key").distinct())
+
+    prev_aff = prev_canon.select(
+        F.col("iri").alias("entity_iri"),
+        entity_local_name(F.col("iri")).alias("block_key"),
+        F.col("canon_id").alias("prev_canon_id"),
+    ).join(affected_keys, "block_key", "left_semi")
+    members = prev_aff.unionByName(
+        genuinely_new.withColumn("prev_canon_id", F.lit(None).cast("string"))
+    )
+    moved = F.max(F.col("prev_canon_id") != F.col("canon_id")).over(
+        Window.partitionBy("block_key")
+    )
+    aff = (
+        block_canon(members)
+        .select(
+            F.col("entity_iri").alias("iri"), "canon_id", "prev_canon_id",
+            F.coalesce(moved, F.lit(False)).alias("moved"),
+        )
+        .localCheckpoint()
+    )
 
     # canon: recompute affected blocks, reuse the rest verbatim
-    affected_entities = entities.join(
-        F.broadcast(affected_keys), "block_key", "left_semi"
-    )
-    comp = connected_components(same_as_edges(affected_entities))
-    canon_aff = (
-        affected_entities.join(
-            comp, affected_entities.entity_iri == comp.id, "left"
-        )
-        .select(
-            F.col("entity_iri").alias("iri"),
-            F.coalesce("component", "entity_iri").alias("canon_id"),
-        )
-    )
     canon_keep = prev_canon.join(
-        F.broadcast(affected_keys),
+        affected_keys,
         entity_local_name(F.col("iri")) == F.col("block_key"),
         "left_anti",
     )
-    canon_full = canon_keep.unionByName(canon_aff).localCheckpoint()
+    canon_full = canon_keep.unionByName(
+        aff.select("iri", "canon_id")
+    ).localCheckpoint()
 
-    # nodes: re-aggregate over the (entity-scale, triples-free) canon table
-    nodes = (
-        canon_full.groupBy("canon_id")
-        .agg(F.count("*").alias("n_aliases"), F.min("iri").alias("iri"))
-        .withColumn(
-            "kind",
-            F.when(F.col("canon_id").contains("person"), "person")
-            .when(F.col("canon_id").contains("event"), "event")
-            .when(F.col("canon_id").contains("org"), "org")
-            .otherwise("other"),
-        )
-        .select("canon_id", "iri", "kind", "n_aliases")
-    )
-
-    # edges: keep groups with both endpoints' canon unchanged; re-aggregate
-    # every old triple touching a changed entity plus every new triple
-    changed = canon_aff.join(
-        prev_canon.withColumnRenamed("canon_id", "prev_canon_id"),
-        "iri",
-        "left",
-    ).where(
-        F.col("prev_canon_id").isNull()
-        | (F.col("prev_canon_id") != F.col("canon_id"))
-    )
+    # edges: keep groups with no stale endpoint; re-aggregate every old
+    # triple touching a moved block plus every new triple
+    changed_iris = aff.where("moved").select("iri")
     stale_canons = (
-        prev_canon.join(changed.select("iri"), "iri", "left_semi")
-        .select("canon_id")
+        aff.where("moved")
+        .select(F.col("prev_canon_id").alias("canon_id"))
+        .where(F.col("canon_id").isNotNull())
         .distinct()
-        .localCheckpoint()
-    )
-    # CLOSURE over stale components: if any member of a previous component
-    # changed canon, EVERY previous member's triples must re-aggregate —
-    # including members whose own canon did not move. The dissolution case
-    # makes this load-bearing: an append pushing a block past
-    # same_as_edges(max_block) dissolves the component (no star edges →
-    # every member becomes its own canon), the old representative keeps its
-    # canon id verbatim, yet all its edge groups are dropped as stale
-    # (stale_canons contains the old representative's id) — without the
-    # closure its triples would never be re-aggregated and those edges
-    # would silently vanish vs the full recompute
-    # (tests/test_pipeline_entity.py::test_incremental_block_cap_dissolution).
-    changed_iris = (
-        changed.select("iri")
-        .unionByName(
-            prev_canon.join(stale_canons, "canon_id", "left_semi")
-            .select("iri")
-        )
-        .distinct()
-        .localCheckpoint()
     )
     keep_edges = prev_edges.join(
         stale_canons.withColumnRenamed("canon_id", "src_canon"),
@@ -375,28 +441,11 @@ def incremental_canonicalize(
         )
     )
     recompute = touched_old.unionByName(
-        clean_new.where(F.col("obj_kind") == "iri").select(*touched_old.columns)
-    )
-    subj_map = canon_full.select(
-        F.col("iri").alias("subj"), F.col("canon_id").alias("src_canon")
-    )
-    obj_map = canon_full.select(
-        F.col("iri").alias("obj_value"), F.col("canon_id").alias("dst_canon")
-    )
-    redone = (
-        recompute.join(subj_map, "subj", "inner")
-        .join(obj_map, "obj_value", "inner")
-        .where(
-            ~F.col("pred").startswith(
-                "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-            )
-        )
-        .groupBy("src_canon", "pred", "dst_canon")
-        .agg(F.count("*").alias("provenance"))
+        new_triples.select(*touched_old.columns)
     )
     edges = (
-        keep_edges.unionByName(redone)
+        keep_edges.unionByName(rewrite_edges(recompute, canon_full))
         .groupBy("src_canon", "pred", "dst_canon")
         .agg(F.sum("provenance").alias("provenance"))
     )
-    return entities, canon_full, nodes, edges
+    return entities, canon_full, derive_nodes(canon_full), edges

@@ -2,7 +2,7 @@
 
     transcripts → [resume filter] → turn dedup → mapInPandas kernel
     → single partitioned write → per-bucket manifest commit
-    → entity linking → CC → nodes/edges
+    → entity linking → block canonicalization → nodes/edges
 
 Run via ``spark-submit --py-files`` (see bench.py / scripts). The job is
 idempotent: killed after bucket k's manifest commit, a re-run processes only
@@ -33,6 +33,9 @@ that is the difference between 1 pass and 32):
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 import uuid
 from dataclasses import dataclass
 from typing import Optional
@@ -41,8 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..contexts import ContextDict
-from .entity import canonicalize
-from .extract import extract_triples
+from .entity import (
+    CANON_SCHEMA, EDGE_SCHEMA, ENTITY_SCHEMA, NODE_SCHEMA,
+    canonicalize, entity_local_name, incremental_canonicalize,
+)
+from .extract import TRIPLE_SCHEMA, extract_triples
 from .manifest import ParquetManifest, bucket_of
 from .transcripts import synth_transcripts
 
@@ -200,6 +206,42 @@ def run_snapshot_pipeline(
     )
 
 
+# The snapshot state of run_incremental_snapshot_pipeline: one parquet
+# table per name under warehouse/entity_state/v<N>/, with its schema.
+STATE_SCHEMAS = {
+    "triples": TRIPLE_SCHEMA, "entities": ENTITY_SCHEMA,
+    "canon": CANON_SCHEMA, "nodes": NODE_SCHEMA, "edges": EDGE_SCHEMA,
+}
+
+
+def _state_meta(state_dir: str) -> Optional[dict]:
+    """The committed state pointer (``snapshot_id``, ``version``), or None
+    before the first commit."""
+    path = os.path.join(state_dir, "state.json")
+    if not os.path.exists(path):
+        return None
+    with open(path) as fh:
+        return json.load(fh)
+
+
+def read_entity_state(
+    spark: SparkSession, warehouse: str
+) -> Optional[dict[str, DataFrame]]:
+    """The committed snapshot state under ``warehouse``: one lazy frame per
+    ``STATE_SCHEMAS`` table, or None before the first commit. Each table is
+    read with its explicit schema, so this launches no Spark job (a parquet
+    read without one runs a schema-inference job)."""
+    state_dir = os.path.join(warehouse, "entity_state")
+    meta = _state_meta(state_dir)
+    if meta is None:
+        return None
+    v = os.path.join(state_dir, f"v{meta['version']}")
+    return {
+        name: spark.read.schema(schema).parquet(os.path.join(v, name))
+        for name, schema in STATE_SCHEMAS.items()
+    }
+
+
 def run_incremental_snapshot_pipeline(
     spark: SparkSession,
     store,
@@ -209,44 +251,29 @@ def run_incremental_snapshot_pipeline(
 ) -> JobResult:
     """Append-incremental entity layer over a SnapshotStore: the first run
     bootstraps (full extraction + canonicalization); each later run
-    extracts ONLY the snapshot delta (``store.read_delta``), re-runs CC
-    only for blocks a new entity touches and re-aggregates only the edge
+    extracts ONLY the snapshot delta (``store.read_delta``), re-labels
+    only the blocks a new entity touches and re-aggregates only the edge
     groups a changed canon touches (``entity.incremental_canonicalize``).
-    State (triples/entities/canon/edges parquet + the last processed
-    snapshot id) lives under ``warehouse/entity_state`` with the same
-    write-tmp-then-rename commit the manifest uses.
+    State (the ``STATE_SCHEMAS`` tables + the last processed snapshot id)
+    lives under ``warehouse/entity_state`` with the same
+    write-tmp-then-rename commit the manifest uses; ``read_entity_state``
+    reads it back without a Spark job.
 
-    At 10^12 turns this turns a snapshot append from "re-run the CC loop
-    over every entity and two rewrite joins over every triple" into
-    O(delta + affected blocks) — the only full-corpus work left is the
-    semi-join-filtered old-triple scan for changed canons.
+    At 10^12 turns this turns a snapshot append from "re-label every entity
+    and run two rewrite joins over every triple" into O(delta + affected
+    blocks) — the only full-corpus work left is the semi-join-filtered
+    old-triple scan for changed canons and the state rewrite.
     """
-    import json as _json
-    import os
-
-    from .entity import canonicalize, entity_dictionary, incremental_canonicalize
-
     state_dir = os.path.join(warehouse, "entity_state")
     os.makedirs(state_dir, exist_ok=True)
     meta_path = os.path.join(state_dir, "state.json")
     current = store.current_snapshot_id()
     if current is None:
         raise ValueError("snapshot store is empty")
-
-    def _meta() -> Optional[dict]:
-        if not os.path.exists(meta_path):
-            return None
-        with open(meta_path) as fh:
-            return _json.load(fh)
-
-    meta = _meta()
+    meta = _state_meta(state_dir)
     cur_version = meta["version"] if meta else 0
 
-    def _p(name: str, version: Optional[int] = None) -> str:
-        v = cur_version if version is None else version
-        return os.path.join(state_dir, f"v{v}", name)
-
-    def _commit_state(triples, entities, canon, nodes, edges, snapshot_id):
+    def _commit_state(tables: dict, snapshot_id) -> None:
         # crash-atomic versioned commit: the ENTIRE new state lands under a
         # fresh v<N+1> directory while the previous version stays intact
         # (the new DataFrames are lazy plans READING the old state), then
@@ -257,19 +284,14 @@ def run_incremental_snapshot_pipeline(
         # (no duplicated triples / double-counted provenance, unlike a
         # dir-by-dir rename sequence). Old versions are pruned only after
         # the swap, best-effort.
-        import shutil
-
         new_version = cur_version + 1
-        for name, df in (
-            ("triples", triples), ("entities", entities), ("canon", canon),
-            ("nodes", nodes), ("edges", edges),
-        ):
-            df.write.mode("overwrite").parquet(_p(name, new_version))
+        for name in STATE_SCHEMAS:
+            tables[name].write.mode("overwrite").parquet(
+                os.path.join(state_dir, f"v{new_version}", name)
+            )
         tmp_meta = meta_path + ".tmp"
         with open(tmp_meta, "w") as fh:
-            _json.dump(
-                {"snapshot_id": snapshot_id, "version": new_version}, fh
-            )
+            json.dump({"snapshot_id": snapshot_id, "version": new_version}, fh)
         if fail_before_state_swap:
             # fault injection for the crash-window test: the full new state
             # is on disk but the pointer never flips — the old version must
@@ -279,14 +301,20 @@ def run_incremental_snapshot_pipeline(
         for entry in os.listdir(state_dir):
             if entry.startswith("v") and entry != f"v{new_version}":
                 shutil.rmtree(os.path.join(state_dir, entry), ignore_errors=True)
-        return new_version
 
     run_id = uuid.uuid4().hex[:12]
+
+    def _result(processed: int) -> JobResult:
+        state = read_entity_state(spark, warehouse)
+        return JobResult(
+            run_id, processed, state["triples"], state["nodes"], state["edges"]
+        )
+
     if meta is None:
         # bootstrap: full pipeline over the current snapshot. The kernel
         # pass is the job's most expensive stage — checkpoint it once so
-        # canonicalize / entity_dictionary / the state write don't each
-        # re-run extraction from scratch.
+        # canonicalize and the state write don't each re-run extraction
+        # from scratch.
         triples = extract_triples(
             store.read(current), contexts, dedup_turns=True
         ).localCheckpoint()
@@ -294,37 +322,34 @@ def run_incremental_snapshot_pipeline(
         canon = canon_map.select(
             F.col("id").alias("iri"), F.col("component").alias("canon_id")
         )
-        entities = entity_dictionary(
-            triples.where(F.col("error_code").isNull())
+        # one canon row per entity: the dictionary is its IRI column
+        entities = canon.select(
+            F.col("iri").alias("entity_iri"),
+            entity_local_name(F.col("iri")).alias("block_key"),
         )
-        v = _commit_state(triples, entities, canon, nodes, edges, current)
-        return JobResult(
-            run_id, 1, spark.read.parquet(_p("triples", v)),
-            spark.read.parquet(_p("nodes", v)),
-            spark.read.parquet(_p("edges", v)),
+        _commit_state(
+            {"triples": triples, "entities": entities, "canon": canon,
+             "nodes": nodes, "edges": edges},
+            current,
         )
+        return _result(1)
 
     last = meta["snapshot_id"]
     if current == last:
-        return JobResult(
-            run_id, 0, spark.read.parquet(_p("triples")),
-            spark.read.parquet(_p("nodes")), spark.read.parquet(_p("edges")),
-        )
+        return _result(0)
 
-    old_triples = spark.read.parquet(_p("triples"))
+    prev = read_entity_state(spark, warehouse)
     new_triples = extract_triples(
         store.read_delta(last, current), contexts, dedup_turns=True
     ).localCheckpoint()
     entities, canon, nodes, edges = incremental_canonicalize(
-        old_triples,
-        new_triples,
-        spark.read.parquet(_p("entities")),
-        spark.read.parquet(_p("canon")),
-        spark.read.parquet(_p("edges")),
+        prev["triples"], new_triples,
+        prev["entities"], prev["canon"], prev["edges"],
     )
-    all_triples = old_triples.unionByName(new_triples)
-    v = _commit_state(all_triples, entities, canon, nodes, edges, current)
-    return JobResult(
-        run_id, 1, spark.read.parquet(_p("triples", v)),
-        spark.read.parquet(_p("nodes", v)), spark.read.parquet(_p("edges", v)),
+    _commit_state(
+        {"triples": prev["triples"].unionByName(new_triples),
+         "entities": entities, "canon": canon, "nodes": nodes,
+         "edges": edges},
+        current,
     )
+    return _result(1)

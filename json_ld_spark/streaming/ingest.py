@@ -15,10 +15,10 @@ Design notes, 100 TB shape:
   the batch job's global dropDuplicates is unbounded-state in streaming and
   deliberately avoided (`withWatermark` + within-watermark dedup is the
   canonical Spark pattern for exactly-this).
-- Entity linking / connected components stay batch: they are iterative
-  whole-graph algorithms; the streaming layer lands raw triples and the
-  batch canonicalization job periodically folds them in (classic
-  lambda-free "streaming ingest + periodic batch consolidation").
+- Entity linking / canonicalization stay batch: a block's canonical id
+  depends on every member of the block; the streaming layer lands raw
+  triples and the batch canonicalization job periodically folds them in
+  (classic lambda-free "streaming ingest + periodic batch consolidation").
 
 Reference tie-in: the kernel applied per micro-batch is the same A1-A33
 surface (see json_ld_spark/kernel/*, citing /root/reference/src/*.rs);

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -24,3 +25,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(fn)``: the Spark jobs ``fn`` launches, counted
+    through a fresh job group. Jobs started from other threads do not
+    inherit the group and are not counted."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobcount-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job count")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

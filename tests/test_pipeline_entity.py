@@ -13,9 +13,11 @@ from json_ld_spark.pipeline.cc import (
     connected_components,
 )
 from json_ld_spark.pipeline.entity import (
+    block_canon,
     canonicalize,
     detect_mentions,
     entity_dictionary,
+    entity_local_name,
     link_mentions,
     same_as_edges,
 )
@@ -156,6 +158,104 @@ def test_same_as_and_canonicalize(spark, triples):
         assert r.dst_canon in canon_ids
         assert r.provenance >= 1
     assert any(r.pred == "http://schema.org/knows" for r in erows)
+
+
+def _block_canon_and_reference(entities):
+    """(block_canon labels, reference labels) as multisets of
+    (entity_iri, canon_id). The reference is the connected-components
+    path: CC over ``same_as_edges``, entities outside every edge labelled
+    by themselves."""
+    got = block_canon(entities).select("entity_iri", "canon_id")
+    comp = connected_components(same_as_edges(entities))
+    ref = entities.join(comp, entities.entity_iri == comp.id, "left").select(
+        "entity_iri", F.coalesce("component", "entity_iri").alias("canon_id")
+    )
+    return (
+        Counter(tuple(r) for r in got.collect()),
+        Counter(tuple(r) for r in ref.collect()),
+    )
+
+
+def _entities(spark, iris):
+    return spark.createDataFrame(
+        [(i,) for i in iris], "entity_iri string"
+    ).withColumn("block_key", entity_local_name(F.col("entity_iri")))
+
+
+def test_block_canon_matches_cc_on_fixture(spark, triples):
+    got, ref = _block_canon_and_reference(entity_dictionary(triples))
+    assert got == ref
+    assert any(iri != canon for iri, canon in got)  # some block merged
+
+
+def test_block_canon_block_cap(spark):
+    at_cap = [f"http://ex.org/{i:02d}/item-64" for i in range(64)]
+    past_cap = [f"http://ex.org/{i:02d}/item-65" for i in range(65)]
+    got, ref = _block_canon_and_reference(_entities(spark, at_cap + past_cap))
+    assert got == ref
+    labels = dict(got.keys())
+    assert {labels[i] for i in at_cap} == {at_cap[0]}  # one star
+    assert all(labels[i] == i for i in past_cap)  # dissolved
+
+
+@pytest.mark.parametrize(
+    "iris",
+    [
+        # singleton blocks
+        ["http://ex.org/person-1", "http://ex.org/event-2", "urn:x:solo"],
+        # IRIs ending in '/' share the empty block key
+        ["http://ex.org/a/", "http://ex.org/b/", "http://other.org/",
+         "http://ex.org/person-1"],
+        # U+FB01 < U+1F600 in code points and UTF-8 bytes, but not in UTF-16
+        ["http://ex.org/\U0001f600/k-1", "http://ex.org/\ufb01/k-1",
+         "http://ex.org/\u00e9/k-1", "http://ex.org/\u65e5\u672c/k-2",
+         "http://ex.org/z/k-2"],
+    ],
+    ids=["singletons", "empty_block_key", "non_ascii"],
+)
+def test_block_canon_matches_cc(spark, iris):
+    got, ref = _block_canon_and_reference(_entities(spark, iris))
+    assert got == ref
+    assert len(got) == len(iris)
+
+
+def test_block_canon_spot_labels(spark):
+    """Labels the equality with the reference cannot pin by itself."""
+    labels = dict(block_canon(_entities(spark, [
+        "http://ex.org/a/", "http://ex.org/b/",
+        "http://ex.org/\U0001f600/k-1", "http://ex.org/\ufb01/k-1",
+    ])).select("entity_iri", "canon_id").collect())
+    assert labels["http://ex.org/b/"] == "http://ex.org/a/"
+    assert labels["http://ex.org/\U0001f600/k-1"] == "http://ex.org/\ufb01/k-1"
+    # a null block key never links, whatever the block size
+    nulls = spark.createDataFrame(
+        [("http://ex.org/x", None), ("http://ex.org/y", None), (None, None)],
+        "entity_iri string, block_key string",
+    )
+    got, ref = _block_canon_and_reference(nulls)
+    assert got == ref == Counter(
+        {("http://ex.org/x", "http://ex.org/x"): 1,
+         ("http://ex.org/y", "http://ex.org/y"): 1, (None, None): 1}
+    )
+
+
+_IRI = st.builds(
+    lambda ns, local: f"http://{ns}/{local}",
+    st.sampled_from(["ex.org", "ex.org/d", "a.b/\u00e9", "x/\U0001f600"]),
+    st.sampled_from(["person-1", "person-2", "event-1", "", "\ufb01"]),
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(iris=st.sets(_IRI, max_size=14), big=st.integers(63, 66))
+def test_block_canon_matches_cc_random(spark, iris, big):
+    """Random small blocks plus one block of 63..66 members, around the
+    64-member cap ``same_as_edges`` applies by default."""
+    around_cap = [f"http://ex.org/{i:02d}/big-1" for i in range(big)]
+    got, ref = _block_canon_and_reference(
+        _entities(spark, sorted(iris) + around_cap)
+    )
+    assert got == ref
 
 
 def test_link_mentions_no_forced_broadcast(spark, sf_dir, triples):

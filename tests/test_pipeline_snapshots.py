@@ -7,10 +7,24 @@ and need a catalog on the classpath (documented spark-submit conf in
 pipeline/snapshots.py), so they are not executable here.
 """
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from json_ld_spark.pipeline.job import run_snapshot_pipeline
+from json_ld_spark.pipeline.entity import (
+    CANON_SCHEMA,
+    EDGE_SCHEMA,
+    ENTITY_SCHEMA,
+    NODE_SCHEMA,
+)
+from json_ld_spark.pipeline.extract import TRIPLE_SCHEMA
+from json_ld_spark.pipeline.job import (
+    read_entity_state,
+    run_incremental_snapshot_pipeline,
+    run_snapshot_pipeline,
+)
 from json_ld_spark.pipeline.manifest import ParquetManifest
 from json_ld_spark.pipeline.snapshots import ParquetSnapshotStore
 from json_ld_spark.pipeline.transcripts import synth_transcripts
@@ -216,3 +230,104 @@ def test_incremental_pipeline_over_snapshots(spark, sf_dir, tmp_path):
     # third run with no new snapshot: clean no-op
     noop = run_incremental_snapshot_pipeline(spark, store, w)
     assert noop.buckets_processed == 0
+
+
+def test_state_reads_use_explicit_schemas(
+    spark, sf_dir, tmp_path, jobs_launched
+):
+    """The five state tables read back with the schema constants, so the
+    reads (and a no-op run, which only reads) launch no Spark job."""
+    store = ParquetSnapshotStore(spark, str(tmp_path / "schema_store"))
+    store.append(synth_transcripts(spark, sf_dir).limit(200).localCheckpoint())
+    w = str(tmp_path / "schema_wh")
+    assert read_entity_state(spark, w) is None
+    run_incremental_snapshot_pipeline(spark, store, w)
+
+    state = {}
+    assert jobs_launched(
+        lambda: state.update(read_entity_state(spark, w))
+    ) == 0
+    # the constants match what the commit wrote: compare each with the
+    # schema Spark infers from the files (nullability aside), so a
+    # misnamed or mistyped field cannot read back as a null column
+    with open(os.path.join(w, "entity_state", "state.json")) as fh:
+        v = os.path.join(w, "entity_state", f"v{json.load(fh)['version']}")
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    constants = {
+        "triples": TRIPLE_SCHEMA, "entities": ENTITY_SCHEMA,
+        "canon": CANON_SCHEMA, "nodes": NODE_SCHEMA, "edges": EDGE_SCHEMA,
+    }
+    assert set(state) == set(constants)
+    for name, schema in constants.items():
+        on_disk = spark.read.parquet(os.path.join(v, name)).schema
+        assert fields(on_disk) == fields(schema), name
+        assert fields(state[name].schema) == fields(schema), name
+    assert state["canon"].count() == state["entities"].count() > 0
+
+    out = []
+    assert jobs_launched(
+        lambda: out.append(run_incremental_snapshot_pipeline(spark, store, w)),
+    ) == 0
+    noop = out[0]
+    assert noop.buckets_processed == 0
+    assert noop.triples.schema == TRIPLE_SCHEMA
+    assert noop.nodes.schema == NODE_SCHEMA
+    assert noop.edges.schema == EDGE_SCHEMA
+
+
+def test_multi_append_crash_resume_matches_full_build(spark, sf_dir, tmp_path):
+    """Three successive deltas, the second crashed before the state-pointer
+    swap and re-run: the final state equals a from-scratch build over the
+    union of every snapshot."""
+    from json_ld_spark.pipeline.entity import canonicalize
+    from json_ld_spark.pipeline.extract import extract_triples
+
+    store = ParquetSnapshotStore(spark, str(tmp_path / "multi_store"))
+    w = str(tmp_path / "multi_wh")
+    t = synth_transcripts(spark, sf_dir).localCheckpoint()
+    part = F.pmod(F.xxhash64(F.col("conv_id")), F.lit(4))
+    store.append(t.where(part == 0))
+    run_incremental_snapshot_pipeline(spark, store, w)
+
+    # a new lexicographic-minimum alias, so the crashed delta moves an
+    # existing block
+    alias = spark.createDataFrame(
+        [(
+            "conv-alias", 0, "tool", "tool call",
+            '{"@id":"http://ex.org/a/person-3",'
+            '"http://schema.org/knows":{"@id":"http://ex.org/person-4"}}',
+        )],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.current_timestamp())
+    deltas = [
+        t.where(part == 1),
+        t.where(part == 2).unionByName(alias),
+        t.where(part == 3),
+    ]
+    for i, delta in enumerate(deltas):
+        store.append(delta)
+        if i == 1:
+            with pytest.raises(RuntimeError, match="before state pointer swap"):
+                run_incremental_snapshot_pipeline(
+                    spark, store, w, fail_before_state_swap=True
+                )
+        res = run_incremental_snapshot_pipeline(spark, store, w)
+        assert res.buckets_processed == 1
+
+    full_triples = extract_triples(store.read(), dedup_turns=True)
+    _, full_nodes, full_edges = canonicalize(full_triples, materialize=True)
+
+    def rows(df, cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    cols_n = ["canon_id", "iri", "kind", "n_aliases"]
+    cols_e = ["src_canon", "pred", "dst_canon", "provenance"]
+    assert _sorted_triples(res.triples) == _sorted_triples(full_triples)
+    assert rows(res.nodes, cols_n) == rows(full_nodes, cols_n)
+    assert rows(res.edges, cols_e) == rows(full_edges, cols_e)
+    assert res.nodes.where(
+        F.col("iri") == "http://ex.org/a/person-3"
+    ).count() == 1
