@@ -1,28 +1,34 @@
-"""Triple extraction: transcripts → triples via an Arrow-batched kernel.
+"""Per-turn JSON-LD operators: transcripts → triples (and per-document
+flatten / frame / compact shapes) via one Arrow-batched kernel plan.
 
 This is operator U1 of SURVEY.md §2 — the ``mapInPandas`` stage that wraps
 the whole kernel (A1-A33): per Arrow batch, each JSON-bearing turn's
 documents are parsed, their contexts resolved against the broadcast context
-dictionary (compiled once per Python worker and memoized), expanded to
-triples, and fanned out 1→N. Errors never abort the job: they become
+dictionary (compiled once per task and memoized), expanded, and fanned out
+1→N. In ``extract_triples`` errors never abort the job: they become
 quarantine rows with the exact reference error code (src/error.rs taxonomy)
-carried in ``error_code`` (FIXTURES.md §5.4).
+carried in ``error_code`` (FIXTURES.md §5.4). The other four operators
+reshape the same expanded documents and skip the failing ones.
 
-Scale design:
+Every operator is a candidate frame plus a ``turn_rows`` function, run by
+``_map_turns`` — the one plan site:
 - The candidate-turn filter (``tool IS NOT NULL OR text LIKE '%<jsonld>%'``)
   runs JVM-side *before* the Python boundary so non-JSON turns never cross
   Arrow.
 - Only (conv_id, turn_idx, text, tool) are selected → column pruning reaches
   the parquet scan.
-- The context-compile cache is per-worker and keyed by the canonical JSON of
+- The context dictionary and the operator's constants ship as one broadcast.
+- The context-compile cache is per-task and keyed by the canonical JSON of
   the ``@context`` value: ~10^1 distinct contexts vs ~10^12 turns means the
   per-document cost is dict lookups + the expansion walk only.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
+import time
 from typing import Iterator, Mapping, Optional
 
 import pandas as pd
@@ -40,8 +46,15 @@ from ..kernel import (
     Context,
     JsonLdError,
     ProcessorOptions,
+    cleanup_null_markers,
+    compact_document,
     expand_document,
+    expand_frame,
     expanded_to_triples,
+    flatten_expanded,
+    flatten_stats,
+    frame_expanded,
+    normalize_expanded,
     process_context,
 )
 
@@ -63,17 +76,23 @@ TRIPLE_SCHEMA = StructType(
 
 _INLINE_RE = re.compile(r"<jsonld>(.*?)</jsonld>", re.DOTALL)
 
-_TRIPLE_COLS = [f.name for f in TRIPLE_SCHEMA.fields]
-
-# The JVM-side candidate predicate and the Python-side document discovery
-# below are THE definition of "which turns carry documents, and which
-# documents" — shared by extraction and flatten stats so they can never
-# silently diverge. (A function, not a module-level Column: F.col() needs
-# an active SparkContext, and this module imports at pytest collection.)
+# The JVM-side candidate predicate, the Python-side document discovery and
+# TurnExpander.expand_raw below are THE definition of "which turns carry
+# documents, which documents, and how each one is parsed and expanded" —
+# every operator in this module goes through them (via _map_turns), so they
+# can never silently diverge. (A function, not a module-level Column:
+# F.col() needs an active SparkContext, and this module imports at pytest
+# collection.)
 
 
 def _candidate_filter():
     return F.col("tool").isNotNull() | F.col("text").contains("<jsonld>")
+
+
+def _candidate_turns(transcripts: DataFrame) -> DataFrame:
+    """The JSON-bearing turns, pruned to the 4 columns the kernel reads."""
+    turns = transcripts.select("conv_id", "turn_idx", "text", "tool")
+    return turns.where(_candidate_filter())
 
 
 def iter_turn_documents(text, tool) -> list[str]:
@@ -87,8 +106,16 @@ def iter_turn_documents(text, tool) -> list[str]:
     return raws
 
 
+def _fingerprint(value) -> str:
+    """md5 of the canonical JSON of ``value`` — a bit-exact pin of a whole
+    output structure for the golden oracle."""
+    return hashlib.md5(
+        json.dumps(value, sort_keys=True, separators=(",", ":")).encode()
+    ).hexdigest()
+
+
 class TurnExpander:
-    """Per-worker expansion kernel with context-compile and document memo
+    """Per-task expansion kernel with context-compile and document memo
     caches.
 
     The document memo exploits that expansion is a *pure function* of the
@@ -134,6 +161,25 @@ class TurnExpander:
             self.cache_stats["ctx_hits"] += 1
         return ctx
 
+    def _context_of(self, doc) -> tuple[Context, object]:
+        """(active context, body) of a parsed document: its inline
+        ``@context`` compiled through the memo, else the base context."""
+        ctx_value = doc.get("@context") if isinstance(doc, Mapping) else None
+        if ctx_value is None:
+            return Context(base=self.document_iri), doc
+        body = {k: v for k, v in doc.items() if k != "@context"}
+        return self._active_context(ctx_value), body
+
+    def expand_raw(self, raw: str) -> Optional[tuple[Context, list]]:
+        """THE document step: ``(active context, expanded form)`` of one raw
+        document string, or None when it is not JSON. Raises JsonLdError."""
+        try:
+            doc = json.loads(raw)
+        except ValueError:  # json.JSONDecodeError is a ValueError
+            return None
+        active, body = self._context_of(doc)
+        return active, expand_document(self.processor, active, body)
+
     def _expand_doc(self, raw: str) -> tuple[tuple, ...]:
         """Expand one raw document string to partial rows (everything after
         the conv_id/turn_idx prefix), memoized on the raw string."""
@@ -142,37 +188,19 @@ class TurnExpander:
             self.cache_stats["doc_hits"] += 1
             return cached
         self.cache_stats["doc_misses"] += 1
-        out: list[tuple] = []
         try:
-            doc = json.loads(raw)
-        except (json.JSONDecodeError, ValueError):
-            doc = None
-            out.append(
-                (None, None, None, None, None, None, None, None,
-                 "loading document failed")
-            )
-        if doc is not None:
-            try:
-                ctx_value = doc.get("@context") if isinstance(doc, Mapping) else None
-                if ctx_value is not None:
-                    active = self._active_context(ctx_value)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=self.document_iri)
-                    body = doc
-                expanded = expand_document(self.processor, active, body)
-                for t in expanded_to_triples(expanded):
-                    out.append(
-                        (t["subj"], t["pred"], t["obj_kind"], t["obj_value"],
-                         t["obj_type"], t["obj_lang"], t["obj_direction"],
-                         t["graph"], None)
-                    )
-            except JsonLdError as e:
-                out = [
-                    (None, None, None, None, None, None, None, None,
-                     e.code.value)
-                ]
-        result = tuple(out)
+            step = self.expand_raw(raw)
+            if step is None:
+                result = ((None,) * 8 + ("loading document failed",),)
+            else:
+                result = tuple(
+                    (t["subj"], t["pred"], t["obj_kind"], t["obj_value"],
+                     t["obj_type"], t["obj_lang"], t["obj_direction"],
+                     t["graph"], None)
+                    for t in expanded_to_triples(step[1])
+                )
+        except JsonLdError as e:
+            result = ((None,) * 8 + (e.code.value,),)
         if len(self._doc_cache) >= self.DOC_CACHE_MAX:
             # FIFO eviction: drop the oldest insertion (dict is ordered)
             self._doc_cache.pop(next(iter(self._doc_cache)))
@@ -188,90 +216,20 @@ class TurnExpander:
         return out
 
 
-FLATTEN_STATS_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("n_docs", IntegerType()),
-        StructField("n_nodes", IntegerType()),
-        StructField("n_props", IntegerType()),
-        StructField("n_blank", IntegerType()),
-    ]
-)
-
-
-def flatten_turn_stats(
-    transcripts: DataFrame, contexts: Optional[ContextDict] = None
-) -> DataFrame:
-    """Per JSON-bearing turn, the flattened-graph shape (§8 flattening
-    applied to every document in the turn): number of successfully
-    flattened docs, total top-level+named-graph nodes, non-keyword
-    properties, and distinct blank-node labels. Same Arrow-batched
-    plan shape as extract_triples (candidate filter JVM-side, 4-column
-    pruning, map-only); docs that fail to parse/expand are skipped, the
-    quarantine path being extract_triples' job."""
-    from ..kernel import expand_document, flatten_expanded, flatten_stats
-
-    contexts = contexts or ContextDict()
-    bc = transcripts.sparkSession.sparkContext.broadcast(
-        (contexts.raw, contexts.document_iri)
-    )
-    candidates = transcripts.select(
-        "conv_id", "turn_idx", "text", "tool"
-    ).where(_candidate_filter())
-
-    def stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raw_contexts, document_iri = bc.value
-        expander = TurnExpander(raw_contexts, document_iri)
-
-        def doc_stats(raw: str):
-            try:
-                doc = json.loads(raw)
-            except (json.JSONDecodeError, ValueError):
-                return None
-            try:
-                ctx_value = (
-                    doc.get("@context") if isinstance(doc, Mapping) else None
-                )
-                if ctx_value is not None:
-                    active = expander._active_context(ctx_value)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=document_iri)
-                    body = doc
-                flat = flatten_expanded(
-                    expand_document(expander.processor, active, body)
-                )
-            except JsonLdError:
-                return None
-            return flatten_stats(flat)
-
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
-            ):
-                n_docs = n_nodes = n_props = n_blank = 0
-                for raw in iter_turn_documents(text, tool):
-                    st = doc_stats(raw)
-                    if st is None:
-                        continue
-                    n_docs += 1
-                    n_nodes += st[0]
-                    n_props += st[1]
-                    n_blank += st[2]
-                rows.append(
-                    (conv_id, int(turn_idx), n_docs, n_nodes, n_props, n_blank)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "n_docs", "n_nodes",
-                    "n_props", "n_blank",
-                ],
-            )
-
-    return candidates.mapInPandas(stats_batches, schema=FLATTEN_STATS_SCHEMA)
+def _turn_docs(expander: TurnExpander, text, tool, fn) -> Iterator[tuple[int, object]]:
+    """``(doc_idx, fn(active, expanded))`` per document of one turn. A
+    document that is not JSON, or raises JsonLdError in expansion or in
+    ``fn``, is skipped (quarantine is extract_triples' job) but keeps its
+    index."""
+    for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
+        try:
+            step = expander.expand_raw(raw)
+            if step is None:
+                continue
+            value = fn(*step)
+        except JsonLdError:
+            continue
+        yield doc_idx, value
 
 
 class TaskMetricsParam:
@@ -293,6 +251,71 @@ class TaskMetricsParam:
         return a
 
 
+def _map_turns(
+    candidates: DataFrame,
+    contexts: Optional[ContextDict],
+    schema: StructType,
+    turn_rows,
+    payload=None,
+    task_metrics_acc=None,
+) -> DataFrame:
+    """THE kernel plan of every operator in this module: ``candidates``
+    (4-column turns) → one map-only ``mapInPandas`` stage. Each task builds
+    one TurnExpander and emits ``turn_rows(expander, payload, conv_id,
+    turn_idx, text, tool)`` for every turn.
+
+    The context dictionary and the operator's constants (``payload``) ship
+    as one broadcast variable: closure capture re-pickles them into every
+    serialized task (10^5 tasks at target scale), a broadcast ships them
+    once per executor (SURVEY §2 S3). With ``task_metrics_acc`` each task
+    adds one TaskMetricsParam sample."""
+    contexts = contexts or ContextDict()
+    bc = candidates.sparkSession.sparkContext.broadcast(
+        (contexts.raw, contexts.document_iri, payload)
+    )
+    columns = schema.fieldNames()
+
+    def run_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        raw_contexts, document_iri, task_payload = bc.value
+        expander = TurnExpander(raw_contexts, document_iri)
+        n_in = 0
+        t0 = time.perf_counter()
+        for pdf in batches:
+            n_in += len(pdf)
+            rows: list[tuple] = []
+            for conv_id, turn_idx, text, tool in zip(
+                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
+            ):
+                rows.extend(
+                    turn_rows(expander, task_payload, conv_id, int(turn_idx), text, tool)
+                )
+            yield pd.DataFrame(rows, columns=columns)
+        if task_metrics_acc is not None:
+            cs = expander.cache_stats
+            task_metrics_acc.add([(
+                n_in, time.perf_counter() - t0,
+                cs["ctx_hits"], cs["ctx_misses"],
+                cs["doc_hits"], cs["doc_misses"],
+            )])
+
+    return candidates.mapInPandas(run_task, schema=schema)
+
+
+def _triple_rows(expander, dedup, conv_id, turn_idx, text, tool) -> list[tuple]:
+    rows = expander.expand_turn(conv_id, turn_idx, text, tool)
+    if dedup:
+        # G1 — exact triple dedup, shuffle-free. The dedup key is the FULL
+        # row including (conv_id, turn_idx), and a turn is expanded exactly
+        # once in exactly one task, so duplicates of the key can only arise
+        # *within* this turn's own output (e.g. the same doc in both text
+        # and tool). Per-turn set-dedup is therefore exactly equivalent to
+        # a global dropDuplicates over all 11 columns — minus a ~full-output
+        # shuffle, which at the 100 TB target is the difference between a
+        # map-only stage and a petascale exchange.
+        rows = list(dict.fromkeys(rows))
+    return rows
+
+
 def extract_triples(
     transcripts: DataFrame,
     contexts: Optional[ContextDict] = None,
@@ -303,10 +326,10 @@ def extract_triples(
     """transcripts → triples DataFrame (quarantine rows included;
     filter ``error_code IS NULL`` for clean triples).
 
-    Plan shape: parquet scan (pruned to 4 cols, candidate filter pushed) →
-    mapInPandas kernel (with in-kernel per-turn exact dedup — see inline
-    note for why that equals a global dropDuplicates) — a single map-only
-    stage, no exchange.
+    Plan shape (``_map_turns``): parquet scan (pruned to 4 cols, candidate
+    filter pushed) → mapInPandas kernel (with in-kernel per-turn exact
+    dedup — see inline note for why that equals a global dropDuplicates) —
+    a single map-only stage, no exchange.
 
     PRECONDITION for ``dedup=True``'s global-dedup guarantee: (conv_id,
     turn_idx) is unique in ``transcripts``. The streaming path enforces this
@@ -318,17 +341,7 @@ def extract_triples(
     full-output shuffle the old global dropDuplicates paid. The job path
     (pipeline/job.py) enables it.
     """
-    contexts = contexts or ContextDict()
-    # ship the context dictionary as a real broadcast variable: closure
-    # capture re-pickles the dict into every serialized task (10^5 tasks at
-    # target scale), a broadcast ships it once per executor (SURVEY §2 S3)
-    bc = transcripts.sparkSession.sparkContext.broadcast(
-        (contexts.raw, contexts.document_iri)
-    )
-
-    candidates = transcripts.select(
-        "conv_id", "turn_idx", "text", "tool"
-    ).where(_candidate_filter())
+    candidates = _candidate_turns(transcripts)
     if dedup_turns:
         # deterministic survivor: dropDuplicates keeps whichever replayed
         # row a partitioning happens to deliver first — if an upstream
@@ -358,46 +371,48 @@ def extract_triples(
             )
             .select("conv_id", "turn_idx", "_p.text", "_p.tool")
         )
+    return _map_turns(
+        candidates, contexts, TRIPLE_SCHEMA, _triple_rows,
+        payload=dedup, task_metrics_acc=task_metrics_acc,
+    )
 
-    def expand_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
 
-        raw_contexts, document_iri = bc.value
-        expander = TurnExpander(raw_contexts, document_iri)
-        n_in = 0
-        t0 = _time.perf_counter()
-        for pdf in batches:
-            n_in += len(pdf)
-            rows: list[tuple] = []
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
-            ):
-                turn_rows = expander.expand_turn(conv_id, int(turn_idx), text, tool)
-                if dedup:
-                    # G1 — exact triple dedup, shuffle-free. The dedup key is
-                    # the FULL row including (conv_id, turn_idx), and a turn
-                    # is expanded exactly once in exactly one task, so
-                    # duplicates of the key can only arise *within* this
-                    # turn's own output (e.g. the same doc in both text and
-                    # tool). Per-turn set-dedup is therefore exactly
-                    # equivalent to a global dropDuplicates over all 11
-                    # columns — minus a ~full-output shuffle, which at the
-                    # 100 TB target is the difference between a map-only
-                    # stage and a petascale exchange.
-                    turn_rows = list(dict.fromkeys(turn_rows))
-                rows.extend(turn_rows)
-            yield pd.DataFrame(rows, columns=_TRIPLE_COLS)
-        if task_metrics_acc is not None:
-            # one sample per task — straggler surface + memoization
-            # hit-rates (TaskMetricsParam)
-            cs = expander.cache_stats
-            task_metrics_acc.add([(
-                n_in, _time.perf_counter() - t0,
-                cs["ctx_hits"], cs["ctx_misses"],
-                cs["doc_hits"], cs["doc_misses"],
-            )])
+FLATTEN_STATS_SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("turn_idx", IntegerType()),
+        StructField("n_docs", IntegerType()),
+        StructField("n_nodes", IntegerType()),
+        StructField("n_props", IntegerType()),
+        StructField("n_blank", IntegerType()),
+    ]
+)
 
-    return candidates.mapInPandas(expand_batches, schema=TRIPLE_SCHEMA)
+
+def _flatten_rows(expander, _payload, conv_id, turn_idx, text, tool) -> list[tuple]:
+    stats = [
+        st for _, st in _turn_docs(
+            expander, text, tool,
+            lambda _active, expanded: flatten_stats(flatten_expanded(expanded)),
+        )
+    ]
+    n_nodes, n_props, n_blank = (sum(st[i] for st in stats) for i in range(3))
+    return [(conv_id, turn_idx, len(stats), n_nodes, n_props, n_blank)]
+
+
+def flatten_turn_stats(
+    transcripts: DataFrame, contexts: Optional[ContextDict] = None
+) -> DataFrame:
+    """Per JSON-bearing turn, the flattened-graph shape (§8 flattening
+    applied to every document in the turn): number of successfully
+    flattened docs, total top-level+named-graph nodes, non-keyword
+    properties, and distinct blank-node labels. One row per candidate
+    turn, on the ``_map_turns`` plan; docs that fail to parse/expand are
+    skipped, the quarantine path being extract_triples' job."""
+    return _map_turns(
+        _candidate_turns(transcripts), contexts, FLATTEN_STATS_SCHEMA,
+        _flatten_rows,
+    )
 
 
 FRAMED_SCHEMA = StructType(
@@ -440,6 +455,18 @@ def _framed_node_stats(node) -> tuple[int, int]:
     )
 
 
+def _framed_rows(expander, frame, conv_id, turn_idx, text, tool) -> list[tuple]:
+    return [
+        (conv_id, turn_idx, doc_idx, root["@id"], *_framed_node_stats(root),
+         _fingerprint(root))
+        for doc_idx, roots in _turn_docs(
+            expander, text, tool,
+            lambda _active, expanded: frame_expanded(expanded, frame),
+        )
+        for root in roots
+    ]
+
+
 def frame_turn_entities(
     transcripts: DataFrame,
     contexts: Optional[ContextDict] = None,
@@ -450,73 +477,13 @@ def frame_turn_entities(
     ``frame`` (expanded form; default = entity roots by schema:name), and
     every framed root emits one row with its shape counts plus an md5
     fingerprint of the canonical framed JSON — a bit-exact pin of the
-    whole framed structure for the golden oracle. Same Arrow-batched plan
-    shape as extract_triples: candidate filter JVM-side, 4-column pruning,
-    map-only; failing docs are skipped (quarantine is extract_triples'
-    job)."""
-    import hashlib
-
-    from ..kernel import frame_expanded
-
-    frame = frame or DEFAULT_TURN_FRAME
-    contexts = contexts or ContextDict()
-    bc = transcripts.sparkSession.sparkContext.broadcast(
-        (contexts.raw, contexts.document_iri, frame)
+    whole framed structure for the golden oracle. Runs on the
+    ``_map_turns`` plan with the frame in its broadcast; failing docs are
+    skipped (quarantine is extract_triples' job)."""
+    return _map_turns(
+        _candidate_turns(transcripts), contexts, FRAMED_SCHEMA, _framed_rows,
+        payload=frame or DEFAULT_TURN_FRAME,
     )
-    candidates = transcripts.select(
-        "conv_id", "turn_idx", "text", "tool"
-    ).where(_candidate_filter())
-
-    def framed_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raw_contexts, document_iri, frame_obj = bc.value
-        expander = TurnExpander(raw_contexts, document_iri)
-
-        def frame_doc(raw: str):
-            try:
-                doc = json.loads(raw)
-            except (json.JSONDecodeError, ValueError):
-                return []
-            try:
-                ctx_value = (
-                    doc.get("@context") if isinstance(doc, Mapping) else None
-                )
-                if ctx_value is not None:
-                    active = expander._active_context(ctx_value)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=document_iri)
-                    body = doc
-                expanded = expand_document(expander.processor, active, body)
-                return frame_expanded(expanded, frame_obj)
-            except JsonLdError:
-                return []
-
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
-            ):
-                for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
-                    for root in frame_doc(raw):
-                        n_props, n_embedded = _framed_node_stats(root)
-                        fp = hashlib.md5(
-                            json.dumps(
-                                root, sort_keys=True, separators=(",", ":")
-                            ).encode()
-                        ).hexdigest()
-                        rows.append(
-                            (conv_id, int(turn_idx), doc_idx, root["@id"],
-                             n_props, n_embedded, fp)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "doc_idx", "root_id",
-                    "n_props", "n_embedded", "frame_fp",
-                ],
-            )
-
-    return candidates.mapInPandas(framed_batches, schema=FRAMED_SCHEMA)
 
 
 FRAMED_COMPACT_SCHEMA = StructType(
@@ -545,6 +512,25 @@ DEFAULT_COMPACT_FRAME: dict = {
 }
 
 
+def _framed_compact_rows(expander, payload, conv_id, turn_idx, text, tool) -> list[tuple]:
+    frame_ctx, expanded_frame = payload
+
+    def frame_compact(_active, expanded) -> list:
+        compacted = compact_document(
+            frame_ctx, frame_expanded(expanded, expanded_frame)
+        )
+        if not isinstance(compacted, list):
+            compacted = [compacted]
+        return [cleanup_null_markers(n) for n in compacted]
+
+    return [
+        (conv_id, turn_idx, doc_idx, root.get("@id", ""), len(root),
+         sum(1 for v in root.values() if v is None), _fingerprint(root))
+        for doc_idx, roots in _turn_docs(expander, text, tool, frame_compact)
+        for root in roots
+    ]
+
+
 def frame_compact_turn_entities(
     transcripts: DataFrame,
     contexts: Optional[ContextDict] = None,
@@ -557,90 +543,19 @@ def frame_compact_turn_entities(
     ``cleanup_null_markers``). Per framed root one row: compacted key
     count, the number of null-cleaned (framed-but-missing) properties,
     and an md5 fingerprint of the canonical compacted JSON — a bit-exact
-    pin of the whole §4.1 output shape for the golden oracle. Same
-    Arrow-batched map-only plan as frame_turn_entities."""
-    import hashlib
-
-    from ..kernel import (
-        cleanup_null_markers,
-        compact_document,
-        expand_frame,
-        frame_expanded,
-    )
-
+    pin of the whole §4.1 output shape for the golden oracle. Runs on the
+    ``_map_turns`` plan; the frame's context and expanded form compile
+    once on the driver (an invalid frame raises JsonLdError here) and ride
+    the broadcast."""
     frame = frame or DEFAULT_COMPACT_FRAME
     contexts = contexts or ContextDict()
-    bc = transcripts.sparkSession.sparkContext.broadcast(
-        (contexts.raw, contexts.document_iri, frame)
+    compiler = TurnExpander(contexts.raw, contexts.document_iri)
+    frame_ctx, _ = compiler._context_of(frame)
+    expanded_frame = expand_frame(compiler.processor, frame_ctx, frame)
+    return _map_turns(
+        _candidate_turns(transcripts), contexts, FRAMED_COMPACT_SCHEMA,
+        _framed_compact_rows, payload=(frame_ctx, expanded_frame),
     )
-    candidates = transcripts.select(
-        "conv_id", "turn_idx", "text", "tool"
-    ).where(_candidate_filter())
-
-    def framed_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raw_contexts, document_iri, frame_obj = bc.value
-        expander = TurnExpander(raw_contexts, document_iri)
-        # frame context + expanded frame compile once per worker
-        frame_ctx = Context(base=document_iri)
-        ctx_value = frame_obj.get("@context")
-        if ctx_value is not None:
-            frame_ctx = process_context(
-                expander.processor, frame_ctx, ctx_value, document_iri
-            )
-        expanded_frame = expand_frame(
-            expander.processor, frame_ctx, frame_obj
-        )
-
-        def frame_doc(raw: str):
-            try:
-                doc = json.loads(raw)
-            except (json.JSONDecodeError, ValueError):
-                return []
-            try:
-                ctx_val = (
-                    doc.get("@context") if isinstance(doc, Mapping) else None
-                )
-                if ctx_val is not None:
-                    active = expander._active_context(ctx_val)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=document_iri)
-                    body = doc
-                expanded = expand_document(expander.processor, active, body)
-                framed = frame_expanded(expanded, expanded_frame)
-                compacted = compact_document(frame_ctx, framed)
-                if not isinstance(compacted, list):
-                    compacted = [compacted]
-                return [cleanup_null_markers(n) for n in compacted]
-            except JsonLdError:
-                return []
-
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
-            ):
-                for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
-                    for root in frame_doc(raw):
-                        n_null = sum(1 for v in root.values() if v is None)
-                        fp = hashlib.md5(
-                            json.dumps(
-                                root, sort_keys=True, separators=(",", ":")
-                            ).encode()
-                        ).hexdigest()
-                        rows.append(
-                            (conv_id, int(turn_idx), doc_idx,
-                             root.get("@id", ""), len(root), n_null, fp)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "doc_idx", "root_id",
-                    "n_keys", "n_null", "compact_fp",
-                ],
-            )
-
-    return candidates.mapInPandas(framed_batches, schema=FRAMED_COMPACT_SCHEMA)
 
 
 COMPACTED_SCHEMA = StructType(
@@ -682,6 +597,25 @@ def _compacted_doc_stats(element) -> tuple[int, int, int]:
     return total, terms, iris
 
 
+def _compact_rows(expander, _payload, conv_id, turn_idx, text, tool) -> list[tuple]:
+    def compact_roundtrip(active, expanded) -> tuple[object, int]:
+        # compactToRelative=False (spec option, default true): the
+        # pipeline publishes absolute subject/object IRIs so consumers
+        # join without needing the producer's base
+        compacted = compact_document(active, expanded, compact_to_relative=False)
+        reexpanded = expand_document(expander.processor, active, compacted)
+        rt = normalize_expanded(reexpanded) == normalize_expanded(expanded)
+        return compacted, 1 if rt else 0
+
+    return [
+        (conv_id, turn_idx, doc_idx, *_compacted_doc_stats(compacted), rt,
+         _fingerprint(compacted))
+        for doc_idx, (compacted, rt) in _turn_docs(
+            expander, text, tool, compact_roundtrip
+        )
+    ]
+
+
 def compact_turn_docs(
     transcripts: DataFrame,
     contexts: Optional[ContextDict] = None,
@@ -695,86 +629,10 @@ def compact_turn_docs(
     plus an md5 fingerprint of the canonical compacted JSON — a bit-exact
     pin of the whole compacted structure for the golden oracle.
 
-    Same scale shape as extract_triples / frame_turn_entities: JVM-side
-    candidate filter, 4-column pruning, map-only mapInPandas, per-worker
-    context-compile cache; failing docs are skipped (quarantine is
-    extract_triples' job).
+    Runs on the ``_map_turns`` plan (JVM-side candidate filter, 4-column
+    pruning, map-only mapInPandas, per-task context-compile cache);
+    failing docs are skipped (quarantine is extract_triples' job).
     """
-    import hashlib
-
-    from ..kernel import compact_document, normalize_expanded
-
-    contexts = contexts or ContextDict()
-    bc = transcripts.sparkSession.sparkContext.broadcast(
-        (contexts.raw, contexts.document_iri)
+    return _map_turns(
+        _candidate_turns(transcripts), contexts, COMPACTED_SCHEMA, _compact_rows
     )
-    candidates = transcripts.select(
-        "conv_id", "turn_idx", "text", "tool"
-    ).where(_candidate_filter())
-
-    def compacted_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raw_contexts, document_iri = bc.value
-        expander = TurnExpander(raw_contexts, document_iri)
-
-        def compact_doc(raw: str):
-            try:
-                doc = json.loads(raw)
-            except (json.JSONDecodeError, ValueError):
-                return None
-            try:
-                ctx_value = (
-                    doc.get("@context") if isinstance(doc, Mapping) else None
-                )
-                if ctx_value is not None:
-                    active = expander._active_context(ctx_value)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=document_iri)
-                    body = doc
-                expanded = expand_document(expander.processor, active, body)
-                # compactToRelative=False (spec option, default true): the
-                # pipeline publishes absolute subject/object IRIs so
-                # consumers join without needing the producer's base
-                compacted = compact_document(
-                    active, expanded, compact_to_relative=False
-                )
-                reexpanded = expand_document(
-                    expander.processor, active, compacted
-                )
-                rt = normalize_expanded(reexpanded) == normalize_expanded(
-                    expanded
-                )
-                return compacted, 1 if rt else 0
-            except JsonLdError:
-                return None
-
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
-            ):
-                for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
-                    out = compact_doc(raw)
-                    if out is None:
-                        continue
-                    compacted, rt = out
-                    n_keys, n_terms, n_iris = _compacted_doc_stats(compacted)
-                    fp = hashlib.md5(
-                        json.dumps(
-                            compacted, sort_keys=True, separators=(",", ":")
-                        ).encode()
-                    ).hexdigest()
-                    rows.append(
-                        (conv_id, int(turn_idx), doc_idx,
-                         n_keys, n_terms, n_iris, rt, fp)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "doc_idx",
-                    "n_keys", "n_term_keys", "n_iri_keys",
-                    "roundtrip_ok", "compact_fp",
-                ],
-            )
-
-    return candidates.mapInPandas(compacted_batches, schema=COMPACTED_SCHEMA)

@@ -85,80 +85,75 @@ def run_extraction_job(
     run_id = uuid.uuid4().hex[:12]
     manifest = ParquetManifest(spark, warehouse, n_buckets)
     pending = manifest.pending_buckets()
-    if not pending:
-        # no-op resume: extraction is complete, but the derived node/edge
-        # tables must still be (re)computed when requested — returning
-        # nodes=None here would crash re-runs of the production entrypoint
-        result = JobResult(run_id, 0, manifest.read_triples())
-        if with_entity_layer:
-            _, result.nodes, result.edges = canonicalize(result.triples)
-        return result
-
-    bucketed = transcripts.withColumn(
-        "bucket", bucket_of(F.col("conv_id"), n_buckets)
-    ).where(F.col("bucket").isin(pending))
-
-    # per-bucket input-row counts ride the extraction action itself via
-    # observe() — map-side conditional counters collected while the write
-    # job runs, so the source is scanned exactly ONCE (the round-2 shape
-    # paid a separate count job = a second full scan). One counter per
-    # pending bucket is fine for the Iceberg-typical 16–1024 bucket range;
-    # a 10^4+ bucket spec would batch commits into counter groups instead.
-    obs = Observation(f"input_rows_{run_id}")
-    bucketed = bucketed.observe(
-        obs,
-        *[
-            F.sum(F.when(F.col("bucket") == b, 1).otherwise(0))
-            .cast("long")
-            .alias(f"b{b}")
-            for b in pending
-        ],
-    )
-
-    # the one extraction job — extract + write ALL pending buckets in one
-    # pass. The bucket column is a pure function of conv_id, so it is
-    # re-derived on the kernel output rather than threaded through the
-    # Arrow boundary. dedup_turns=True enforces the (conv_id, turn_idx)
-    # uniqueness precondition of the in-kernel triple dedup on this batch
-    # path (replayed/retried turn rows are common in real transcript
-    # corpora).
-    triples = extract_triples(
-        bucketed, contexts, dedup_turns=True
-    ).withColumn("bucket", bucket_of(F.col("conv_id"), n_buckets))
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        triples.write.partitionBy("bucket").mode("overwrite").parquet(
-            manifest.triples_dir
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    observed = obs.get
-    # sum() over zero rows observes NULL, not 0 — normalize (the
-    # all-pending-buckets-empty resume case)
-    input_rows = {b: observed[f"b{b}"] or 0 for b in pending}
-
-    # ONE grouped metrics job over every written bucket directory, then a
-    # driver loop that only writes the tiny atomic manifest rows — commit
-    # granularity (and the crash window fail_after_bucket simulates) is
-    # still per-bucket.
-    stats = manifest.bucket_stats(pending)
+    # a no-op resume (every bucket committed) skips straight to the common
+    # tail: the derived node/edge tables are still (re)computed when
+    # requested — returning nodes=None would crash re-runs of the
+    # production entrypoint
     processed = 0
-    for bucket in pending:
-        manifest.commit_bucket(
-            run_id, bucket, input_rows.get(bucket, 0), stats.get(bucket),
-            snapshot_id,
-        )
-        processed += 1
-        if fail_after_bucket is not None and processed >= fail_after_bucket:
-            raise RuntimeError(f"fault injection after bucket {bucket}")
+    if pending:
+        bucketed = transcripts.withColumn(
+            "bucket", bucket_of(F.col("conv_id"), n_buckets)
+        ).where(F.col("bucket").isin(pending))
 
-    all_triples = manifest.read_triples()
-    result = JobResult(run_id, processed, all_triples)
+        # per-bucket input-row counts ride the extraction action itself via
+        # observe() — map-side conditional counters collected while the write
+        # job runs, so the source is scanned exactly ONCE (the round-2 shape
+        # paid a separate count job = a second full scan). One counter per
+        # pending bucket is fine for the Iceberg-typical 16–1024 bucket range;
+        # a 10^4+ bucket spec would batch commits into counter groups instead.
+        obs = Observation(f"input_rows_{run_id}")
+        bucketed = bucketed.observe(
+            obs,
+            *[
+                F.sum(F.when(F.col("bucket") == b, 1).otherwise(0))
+                .cast("long")
+                .alias(f"b{b}")
+                for b in pending
+            ],
+        )
+
+        # the one extraction job — extract + write ALL pending buckets in one
+        # pass. The bucket column is a pure function of conv_id, so it is
+        # re-derived on the kernel output rather than threaded through the
+        # Arrow boundary. dedup_turns=True enforces the (conv_id, turn_idx)
+        # uniqueness precondition of the in-kernel triple dedup on this batch
+        # path (replayed/retried turn rows are common in real transcript
+        # corpora).
+        triples = extract_triples(
+            bucketed, contexts, dedup_turns=True
+        ).withColumn("bucket", bucket_of(F.col("conv_id"), n_buckets))
+        mode_key = "spark.sql.sources.partitionOverwriteMode"
+        prev_mode = spark.conf.get(mode_key, "static")
+        spark.conf.set(mode_key, "dynamic")
+        try:
+            triples.write.partitionBy("bucket").mode("overwrite").parquet(
+                manifest.triples_dir
+            )
+        finally:
+            spark.conf.set(mode_key, prev_mode)
+        observed = obs.get
+        # sum() over zero rows observes NULL, not 0 — normalize (the
+        # all-pending-buckets-empty resume case)
+        input_rows = {b: observed[f"b{b}"] or 0 for b in pending}
+
+        # ONE grouped metrics job over every written bucket directory, then a
+        # driver loop that only writes the tiny atomic manifest rows — commit
+        # granularity (and the crash window fail_after_bucket simulates) is
+        # still per-bucket.
+        stats = manifest.bucket_stats(pending)
+        for bucket in pending:
+            manifest.commit_bucket(
+                run_id, bucket, input_rows.get(bucket, 0), stats.get(bucket),
+                snapshot_id,
+            )
+            processed += 1
+            if (fail_after_bucket is not None
+                    and processed >= fail_after_bucket):
+                raise RuntimeError(f"fault injection after bucket {bucket}")
+
+    result = JobResult(run_id, processed, manifest.read_triples())
     if with_entity_layer:
-        _, nodes, edges = canonicalize(all_triples)
-        result.nodes = nodes
-        result.edges = edges
+        _, result.nodes, result.edges = canonicalize(result.triples)
     return result
 
 

@@ -72,6 +72,73 @@ def test_quarantine_on_malformed_doc(spark):
     ]
 
 
+def test_failing_documents_skip_but_keep_their_index(spark):
+    """Every per-turn operator shares one document step: a document that
+    is not JSON or fails expansion is skipped by the shape operators
+    (keeping the doc_idx of the ones after it) and quarantined by
+    extract_triples."""
+    from json_ld_spark.kernel import JsonLdError
+    from json_ld_spark.pipeline.extract import (
+        TaskMetricsParam,
+        compact_turn_docs,
+        flatten_turn_stats,
+        frame_compact_turn_entities,
+        frame_turn_entities,
+    )
+
+    bad_vocab = '{"@context": {"@vocab": 42}, "a": "b"}'
+    good = json.dumps({
+        "@context": {"name": "http://schema.org/name"},
+        "@id": "http://ex.org/alice", "name": "Alice",
+    })
+    rows = [
+        ("c1", 0, "bad <jsonld>{not json}</jsonld>", None),
+        ("c1", 1, "ok", bad_vocab),
+        ("c1", 2, "ok", '{"@context": "https://example.org/ctx/missing", "a": "b"}'),
+        # [malformed, JsonLdError doc, good doc]: tool first, then inline
+        ("c1", 3, f"<jsonld>{bad_vocab}</jsonld> <jsonld>{good}</jsonld>",
+         "{not json}"),
+        ("c1", 4, "no documents here", None),
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, text string, tool string"
+    )
+
+    for op in (frame_turn_entities, frame_compact_turn_entities):
+        got = [(r.turn_idx, r.doc_idx, r.root_id) for r in op(df).collect()]
+        assert got == [(3, 2, "http://ex.org/alice")], op.__name__
+    got = [(r.turn_idx, r.doc_idx, r.roundtrip_ok)
+           for r in compact_turn_docs(df).collect()]
+    assert got == [(3, 2, 1)]
+
+    stats = {r.turn_idx: tuple(r)[2:] for r in flatten_turn_stats(df).collect()}
+    assert set(stats) == {0, 1, 2, 3}  # one row per candidate turn
+    assert stats[0] == stats[1] == stats[2] == (0, 0, 0, 0)
+    assert stats[3][0] == 1 and stats[3][1] >= 1
+
+    acc = spark.sparkContext.accumulator([], TaskMetricsParam())
+    out = extract_triples(df, task_metrics_acc=acc).collect()
+    codes = sorted((r.turn_idx, r.error_code or "") for r in out)
+    assert codes == [
+        (0, "loading document failed"),
+        (1, "invalid vocab mapping"),
+        (2, "loading remote context failed"),
+        (3, ""),
+        (3, "invalid vocab mapping"),
+        (3, "loading document failed"),
+    ]
+    samples = acc.value
+    assert sum(s[0] for s in samples) == 4  # candidate turns
+    assert sum(s[4] + s[5] for s in samples) == 6  # documents
+
+    # the compacting frame compiles on the driver: an invalid frame
+    # context fails when the operator is called, not inside a task
+    with pytest.raises(JsonLdError):
+        frame_compact_turn_entities(
+            df, frame={"@context": {"@vocab": 42}, "name": {}}
+        )
+
+
 def test_per_turn_text_equality_invariant(spark, transcripts):
     """North-rule invariant: joining triples back to the input preserves
     per-turn text equality under stable (conv_id, turn_idx) ordering."""

@@ -61,6 +61,30 @@ def test_resume_idempotent(spark, sf_dir, tmp_path):
     assert _sorted_triples(noop.triples) == golden
 
 
+def test_noop_rerun_with_entity_layer(spark, sf_dir, tmp_path):
+    """A re-run over a fully committed manifest extracts nothing but must
+    still derive the node/edge tables: the production entrypoint always
+    asks for the entity layer, and nodes=None would crash its re-runs."""
+    from collections import Counter
+
+    transcripts = synth_transcripts(spark, sf_dir)
+    w = str(tmp_path / "w_noop_entity")
+    first = run_extraction_job(
+        spark, transcripts, w, n_buckets=4, with_entity_layer=True
+    )
+    assert first.buckets_processed == 4
+    nodes = Counter(tuple(r) for r in first.nodes.collect())
+    edges = Counter(tuple(r) for r in first.edges.collect())
+    assert nodes and edges
+
+    again = run_extraction_job(
+        spark, transcripts, w, n_buckets=4, with_entity_layer=True
+    )
+    assert again.buckets_processed == 0
+    assert Counter(tuple(r) for r in again.nodes.collect()) == nodes
+    assert Counter(tuple(r) for r in again.edges.collect()) == edges
+
+
 def test_empty_buckets_commit_and_resume(spark, sf_dir, tmp_path):
     """Regression: a pending bucket that emits zero rows gets no partition
     directory from the dynamic-partition write — it must still commit its
