@@ -273,9 +273,9 @@ def rewrite_edges(triples: DataFrame, canon: DataFrame) -> DataFrame:
 def canonicalize(
     triples: DataFrame, materialize: bool = False
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Full entity layer: returns (canon_map, nodes, edges).
+    """Full entity layer: returns (canon, nodes, edges).
 
-    canon_map: (id, component)   — entity IRI → canonical id
+    canon:     (iri, canon_id)   — entity IRI → canonical id (CANON_SCHEMA)
     nodes:     (canon_id, iri, kind, n_aliases)
     edges:     (src_canon, pred, dst_canon, provenance)
 
@@ -290,18 +290,12 @@ def canonicalize(
     if materialize:
         clean = clean.localCheckpoint()
     # read three times: the nodes aggregation and both rewrite joins
-    canon_full = (
+    canon = (
         block_canon(entity_dictionary(clean))
         .select(F.col("entity_iri").alias("iri"), "canon_id")
         .localCheckpoint()
     )
-    return (
-        canon_full.select(
-            F.col("iri").alias("id"), F.col("canon_id").alias("component")
-        ),
-        derive_nodes(canon_full),
-        rewrite_edges(clean, canon_full),
-    )
+    return canon, derive_nodes(canon), rewrite_edges(clean, canon)
 
 
 def incremental_canonicalize(

@@ -23,11 +23,11 @@ that is the difference between 1 pass and 32):
    written bucket directory (round 2 ran 3 jobs per bucket,
    driver-serially — the job-launch-latency wall at 10^3+ buckets).
 3. A driver-side loop then writes only the tiny atomic manifest rows —
-   each a one-row ``pyarrow.parquet`` write plus ``os.replace`` on the
-   driver, no Spark job (manifest.py; on a real deployment the Iceberg
-   ``writeTo(...).append()`` takes its place). The manifest row remains the
-   commit point, so resume granularity is still per-bucket: a crash
-   mid-loop leaves later buckets pending, and the re-run's dynamic
+   each a one-row ``pyarrow.parquet`` write committed by ``atomic_write``
+   on the driver, no Spark job (manifest.py; on a real deployment the
+   Iceberg ``writeTo(...).append()`` takes its place). The manifest row
+   remains the commit point, so resume granularity is still per-bucket: a
+   crash mid-loop leaves later buckets pending, and the re-run's dynamic
    overwrite of those partitions is idempotent.
 """
 
@@ -50,6 +50,7 @@ from .entity import (
 )
 from .extract import TRIPLE_SCHEMA, extract_triples
 from .manifest import ParquetManifest, bucket_of
+from .snapshots import atomic_write
 from .transcripts import synth_transcripts
 
 
@@ -250,9 +251,10 @@ def run_incremental_snapshot_pipeline(
     only the blocks a new entity touches and re-aggregates only the edge
     groups a changed canon touches (``entity.incremental_canonicalize``).
     State (the ``STATE_SCHEMAS`` tables + the last processed snapshot id)
-    lives under ``warehouse/entity_state`` with the same
-    write-tmp-then-rename commit the manifest uses; ``read_entity_state``
-    reads it back without a Spark job.
+    lives under ``warehouse/entity_state``; its ``state.json`` pointer
+    commits through ``snapshots.atomic_write``, the same commit step as
+    the manifest rows and the snapshot log. ``read_entity_state`` reads
+    the state back without a Spark job.
 
     At 10^12 turns this turns a snapshot append from "re-label every entity
     and run two rewrite joins over every triple" into O(delta + affected
@@ -272,9 +274,9 @@ def run_incremental_snapshot_pipeline(
         # crash-atomic versioned commit: the ENTIRE new state lands under a
         # fresh v<N+1> directory while the previous version stays intact
         # (the new DataFrames are lazy plans READING the old state), then
-        # ONE os.replace of state.json — the single atomic commit point —
-        # flips the pointer. A crash anywhere before the pointer swap
-        # leaves v<N> authoritative and v<N+1> an invisible orphan, so the
+        # ONE atomic_write of state.json — the single commit point — flips
+        # the pointer. A crash anywhere before the pointer swap leaves v<N>
+        # authoritative and v<N+1> an invisible orphan, so the
         # next run re-applies the delta against the OLD state exactly once
         # (no duplicated triples / double-counted provenance, unlike a
         # dir-by-dir rename sequence). Old versions are pruned only after
@@ -284,15 +286,15 @@ def run_incremental_snapshot_pipeline(
             tables[name].write.mode("overwrite").parquet(
                 os.path.join(state_dir, f"v{new_version}", name)
             )
-        tmp_meta = meta_path + ".tmp"
-        with open(tmp_meta, "w") as fh:
-            json.dump({"snapshot_id": snapshot_id, "version": new_version}, fh)
         if fail_before_state_swap:
             # fault injection for the crash-window test: the full new state
             # is on disk but the pointer never flips — the old version must
             # stay authoritative and the re-run applies the delta once
             raise RuntimeError("fault injection before state pointer swap")
-        os.replace(tmp_meta, meta_path)  # atomic commit point
+        pointer = {"snapshot_id": snapshot_id, "version": new_version}
+        atomic_write(
+            meta_path, lambda fh: fh.write(json.dumps(pointer).encode())
+        )
         for entry in os.listdir(state_dir):
             if entry.startswith("v") and entry != f"v{new_version}":
                 shutil.rmtree(os.path.join(state_dir, entry), ignore_errors=True)
@@ -313,10 +315,7 @@ def run_incremental_snapshot_pipeline(
         triples = extract_triples(
             store.read(current), contexts, dedup_turns=True
         ).localCheckpoint()
-        canon_map, nodes, edges = canonicalize(triples)
-        canon = canon_map.select(
-            F.col("id").alias("iri"), F.col("component").alias("canon_id")
-        )
+        canon, nodes, edges = canonicalize(triples)
         # one canon row per entity: the dictionary is its IRI column
         entities = canon.select(
             F.col("iri").alias("entity_iri"),

@@ -9,14 +9,14 @@ parquet with an atomic-rename commit per work unit; on a real deployment the
 snapshot_id column then carries the Iceberg snapshot).
 
 A commit is a driver-side write, not a Spark job: the one-row file is
-written with ``pyarrow.parquet`` to ``manifest/bucket_<b>.parquet.tmp``,
-fsynced, and ``os.replace``d to ``bucket_<b>.parquet`` — the rename is the
-commit point. Only ``*.parquet`` files count as committed, so a crash
-between the write and the rename (a leftover ``.tmp``) leaves the bucket
-pending. A Spark job would add ~1 s of fixed job overhead to each one-row
-commit; the pyarrow write takes about a millisecond. The committed-bucket
-and pinned-snapshot lookups read the manifest files with pyarrow for the
-same reason; ``read_manifest`` still returns the table as a DataFrame.
+written with ``pyarrow.parquet`` through ``snapshots.atomic_write`` (the
+pipeline's one commit step: ``bucket_<b>.parquet.tmp``, fsync, rename to
+``bucket_<b>.parquet``). Only ``*.parquet`` files count as committed, so a
+crash before the rename (a leftover ``.tmp``) leaves the bucket pending. A
+Spark job would add ~1 s of fixed job overhead to each one-row commit; the
+pyarrow write takes about a millisecond. The committed-bucket and
+pinned-snapshot lookups read the manifest files with pyarrow for the same
+reason; ``read_manifest`` still returns the table as a DataFrame.
 
 Resume = left-anti join of input work units against committed manifest rows:
 already-done units are skipped, so re-running after a failure appends only
@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .extract import TRIPLE_SCHEMA
+from .snapshots import atomic_write
 
 MANIFEST_SCHEMA = (
     "run_id string, partition_id int, input_rows long, triples_out long, "
@@ -192,31 +193,19 @@ class ParquetManifest:
         completed unit of work that MUST commit, otherwise the warehouse
         would re-crash on the missing path at every resume
         (regression-pinned in test_pipeline_resume)."""
-        metrics = dict(
-            stats or {"triples_out": 0, "errors": 0, "checksum": "0"}
-        )
-        metrics["input_rows"] = input_rows
-        return self._write_manifest_row(run_id, bucket, metrics, snapshot_id)
-
-    def _write_manifest_row(
-        self, run_id: str, bucket: int, metrics: dict,
-        snapshot_id: Optional[str],
-    ) -> dict:
         row = {
             "run_id": run_id,
             "partition_id": bucket,
             "snapshot_id": None if snapshot_id is None else str(snapshot_id),
             "ts": time.time(),
-            **metrics,
+            **(stats or {"triples_out": 0, "errors": 0, "checksum": "0"}),
+            "input_rows": input_rows,
         }
-        final = os.path.join(self.manifest_dir, f"bucket_{bucket}.parquet")
-        tmp = final + ".tmp"
         table = pa.Table.from_pylist([row], schema=MANIFEST_ARROW_SCHEMA)
-        with open(tmp, "wb") as fh:
-            pq.write_table(table, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, final)  # atomic commit point
+        atomic_write(
+            os.path.join(self.manifest_dir, f"bucket_{bucket}.parquet"),
+            lambda fh: pq.write_table(table, fh),
+        )
         return row
 
     def read_triples(self) -> DataFrame:

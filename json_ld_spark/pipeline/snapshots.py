@@ -19,12 +19,15 @@ implementations:
 - ``ParquetSnapshotStore`` — the sandbox default: the SAME contract over
   parquet with real snapshot semantics. Each ``append`` writes an
   immutable data directory and then atomically commits a new snapshot
-  entry (cumulative file-list manifest + ``os.replace``, the commit
-  point); ``read(snapshot_id)`` sees exactly the data committed at that
+  entry (``snapshots.json`` via ``atomic_write``, the commit point);
+  ``read(snapshot_id)`` sees exactly the data committed at that
   snapshot, so a resumed job re-reads the SAME input even if appends
   landed meanwhile — the "resume idempotently from the last committed
   snapshot" clause, honored for real and tested
   (tests/test_pipeline_snapshots.py).
+
+``atomic_write`` is the pipeline's one commit step: the snapshot log, the
+manifest rows (manifest.py) and the entity-state pointer (job.py).
 
 Single-writer by design (one driver commits); Iceberg's optimistic
 concurrency takes over on real deployments.
@@ -37,9 +40,32 @@ import os
 import re
 import time
 import uuid
-from typing import Optional
+from typing import IO, Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def atomic_write(path: str, write: Callable[[IO], None]) -> None:
+    """Durably replace ``path``: ``write(fh)`` fills the binary file
+    ``path + ".tmp"``, which is fsynced and then ``os.replace``d onto
+    ``path`` — the commit point. A crash before the rename leaves only a
+    ``.tmp`` leftover that no reader looks at."""
+    tmp = path + ".tmp"
+    with open(tmp, "wb") as fh:
+        write(fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
+def _check_tag(tag: str) -> None:
+    """Snapshot tags are interpolated into Iceberg metadata SQL (which has
+    no parameter binding), so both stores accept only a safe charset: a
+    quoted tag must never break out of the literal."""
+    if not re.fullmatch(r"[A-Za-z0-9_.:-]+", tag):
+        raise ValueError(
+            f"snapshot tag must match [A-Za-z0-9_.:-]+, got {tag!r}"
+        )
 
 
 class IcebergSnapshotStore:
@@ -92,17 +118,10 @@ class IcebergSnapshotStore:
         foreachBatch exactly-once hook): the tag is recorded as a snapshot
         summary property via the write's commit metadata, and an append
         whose tag already exists in the snapshots metadata table is a
-        no-op returning the original snapshot id.
-
-        Tags are validated against a safe charset before SQL interpolation:
-        internal callers only pass ``batch-N`` today, but this is a public
-        API surface and Spark SQL has no parameter binding for metadata
-        queries — a quoted tag must never break out of the literal."""
+        no-op returning the original snapshot id. Tags pass ``_check_tag``
+        before any SQL is issued."""
         if tag is not None:
-            if not re.fullmatch(r"[A-Za-z0-9_.:-]+", tag):
-                raise ValueError(
-                    f"snapshot tag must match [A-Za-z0-9_.:-]+, got {tag!r}"
-                )
+            _check_tag(tag)
             rows = self.spark.sql(
                 f"SELECT snapshot_id FROM {self.table}.snapshots "
                 f"WHERE summary['commit-tag'] = '{tag}' LIMIT 1"
@@ -116,20 +135,6 @@ class IcebergSnapshotStore:
             writer = df.writeTo(self.table)
         writer.append()  # atomic snapshot commit
         return self.current_snapshot_id()
-
-    def has_tag(self, tag: str) -> bool:
-        """True iff a committed snapshot carries ``tag`` (same validated
-        charset as ``append``)."""
-        if not re.fullmatch(r"[A-Za-z0-9_.:-]+", tag):
-            raise ValueError(
-                f"snapshot tag must match [A-Za-z0-9_.:-]+, got {tag!r}"
-            )
-        return bool(
-            self.spark.sql(
-                f"SELECT snapshot_id FROM {self.table}.snapshots "
-                f"WHERE summary['commit-tag'] = '{tag}' LIMIT 1"
-            ).collect()
-        )
 
 
 class ParquetSnapshotStore:
@@ -145,7 +150,7 @@ class ParquetSnapshotStore:
     delta manifest): metadata stays O(n) over n commits instead of the
     O(n²) a cumulative-list-per-entry format would cost a long-running
     streaming ingest; ``read(snapshot_id)`` unions the deltas up to that
-    id. The ``snapshots.json`` rewrite via ``os.replace`` is the atomic
+    id. The ``snapshots.json`` rewrite via ``atomic_write`` is the
     commit point: a crash mid-append leaves an orphan data dir that no
     snapshot references (invisible to every reader) — the same guarantee
     an Iceberg metadata-pointer swap gives.
@@ -211,14 +216,10 @@ class ParquetSnapshotStore:
         snapshot — the same write-idempotence contract Iceberg gives
         ``writeTo().append()`` under Spark's commit coordinator.
 
-        Tag charset is validated like IcebergSnapshotStore.append so the
-        two stores expose one contract (pinned by tests)."""
+        Both stores check tags with ``_check_tag`` (pinned by tests)."""
         snaps = self._snapshots()
         if tag is not None:
-            if not re.fullmatch(r"[A-Za-z0-9_.:-]+", tag):
-                raise ValueError(
-                    f"snapshot tag must match [A-Za-z0-9_.:-]+, got {tag!r}"
-                )
+            _check_tag(tag)
             for s in snaps:
                 if s.get("tag") == tag:
                     return s["id"]
@@ -230,17 +231,7 @@ class ParquetSnapshotStore:
         if tag is not None:
             entry["tag"] = tag
         snaps.append(entry)
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(snaps, f)
-        os.replace(tmp, self.meta_path)  # atomic commit point
+        atomic_write(
+            self.meta_path, lambda fh: fh.write(json.dumps(snaps).encode())
+        )
         return new_id
-
-    def has_tag(self, tag: str) -> bool:
-        """True iff a committed snapshot carries ``tag`` (same contract as
-        IcebergSnapshotStore.has_tag; charset validated identically)."""
-        if not re.fullmatch(r"[A-Za-z0-9_.:-]+", tag):
-            raise ValueError(
-                f"snapshot tag must match [A-Za-z0-9_.:-]+, got {tag!r}"
-            )
-        return any(s.get("tag") == tag for s in self._snapshots())

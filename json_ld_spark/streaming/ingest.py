@@ -29,7 +29,7 @@ Table B marks these rows as pipeline scaffolding, not reference algorithms.
 from __future__ import annotations
 
 import json
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -133,15 +133,7 @@ def run_windowed_stats_stream(
     (append mode: only watermark-finalized windows are written)."""
     transcripts = stream_transcript_source(spark, source_dir)
     stats = windowed_turn_stats(transcripts, window_duration, watermark)
-    writer = (
-        stats.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(stats, sink_dir, checkpoint_dir, available_now)
 
 
 def run_stream_to_snapshots(
@@ -151,7 +143,6 @@ def run_stream_to_snapshots(
     checkpoint_dir: str,
     contexts: Optional[ContextDict] = None,
     available_now: bool = True,
-    legacy_tags: bool = False,
 ):
     """Streaming extraction landing ATOMIC SNAPSHOTS: each micro-batch of
     triples commits as one SnapshotStore append (pipeline/snapshots.py),
@@ -160,42 +151,12 @@ def run_stream_to_snapshots(
     canonicalization pinned to a snapshot → idempotent resume.
 
     Exactly-once across restarts: ``foreachBatch`` can replay a batch
-    after a crash; the store's tagged append (tag = query id + micro-batch
-    id — batch ids alone restart at 0 if the checkpoint is wiped, which
-    would make the replay guard silently drop new batches) makes the
-    replay a no-op, so no double-counting even when the checkpoint and
-    the sink disagree about the last committed batch.
-
-    ``legacy_tags``: pass True exactly once when RESUMING a checkpoint
-    whose batches were committed before the query id was part of the tag
-    (format ``batch-N``), so the replayed head batch recognizes its
-    pre-upgrade commit instead of appending a duplicate. Leave False for
-    fresh checkpoints — a blanket legacy lookup would reintroduce the
-    wiped-checkpoint silent-drop hazard this tag format prevents."""
+    after a crash; the store's tagged append (see :func:`_snapshot_sink`)
+    makes the replay a no-op, so no double-counting even when the
+    checkpoint and the sink disagree about the last committed batch."""
     transcripts = stream_transcript_source(spark, source_dir)
     triples = stream_extract_triples(transcripts, contexts)
-    query_id: list[str] = []
-
-    def commit(batch_df, batch_id: int) -> None:
-        if not query_id:
-            query_id.append(_checkpoint_query_id(spark, checkpoint_dir))
-        if legacy_tags and store.has_tag(f"batch-{batch_id}"):
-            # committed pre-upgrade under the legacy tag format. The plan
-            # upstream is STATEFUL (dropDuplicatesWithinWatermark): Spark's
-            # state-store commit validation requires foreachBatch to
-            # process every partition, so consume the batch before skipping
-            # the append (an early return fails the micro-batch).
-            batch_df.count()
-            return
-        store.append(batch_df, tag=f"{query_id[0]}-batch-{batch_id}")
-
-    writer = (
-        triples.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _snapshot_sink(triples, store, checkpoint_dir, "", available_now)
 
 
 def _latest_fingerprints(spark: SparkSession, fps_root: str):
@@ -241,8 +202,8 @@ def run_stream_to_snapshots_with_change_feed(
 
     Each micro-batch of extracted triples:
 
-    1. commits to the snapshot store exactly-once (same tagged-append
-       guard as :func:`run_stream_to_snapshots`);
+    1. commits to the snapshot store exactly-once (the tagged append of
+       :func:`_snapshot_sink`);
     2. fingerprints per turn (``turn_fingerprints`` — one exchange, one
        row per turn, quarantine → NULL fp);
     3. diffs against the persisted cumulative fingerprint state with
@@ -284,43 +245,31 @@ def run_stream_to_snapshots_with_change_feed(
     triples = stream_extract_triples(
         transcripts, contexts, dedup_within_watermark=False
     )
-    query_id: list[str] = []
 
-    def commit(batch_df, batch_id: int) -> None:
-        if not query_id:
-            query_id.append(_checkpoint_query_id(spark, checkpoint_dir))
-        tag = f"{query_id[0]}-batch-{batch_id}"
-        batch_df = batch_df.persist()
+    def feed_and_fingerprints(batch_df, batch_id: int, tag: str) -> None:
+        new_fps = turn_fingerprints(batch_df, max_work=max_work).persist()
         try:
-            store.append(batch_df, tag=tag)
-            new_fps = turn_fingerprints(batch_df, max_work=max_work).persist()
-            try:
-                old = _latest_fingerprints(spark, fps_root)
-                if old is None:  # first commit: diff against empty state
-                    old = spark.createDataFrame([], FPS_SCHEMA)
-                feed = graph_diff(
-                    None, None, old_fingerprints=old, new_fingerprints=new_fps
-                ).where(F.col("status") != "removed")
-                feed.write.mode("overwrite").parquet(
-                    os.path.join(feed_root, f"commit={tag}")
-                )
-                new_fps.withColumn(
-                    "commit_seq", F.lit(batch_id).cast("long")
-                ).write.mode("overwrite").parquet(
-                    os.path.join(fps_root, f"commit={tag}")
-                )
-            finally:
-                new_fps.unpersist()
+            old = _latest_fingerprints(spark, fps_root)
+            if old is None:  # first commit: diff against empty state
+                old = spark.createDataFrame([], FPS_SCHEMA)
+            feed = graph_diff(
+                None, None, old_fingerprints=old, new_fingerprints=new_fps
+            ).where(F.col("status") != "removed")
+            feed.write.mode("overwrite").parquet(
+                os.path.join(feed_root, f"commit={tag}")
+            )
+            new_fps.withColumn(
+                "commit_seq", F.lit(batch_id).cast("long")
+            ).write.mode("overwrite").parquet(
+                os.path.join(fps_root, f"commit={tag}")
+            )
         finally:
-            batch_df.unpersist()
+            new_fps.unpersist()
 
-    writer = (
-        triples.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint_dir)
+    return _snapshot_sink(
+        triples, store, checkpoint_dir, "", available_now,
+        then=feed_and_fingerprints,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_stream_to_parquet(
@@ -341,15 +290,71 @@ def run_stream_to_parquet(
     """
     transcripts = stream_transcript_source(spark, source_dir)
     triples = stream_extract_triples(transcripts, contexts)
-    writer = (
-        triples.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
+    return _parquet_sink(triples, sink_dir, checkpoint_dir, available_now)
+
+
+def _start(writer, available_now: bool):
+    """Start ``writer``: drain the backlog and stop, or run continuously."""
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _parquet_sink(
+    stream: DataFrame, sink_dir: str, checkpoint_dir: str, available_now: bool
+):
+    """Append ``stream`` to a parquet file sink (exactly-once via its
+    commit log under ``checkpoint_dir``)."""
+    return _start(
+        stream.writeStream.format("parquet")
+        .option("path", sink_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append"),
+        available_now,
+    )
+
+
+def _snapshot_sink(
+    stream: DataFrame,
+    store,
+    checkpoint_dir: str,
+    prefix: str,
+    available_now: bool,
+    then: Optional[Callable[[DataFrame, int, str], None]] = None,
+):
+    """Commit each micro-batch of ``stream`` as ONE tagged ``store.append``:
+    a crash-replayed batch finds its tag committed and is a no-op.
+
+    The tag is ``<prefix><query id>-batch-<n>``. The streaming query id is
+    minted with the checkpoint, persisted in ``<checkpoint>/metadata`` at
+    query start and read on the first batch. Batch ids alone restart at 0
+    when a checkpoint is wiped or relocated, and the replay guard would
+    then silently discard new batches as already-committed ones.
+
+    With ``then``, the batch is persisted, appended, handed to
+    ``then(batch_df, batch_id, tag)`` and unpersisted."""
+    spark = stream.sparkSession
+    query_id: list[str] = []
+
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
+        if not query_id:
+            query_id.append(_checkpoint_query_id(spark, checkpoint_dir))
+        tag = f"{prefix}{query_id[0]}-batch-{batch_id}"
+        if then is None:
+            store.append(batch_df, tag=tag)
+            return
+        batch_df = batch_df.persist()
+        try:
+            store.append(batch_df, tag=tag)
+            then(batch_df, batch_id, tag)
+        finally:
+            batch_df.unpersist()
+
+    return _start(
+        stream.writeStream.foreachBatch(commit)
+        .option("checkpointLocation", checkpoint_dir),
+        available_now,
+    )
 
 
 def _checkpoint_query_id(spark: SparkSession, checkpoint_dir: str) -> str:
@@ -384,59 +389,19 @@ def run_stream_transcripts_to_snapshots(
     checkpoint_dir: str,
     available_now: bool = True,
     max_files_per_trigger: int = 8,
-    legacy_tags: bool = False,
 ):
     """Land RAW transcript micro-batches as atomic snapshot commits — the
     ingest half of the continuously-maintained KG: each drained batch
-    becomes one tagged SnapshotStore append (tag = micro-batch id, so a
-    crash-replayed batch is a no-op), and
+    becomes one tagged SnapshotStore append (:func:`_snapshot_sink`, tag
+    prefix ``transcripts-``, so a crash-replayed batch is a no-op), and
     ``pipeline/job.run_incremental_snapshot_pipeline`` then folds the
     accumulated snapshot deltas into nodes/edges in O(delta + affected
     blocks). Stream and consolidation never share mutable state: the
     snapshot id sequence is the only coupling, which is what makes the
-    composition exactly-once end-to-end.
-
-    The idempotency tag embeds the streaming QUERY id (minted when the
-    checkpoint is created, persisted in ``<checkpoint>/metadata``, stable
-    across restarts of the same checkpoint): batch ids alone are scoped
-    to the checkpoint directory, so a wiped or relocated checkpoint would
-    restart them at 0 and the replay guard would silently discard the new
-    batches as already-committed ones.
-
-    ``legacy_tags``: pass True exactly once when RESUMING a checkpoint
-    whose batches were committed before the query id was part of the tag
-    (format ``transcripts-batch-N``) — the replayed head batch then
-    recognizes its pre-upgrade commit instead of appending a duplicate.
-    Leave False (the default) for fresh checkpoints: a blanket legacy
-    lookup would reintroduce the wiped-checkpoint data-loss this tag
-    format exists to prevent."""
+    composition exactly-once end-to-end."""
     transcripts = stream_transcript_source(
         spark, source_dir, max_files_per_trigger=max_files_per_trigger
     )
-    query_id: list[str] = []
-
-    def commit(batch_df, batch_id: int) -> None:
-        if not query_id:
-            # read lazily: Spark writes the metadata file at query start,
-            # before the first batch runs (foreachBatch runs driver-side)
-            query_id.append(_checkpoint_query_id(spark, checkpoint_dir))
-        if legacy_tags and store.has_tag(f"transcripts-batch-{batch_id}"):
-            # Consume the batch before skipping the append, mirroring the
-            # triples-stream variant: the transcript plan is stateless
-            # TODAY, but if a watermark/dedup is ever added upstream,
-            # Spark's state-store commit validation requires foreachBatch
-            # to process every partition — an early return without
-            # consumption would start failing micro-batches.
-            batch_df.count()
-            return
-        store.append(
-            batch_df, tag=f"transcripts-{query_id[0]}-batch-{batch_id}"
-        )
-
-    writer = (
-        transcripts.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint_dir)
+    return _snapshot_sink(
+        transcripts, store, checkpoint_dir, "transcripts-", available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -134,8 +134,8 @@ def test_entity_dictionary_blocking(spark, triples):
 
 
 def test_same_as_and_canonicalize(spark, triples):
-    canon_map, nodes, edges = canonicalize(triples)
-    cm = {r.id: r.component for r in canon_map.collect()}
+    canon, nodes, edges = canonicalize(triples)
+    cm = {r.iri: r.canon_id for r in canon.collect()}
     # alias namespaces collapse to one canonical id (lexicographic min).
     # ctx/base documents use relative @id; since @base inside a *remote*
     # context is ignored (quirk R6, ctx_def.rs:211) they resolve against the
@@ -312,10 +312,7 @@ def test_incremental_canonicalize_matches_full(spark, sf_dir):
     old_triples = extract_triples(
         synth_transcripts(spark, sf_dir)
     ).localCheckpoint()
-    canon_map, _nodes, edges_prev = canonicalize(old_triples)
-    prev_canon = canon_map.select(
-        F.col("id").alias("iri"), F.col("component").alias("canon_id")
-    ).localCheckpoint()
+    prev_canon, _nodes, edges_prev = canonicalize(old_triples)
     prev_entities = entity_dictionary(
         old_triples.where(F.col("error_code").isNull())
     ).localCheckpoint()
@@ -351,10 +348,7 @@ def test_incremental_canonicalize_matches_full(spark, sf_dir):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
     assert rows(canon_full, ["iri", "canon_id"]) == rows(
-        full_canon.select(
-            F.col("id").alias("iri"), F.col("component").alias("canon_id")
-        ),
-        ["iri", "canon_id"],
+        full_canon, ["iri", "canon_id"]
     )
     assert rows(nodes, ["canon_id", "iri", "kind", "n_aliases"]) == rows(
         full_nodes, ["canon_id", "iri", "kind", "n_aliases"]
@@ -384,10 +378,7 @@ def test_incremental_noop_delta_is_identity(spark, sf_dir):
     old_triples = extract_triples(
         synth_transcripts(spark, sf_dir)
     ).localCheckpoint()
-    canon_map, nodes_prev, edges_prev = canonicalize(old_triples)
-    prev_canon = canon_map.select(
-        F.col("id").alias("iri"), F.col("component").alias("canon_id")
-    ).localCheckpoint()
+    prev_canon, nodes_prev, edges_prev = canonicalize(old_triples)
     prev_entities = entity_dictionary(
         old_triples.where(F.col("error_code").isNull())
     ).localCheckpoint()
@@ -431,10 +422,7 @@ def test_incremental_no_forced_broadcast(spark, sf_dir):
     old_triples = extract_triples(
         synth_transcripts(spark, sf_dir)
     ).localCheckpoint()
-    canon_map, _nodes, edges_prev = canonicalize(old_triples)
-    prev_canon = canon_map.select(
-        F.col("id").alias("iri"), F.col("component").alias("canon_id")
-    ).localCheckpoint()
+    prev_canon, _nodes, edges_prev = canonicalize(old_triples)
     prev_entities = entity_dictionary(
         old_triples.where(F.col("error_code").isNull())
     ).localCheckpoint()
@@ -498,10 +486,7 @@ def test_incremental_block_cap_dissolution(spark):
     stable = "http://ex.org/stable-9"
     old_rows = [t(m, stable) for m in members] + [t(stable, members[0])]
     old = spark.createDataFrame(old_rows, TRIPLE_SCHEMA).localCheckpoint()
-    canon_map, _nodes, edges_prev = canonicalize(old)
-    prev_canon = canon_map.select(
-        F.col("id").alias("iri"), F.col("component").alias("canon_id")
-    ).localCheckpoint()
+    prev_canon, _nodes, edges_prev = canonicalize(old)
     prev_entities = entity_dictionary(old).localCheckpoint()
     # precondition: the 64-member block IS one component before the append
     assert (
@@ -520,10 +505,7 @@ def test_incremental_block_cap_dissolution(spark):
         return sorted(tuple(r) for r in df.select(*cols).collect())
 
     assert rows(canon_full, ["iri", "canon_id"]) == rows(
-        full_canon.select(
-            F.col("id").alias("iri"), F.col("component").alias("canon_id")
-        ),
-        ["iri", "canon_id"],
+        full_canon, ["iri", "canon_id"]
     )
     assert rows(edges, ["src_canon", "pred", "dst_canon", "provenance"]) == rows(
         full_edges, ["src_canon", "pred", "dst_canon", "provenance"]

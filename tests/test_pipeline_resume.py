@@ -1,7 +1,6 @@
 """Resume/idempotence + skew tests (FIXTURES.md §5.2-5.3, SURVEY.md §7 M2)."""
 
 import os
-import uuid
 
 import pyarrow.parquet as pq
 import pytest
@@ -168,22 +167,10 @@ def test_uncommitted_manifest_leftovers_stay_pending(spark, tmp_path):
     assert m.pending_buckets() == [2]
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted through a fresh job group."""
-    sc = spark.sparkContext
-    group = f"jobcount-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_commit_and_small_cc_job_counts(spark, tmp_path):
+def test_commit_and_small_cc_job_counts(spark, tmp_path, jobs_launched):
     m = ParquetManifest(spark, str(tmp_path / "w"), 4)
-    assert _jobs_launched(
-        spark, lambda: [m.commit_bucket("r", b, 1, None) for b in range(4)]
+    assert jobs_launched(
+        lambda: [m.commit_bucket("r", b, 1, None) for b in range(4)]
     ) == 0
     # a shuffled (not local-relation) edge plan, like same_as_edges
     edges = spark.range(12).select(
@@ -192,8 +179,8 @@ def test_commit_and_small_cc_job_counts(spark, tmp_path):
     ).distinct()
     out = []
     # ≥ 1: the edge plan itself needs a job, so the counter is live
-    assert 1 <= _jobs_launched(
-        spark, lambda: out.extend(connected_components(edges).collect())
+    assert 1 <= jobs_launched(
+        lambda: out.extend(connected_components(edges).collect())
     ) <= 3
     assert len(out) == 12
     assert {r.component for r in out} == {"n00", "n03", "n06", "n09"}

@@ -77,6 +77,45 @@ def test_orphan_data_invisible_without_commit(spark, tmp_path):
     assert store.current_snapshot_id() == 1
 
 
+def test_every_commit_point_fsyncs_before_rename(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The manifest row, the snapshot log and the entity-state pointer all
+    commit through ``atomic_write``: each ``.tmp`` file is fsynced before
+    it is renamed onto its final name, so a crash after the rename cannot
+    expose a file whose bytes never reached the disk."""
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def inode(st):
+        return st.st_dev, st.st_ino
+
+    def fsync(fd):
+        events.append(("fsync", inode(os.fstat(fd))))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.path.basename(src), inode(os.stat(src))))
+        real_replace(src, dst)
+
+    m = ParquetManifest(spark, str(tmp_path / "w"), 2)
+    store = ParquetSnapshotStore(spark, str(tmp_path / "store"))
+    transcripts = synth_transcripts(spark, sf_dir).limit(50).localCheckpoint()
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    m.commit_bucket("r", 0, 1, None)
+    store.append(transcripts)
+    run_incremental_snapshot_pipeline(spark, store, str(tmp_path / "wh"))
+    monkeypatch.undo()
+
+    renames = [(i, e) for i, e in enumerate(events) if e[0] == "replace"]
+    assert sorted(e[1] for _, e in renames) == [
+        "bucket_0.parquet.tmp", "snapshots.json.tmp", "state.json.tmp",
+    ]
+    for i, (_, name, ino) in renames:
+        assert ("fsync", ino) in events[:i], f"{name} renamed unsynced"
+
+
 def test_stream_commits_snapshots_exactly_once(spark, sf_dir, tmp_path):
     """Streaming → snapshot-store loop: micro-batches land as atomic
     snapshot commits; a re-drain on the same checkpoint adds nothing; a
@@ -127,8 +166,6 @@ def test_stream_commits_snapshots_exactly_once(spark, sf_dir, tmp_path):
     )
     assert replay <= n_snaps
     assert store.current_snapshot_id() == n_snaps
-    assert store.has_tag(committed_tags[0])
-    assert not store.has_tag("no-such-tag")
 
 
 def test_resume_pins_input_snapshot(spark, sf_dir, tmp_path):

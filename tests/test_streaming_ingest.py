@@ -231,73 +231,6 @@ def test_stream_snapshot_commits_survive_checkpoint_wipe(spark, tmp_path):
     assert got.where(F.col("conv_id") == "wipe-c2").count() >= 1
 
 
-def test_stream_snapshot_legacy_tag_optin(spark, tmp_path):
-    """Upgrade path: resuming a checkpoint whose head batch was committed
-    pre-upgrade under the legacy tag format must not append a duplicate
-    when legacy_tags=True is passed (and must re-ingest when it is not)."""
-    from json_ld_spark.pipeline.snapshots import ParquetSnapshotStore
-    from json_ld_spark.streaming.ingest import (
-        run_stream_transcripts_to_snapshots,
-    )
-
-    source = str(tmp_path / "src")
-    os.makedirs(source, exist_ok=True)
-    store = ParquetSnapshotStore(spark, str(tmp_path / "store"))
-    schema = (
-        "conv_id string, turn_idx int, role string, text string, tool string"
-    )
-    df = spark.createDataFrame(
-        [("legacy-c1", 0, "user", "hello", None)], schema
-    ).withColumn("ts", F.current_timestamp())
-    df.coalesce(1).write.mode("append").parquet(source)
-
-    # pre-upgrade state: batch 0 already committed under the legacy tag
-    store.append(df, tag="transcripts-batch-0")
-    n_before = store.read().count()
-
-    q = run_stream_transcripts_to_snapshots(
-        spark,
-        source,
-        store,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-        legacy_tags=True,
-    )
-    q.awaitTermination(120)
-    # the replayed head batch recognized its legacy commit: no duplicate
-    assert store.read().count() == n_before
-
-
-def test_triples_stream_legacy_tag_optin(spark, sf_dir, tmp_path):
-    """Same upgrade path for the TRIPLES stream (its legacy format was
-    plain batch-N): with legacy_tags=True, a replayed head batch whose
-    legacy tag is already committed must not append a duplicate."""
-    from json_ld_spark.pipeline.snapshots import ParquetSnapshotStore
-    from json_ld_spark.streaming.ingest import run_stream_to_snapshots
-
-    source = str(tmp_path / "src")
-    os.makedirs(source, exist_ok=True)
-    store = ParquetSnapshotStore(spark, str(tmp_path / "store"))
-    transcripts = synth_transcripts(spark, sf_dir).limit(50)
-    transcripts.coalesce(1).write.mode("append").parquet(source)
-
-    # pre-upgrade state: batch 0's triples already committed as batch-0
-    pre = extract_triples(transcripts, dedup=False)
-    store.append(pre, tag="batch-0")
-    n_before = store.read().count()
-
-    q = run_stream_to_snapshots(
-        spark,
-        source,
-        store,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-        legacy_tags=True,
-    )
-    q.awaitTermination(120)
-    assert store.read().count() == n_before
-
-
 def test_stream_change_feed_equals_batch_graph_diff(spark, tmp_path):
     """VERDICT r5 stretch: the streaming per-commit change feed (persisted
     fingerprints + graph_diff(old_fingerprints=...) per micro-batch) must
