@@ -4,8 +4,10 @@ The reference defines an async ``LoadRemoteDocument`` interface
 (src/remote.rs:21-44) whose caching contract says a context MUST NOT be
 re-dereferenced (src/remote.rs:29-38); its own remote path is unreachable
 (quirk R1). Our engine's equivalent is a small ``contexts(ctx_iri, ctx_json)``
-table, resolved and *compiled* once on the driver and shipped to executors via
-broadcast/closure capture — executors never do network I/O (SURVEY.md §2 S3).
+table. The raw dictionary ships to executors in the kernel plan's one
+broadcast (``pipeline/extract._map_turns``), and each task compiles the
+contexts its turns use through ``TurnExpander._active_context``, memoized per
+task — executors never do network I/O (SURVEY.md §2 S3).
 
 The built-in fixture dictionary below follows FIXTURES.md §2 — each entry
 exercises a distinct reference algorithm branch (citations inline).
@@ -112,9 +114,11 @@ DEFAULT_DOCUMENT_IRI = "https://example.org/transcripts/"
 class ContextDict:
     """Pre-resolved context dictionary + driver-side compile cache.
 
-    ``raw`` maps ctx_iri → context document (used by the kernel loader);
-    ``compiled(iri)`` memoizes fully-processed active contexts so executors
-    do pure dict lookups on the hot path.
+    ``raw`` maps ctx_iri → context document (used by the kernel loader; it
+    is what the extraction plan broadcasts); ``compiled(iri)`` memoizes
+    fully-processed active contexts for driver-side callers. Executors do
+    not use it: each task compiles and memoizes its own active contexts
+    (``pipeline/extract.TurnExpander``).
     """
 
     def __init__(

@@ -36,8 +36,8 @@ first collects at most ``_LOCAL_MAX_EDGES + 1`` edges:
   groupBy().min(); lineage is cut with ``localCheckpoint`` every iteration
   so the plan does not grow unboundedly and AQE re-plans each round
   (SURVEY.md §4.2). Convergence takes O(log^2 n) rounds; a loop that has
-  not converged after ``max_iterations`` raises instead of returning
-  partial labels.
+  not converged after ``_MAX_ITERATIONS`` rounds raises instead of
+  returning partial labels.
 
 The bound: 10^5 edges are at most 2×10^5 distinct ids. The collected rows
 plus the union-find dict then take on the order of 100 MB of Python heap
@@ -55,26 +55,23 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 _LOCAL_MAX_EDGES = 100_000
+_MAX_ITERATIONS = 25
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """Return (id: string, component: string); ``component`` is the
-    lexicographically-smallest member of the node's component.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Return (id: string, component: string) for ``(src, dst)`` edges;
+    ``component`` is the lexicographically-smallest member of the node's
+    component.
 
-    ``edges`` is treated as undirected; self-loops connect nothing.
-    ``max_iterations`` bounds the distributed loop, which raises
-    ``RuntimeError`` if it has not converged by then.
+    ``edges`` is treated as undirected; self-loops connect nothing. The
+    distributed loop raises ``RuntimeError`` if it has not converged after
+    ``_MAX_ITERATIONS`` rounds.
     """
-    pairs = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    pairs = edges.select("src", "dst")
     head = pairs.limit(_LOCAL_MAX_EDGES + 1).collect()
     if len(head) <= _LOCAL_MAX_EDGES:
         return _driver_components(pairs.sparkSession, head)
-    return _distributed_components(pairs, max_iterations)
+    return _distributed_components(pairs, _MAX_ITERATIONS)
 
 
 def _driver_components(spark: SparkSession, edges: list[Row]) -> DataFrame:

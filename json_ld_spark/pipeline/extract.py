@@ -301,25 +301,23 @@ def _map_turns(
     return candidates.mapInPandas(run_task, schema=schema)
 
 
-def _triple_rows(expander, dedup, conv_id, turn_idx, text, tool) -> list[tuple]:
+def _triple_rows(expander, _payload, conv_id, turn_idx, text, tool) -> list[tuple]:
+    # G1 — exact triple dedup, shuffle-free. The dedup key is the FULL row
+    # including (conv_id, turn_idx), and a turn is expanded exactly once in
+    # exactly one task, so duplicates of the key can only arise *within*
+    # this turn's own output (e.g. the same doc in both text and tool).
+    # Per-turn set-dedup is therefore exactly equivalent to a global
+    # dropDuplicates over all 11 columns — minus a ~full-output shuffle,
+    # which at the 100 TB target is the difference between a map-only stage
+    # and a petascale exchange. It keeps no state, so batch and streaming
+    # plans run the same rule.
     rows = expander.expand_turn(conv_id, turn_idx, text, tool)
-    if dedup:
-        # G1 — exact triple dedup, shuffle-free. The dedup key is the FULL
-        # row including (conv_id, turn_idx), and a turn is expanded exactly
-        # once in exactly one task, so duplicates of the key can only arise
-        # *within* this turn's own output (e.g. the same doc in both text
-        # and tool). Per-turn set-dedup is therefore exactly equivalent to
-        # a global dropDuplicates over all 11 columns — minus a ~full-output
-        # shuffle, which at the 100 TB target is the difference between a
-        # map-only stage and a petascale exchange.
-        rows = list(dict.fromkeys(rows))
-    return rows
+    return list(dict.fromkeys(rows))
 
 
 def extract_triples(
     transcripts: DataFrame,
     contexts: Optional[ContextDict] = None,
-    dedup: bool = True,
     dedup_turns: bool = False,
     task_metrics_acc=None,
 ) -> DataFrame:
@@ -331,9 +329,9 @@ def extract_triples(
     dedup — see inline note for why that equals a global dropDuplicates) —
     a single map-only stage, no exchange.
 
-    PRECONDITION for ``dedup=True``'s global-dedup guarantee: (conv_id,
-    turn_idx) is unique in ``transcripts``. The streaming path enforces this
-    with dropDuplicatesWithinWatermark (streaming/ingest.py); batch callers
+    PRECONDITION for the global-dedup guarantee: (conv_id, turn_idx) is
+    unique in ``transcripts``. The streaming path enforces this with
+    dropDuplicatesWithinWatermark (streaming/ingest.py); batch callers
     with possibly-replayed turn rows (retried tool calls re-appended by an
     upstream writer) must pass ``dedup_turns=True``, which inserts a cheap
     pre-kernel ``dropDuplicates(["conv_id","turn_idx"])`` on the *candidate*
@@ -373,7 +371,7 @@ def extract_triples(
         )
     return _map_turns(
         candidates, contexts, TRIPLE_SCHEMA, _triple_rows,
-        payload=dedup, task_metrics_acc=task_metrics_acc,
+        task_metrics_acc=task_metrics_acc,
     )
 
 

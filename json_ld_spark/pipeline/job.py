@@ -51,7 +51,6 @@ from .entity import (
 from .extract import TRIPLE_SCHEMA, extract_triples
 from .manifest import ParquetManifest, bucket_of
 from .snapshots import atomic_write
-from .transcripts import synth_transcripts
 
 
 @dataclass
@@ -69,18 +68,10 @@ def run_extraction_job(
     warehouse: str,
     n_buckets: int = 16,
     contexts: Optional[ContextDict] = None,
-    fail_after_bucket: Optional[int] = None,
     with_entity_layer: bool = False,
     snapshot_id: Optional[str] = None,
 ) -> JobResult:
-    """Single-pass bucketed extraction with manifest commit + resume.
-
-    ``fail_after_bucket`` is the fault-injection hook for the resume test
-    (FIXTURES.md §5.2): it raises after exactly that many manifest commits,
-    leaving the remaining buckets pending (their data is written but
-    uncommitted — exactly the crash-mid-commit window the resume path must
-    handle).
-    """
+    """Single-pass bucketed extraction with manifest commit + resume."""
     from pyspark.sql import Observation
 
     run_id = uuid.uuid4().hex[:12]
@@ -123,15 +114,11 @@ def run_extraction_job(
         triples = extract_triples(
             bucketed, contexts, dedup_turns=True
         ).withColumn("bucket", bucket_of(F.col("conv_id"), n_buckets))
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        prev_mode = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            triples.write.partitionBy("bucket").mode("overwrite").parquet(
-                manifest.triples_dir
-            )
-        finally:
-            spark.conf.set(mode_key, prev_mode)
+        # dynamic overwrite replaces only the written buckets; set on this
+        # writer, it leaves the shared session's mode to concurrent jobs
+        triples.write.partitionBy("bucket").mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(manifest.triples_dir)
         observed = obs.get
         # sum() over zero rows observes NULL, not 0 — normalize (the
         # all-pending-buckets-empty resume case)
@@ -139,8 +126,7 @@ def run_extraction_job(
 
         # ONE grouped metrics job over every written bucket directory, then a
         # driver loop that only writes the tiny atomic manifest rows — commit
-        # granularity (and the crash window fail_after_bucket simulates) is
-        # still per-bucket.
+        # granularity is still per-bucket.
         stats = manifest.bucket_stats(pending)
         for bucket in pending:
             manifest.commit_bucket(
@@ -148,9 +134,6 @@ def run_extraction_job(
                 snapshot_id,
             )
             processed += 1
-            if (fail_after_bucket is not None
-                    and processed >= fail_after_bucket):
-                raise RuntimeError(f"fault injection after bucket {bucket}")
 
     result = JobResult(run_id, processed, manifest.read_triples())
     if with_entity_layer:
@@ -158,24 +141,11 @@ def run_extraction_job(
     return result
 
 
-def run_full_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    warehouse: str,
-    n_buckets: int = 16,
-) -> JobResult:
-    transcripts = synth_transcripts(spark, sf_dir)
-    return run_extraction_job(
-        spark, transcripts, warehouse, n_buckets, with_entity_layer=True
-    )
-
-
 def run_snapshot_pipeline(
     spark: SparkSession,
     store,
     warehouse: str,
     n_buckets: int = 16,
-    fail_after_bucket: Optional[int] = None,
 ) -> JobResult:
     """Extraction job over a SnapshotStore (pipeline/snapshots.py) with the
     input snapshot PINNED across resume: the first run records the store's
@@ -193,12 +163,7 @@ def run_snapshot_pipeline(
         pinned = str(current)
     transcripts = store.read(int(pinned))
     return run_extraction_job(
-        spark,
-        transcripts,
-        warehouse,
-        n_buckets,
-        fail_after_bucket=fail_after_bucket,
-        snapshot_id=pinned,
+        spark, transcripts, warehouse, n_buckets, snapshot_id=pinned
     )
 
 
@@ -243,7 +208,6 @@ def run_incremental_snapshot_pipeline(
     store,
     warehouse: str,
     contexts: Optional[ContextDict] = None,
-    fail_before_state_swap: bool = False,
 ) -> JobResult:
     """Append-incremental entity layer over a SnapshotStore: the first run
     bootstraps (full extraction + canonicalization); each later run
@@ -286,11 +250,6 @@ def run_incremental_snapshot_pipeline(
             tables[name].write.mode("overwrite").parquet(
                 os.path.join(state_dir, f"v{new_version}", name)
             )
-        if fail_before_state_swap:
-            # fault injection for the crash-window test: the full new state
-            # is on disk but the pointer never flips — the old version must
-            # stay authoritative and the re-run applies the delta once
-            raise RuntimeError("fault injection before state pointer swap")
         pointer = {"snapshot_id": snapshot_id, "version": new_version}
         atomic_write(
             meta_path, lambda fh: fh.write(json.dumps(pointer).encode())

@@ -73,16 +73,15 @@ def stream_extract_triples(
     """Streaming plan: watermark → within-watermark turn dedup → kernel.
 
     Turn-level dedup runs *before* the Python boundary so replayed files
-    never pay kernel CPU twice. Triple-level exact dedup is left to the
-    downstream batch consolidation (global dropDuplicates would need
-    unbounded state in a stream).
+    never pay kernel CPU twice. Triple-level exact dedup is the batch
+    path's per-turn rule inside the kernel, which keeps no state.
     """
     stream = transcripts.withWatermark("ts", watermark)
     if dedup_within_watermark:
         stream = stream.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
     # ts must survive for the sink's event-time bookkeeping; the kernel
     # operates on the 4 pruned columns internally.
-    return extract_triples(stream, contexts, dedup=False)
+    return extract_triples(stream, contexts)
 
 
 def windowed_turn_stats(

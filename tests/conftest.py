@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 import uuid
@@ -44,3 +45,33 @@ def jobs_launched(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture
+def crash_commit():
+    """``with crash_commit(name, after=k):`` crashes the pipeline inside its
+    one commit step, ``snapshots.atomic_write``: ``k`` renames onto files
+    whose name starts with ``name`` go through, and the next one raises
+    ``RuntimeError("crash committing <file>")`` instead of renaming. The
+    ``.tmp`` file is then written and fsynced but never renamed — the
+    window between the write and the commit point."""
+
+    @contextlib.contextmanager
+    def crash(name: str, after: int = 0):
+        real_replace = os.replace
+        renamed = 0
+
+        def replace(src, dst):
+            nonlocal renamed
+            target = os.path.basename(dst)
+            if target.startswith(name):
+                if renamed == after:
+                    raise RuntimeError(f"crash committing {target}")
+                renamed += 1
+            real_replace(src, dst)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(os, "replace", replace)
+            yield
+
+    return crash

@@ -517,7 +517,9 @@ def test_incremental_block_cap_dissolution(spark):
     )
 
 
-def test_incremental_state_commit_crash_atomic(spark, sf_dir, tmp_path):
+def test_incremental_state_commit_crash_atomic(
+    spark, sf_dir, tmp_path, crash_commit
+):
     """Crash between state writes and the pointer swap must leave the OLD
     version authoritative: the re-run applies the delta exactly once (no
     duplicated triples / double-counted provenance)."""
@@ -542,18 +544,19 @@ def test_incremental_state_commit_crash_atomic(spark, sf_dir, tmp_path):
     ).withColumn("ts", F.current_timestamp())
     store.append(delta)
 
-    # real crash window via fault injection: the run writes the ENTIRE new
-    # state (v2 dirs + tmp pointer) but dies before the atomic pointer
-    # swap — v1 stays authoritative (pruning only happens after the swap)
+    # real crash window inside the commit step: the run writes the ENTIRE
+    # new state (v2 dirs + tmp pointer) but dies before the atomic pointer
+    # rename — v1 stays authoritative (pruning only happens after the swap)
     meta_path = os.path.join(w, "entity_state", "state.json")
     with open(meta_path) as fh:
         before = _json.load(fh)
     import pytest as _pytest
 
-    with _pytest.raises(RuntimeError, match="before state pointer swap"):
-        run_incremental_snapshot_pipeline(
-            spark, store, w, fail_before_state_swap=True
-        )
+    with crash_commit("state.json"), _pytest.raises(
+        RuntimeError, match="crash committing state.json"
+    ):
+        run_incremental_snapshot_pipeline(spark, store, w)
+    assert os.path.exists(meta_path + ".tmp")  # written, never renamed
     with open(meta_path) as fh:
         assert _json.load(fh) == before  # pointer untouched by the crash
 

@@ -29,7 +29,7 @@ def _sorted_triples(df):
     )
 
 
-def test_resume_idempotent(spark, sf_dir, tmp_path):
+def test_resume_idempotent(spark, sf_dir, tmp_path, crash_commit):
     transcripts = synth_transcripts(spark, sf_dir).cache()
     n_buckets = 4
 
@@ -40,14 +40,14 @@ def test_resume_idempotent(spark, sf_dir, tmp_path):
     assert base.buckets_processed == n_buckets
     golden = _sorted_triples(base.triples)
 
-    # fault-injected run: dies after exactly 2 manifest commits
+    # crashed run: dies inside the third manifest commit
     w2 = str(tmp_path / "w_resume")
-    with pytest.raises(RuntimeError, match="fault injection"):
-        run_extraction_job(
-            spark, transcripts, w2, n_buckets, fail_after_bucket=2
-        )
+    with crash_commit("bucket_", after=2), pytest.raises(
+        RuntimeError, match="crash committing bucket_"
+    ):
+        run_extraction_job(spark, transcripts, w2, n_buckets)
     m = ParquetManifest(spark, w2, n_buckets)
-    assert len(m.committed_buckets()) == 2  # fail_after_bucket is exact
+    assert len(m.committed_buckets()) == 2  # the crash is exact
 
     # resume: processes only the pending buckets
     resumed = run_extraction_job(spark, transcripts, w2, n_buckets)
@@ -278,15 +278,18 @@ def test_salted_extraction_no_straggler(spark, sf_dir):
     )
 
 
-def test_run_full_pipeline_end_to_end(spark, sf_dir, tmp_path):
-    """spark-submit entry path: extraction via manifest buckets + entity
-    layer; results must equal the direct (non-bucketed) pipeline."""
-    from json_ld_spark.pipeline.job import run_full_pipeline
+def test_entity_build_end_to_end(spark, sf_dir, tmp_path):
+    """spark-submit entry path (tools/run_job.py): extraction via manifest
+    buckets + entity layer; results must equal the direct (non-bucketed)
+    pipeline."""
     from json_ld_spark.pipeline.extract import extract_triples
     from json_ld_spark.pipeline.transcripts import synth_transcripts
     from pyspark.sql import functions as F
 
-    res = run_full_pipeline(spark, sf_dir, str(tmp_path / "wh"), n_buckets=4)
+    res = run_extraction_job(
+        spark, synth_transcripts(spark, sf_dir), str(tmp_path / "wh"),
+        n_buckets=4, with_entity_layer=True,
+    )
     assert res.buckets_processed == 4
     direct = extract_triples(synth_transcripts(spark, sf_dir))
     assert res.triples.count() == direct.count()

@@ -141,7 +141,7 @@ def test_stream_commits_snapshots_exactly_once(spark, sf_dir, tmp_path):
     n_snaps = store.current_snapshot_id()
     assert n_snaps is not None and n_snaps >= 1
     got = store.read().count()
-    want = extract_triples(transcripts, dedup=False).count()
+    want = extract_triples(transcripts).count()
     assert got == want
 
     # re-drain: committed backlog → no new snapshots, same rows
@@ -162,13 +162,13 @@ def test_stream_commits_snapshots_exactly_once(spark, sf_dir, tmp_path):
         "-batch-" in t for t in committed_tags
     ), committed_tags
     replay = store.append(
-        extract_triples(transcripts, dedup=False), tag=committed_tags[0]
+        extract_triples(transcripts), tag=committed_tags[0]
     )
     assert replay <= n_snaps
     assert store.current_snapshot_id() == n_snaps
 
 
-def test_resume_pins_input_snapshot(spark, sf_dir, tmp_path):
+def test_resume_pins_input_snapshot(spark, sf_dir, tmp_path, crash_commit):
     """Kill after 2 buckets, append NEW data to the store, resume: the
     resumed run must re-read the pinned snapshot, so the final triples
     equal an uninterrupted run over snapshot 1 — the new append is
@@ -181,10 +181,12 @@ def test_resume_pins_input_snapshot(spark, sf_dir, tmp_path):
     base = run_snapshot_pipeline(spark, store, str(tmp_path / "w_base"), 4)
     golden = _sorted_triples(base.triples)
 
-    # crash after 2 buckets
+    # crash inside the third bucket commit
     w = str(tmp_path / "w_pin")
-    with pytest.raises(RuntimeError, match="fault injection"):
-        run_snapshot_pipeline(spark, store, w, 4, fail_after_bucket=2)
+    with crash_commit("bucket_", after=2), pytest.raises(
+        RuntimeError, match="crash committing bucket_"
+    ):
+        run_snapshot_pipeline(spark, store, w, 4)
 
     # new data lands between crash and resume
     extra = transcripts.withColumn(
@@ -315,9 +317,11 @@ def test_state_reads_use_explicit_schemas(
     assert noop.edges.schema == EDGE_SCHEMA
 
 
-def test_multi_append_crash_resume_matches_full_build(spark, sf_dir, tmp_path):
-    """Three successive deltas, the second crashed before the state-pointer
-    swap and re-run: the final state equals a from-scratch build over the
+def test_multi_append_crash_resume_matches_full_build(
+    spark, sf_dir, tmp_path, crash_commit
+):
+    """Three successive deltas, the second crashed inside the state-pointer
+    commit and re-run: the final state equals a from-scratch build over the
     union of every snapshot."""
     from json_ld_spark.pipeline.entity import canonicalize
     from json_ld_spark.pipeline.extract import extract_triples
@@ -347,10 +351,10 @@ def test_multi_append_crash_resume_matches_full_build(spark, sf_dir, tmp_path):
     for i, delta in enumerate(deltas):
         store.append(delta)
         if i == 1:
-            with pytest.raises(RuntimeError, match="before state pointer swap"):
-                run_incremental_snapshot_pipeline(
-                    spark, store, w, fail_before_state_swap=True
-                )
+            with crash_commit("state.json"), pytest.raises(
+                RuntimeError, match="crash committing state.json"
+            ):
+                run_incremental_snapshot_pipeline(spark, store, w)
         res = run_incremental_snapshot_pipeline(spark, store, w)
         assert res.buckets_processed == 1
 

@@ -52,7 +52,7 @@ def test_stream_matches_batch(spark, sf_dir, stream_dirs):
     _drain(spark, stream_dirs)
 
     got = spark.read.parquet(stream_dirs["sink"]).select(*TRIPLE_KEY)
-    want = extract_triples(transcripts, dedup=False).select(*TRIPLE_KEY)
+    want = extract_triples(transcripts).select(*TRIPLE_KEY)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
@@ -114,7 +114,7 @@ def test_stream_replay_is_idempotent(spark, sf_dir, stream_dirs):
     extra.coalesce(1).write.mode("append").parquet(stream_dirs["source"])
     _drain(spark, stream_dirs)
     n2 = spark.read.parquet(stream_dirs["sink"]).count()
-    want_extra = extract_triples(extra, dedup=False).count()
+    want_extra = extract_triples(extra).count()
     assert n2 == n1 + want_extra
 
 
@@ -314,8 +314,8 @@ def test_stream_change_feed_equals_batch_graph_diff(spark, tmp_path):
     }
 
     # the feed must EQUAL the batch graph_diff over the same snapshots
-    old_fps = turn_fingerprints(extract_triples(batch1, dedup=False))
-    new_fps = turn_fingerprints(extract_triples(batch2, dedup=False))
+    old_fps = turn_fingerprints(extract_triples(batch1))
+    new_fps = turn_fingerprints(extract_triples(batch2))
     expected = graph_diff(
         None, None, old_fingerprints=old_fps, new_fingerprints=new_fps
     ).where(F.col("status") != "removed")

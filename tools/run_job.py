@@ -5,7 +5,7 @@
         --out /tmp/kgp_out [--n-buckets 64]
 
 Runs transcripts → bucketed extraction with manifest commit/resume →
-entity linking → connected-components canonicalization, then writes
+entity linking → block canonicalization, then writes
 ``triples`` / ``nodes`` / ``edges`` parquet tables under ``--out``
 (conv-id-bucketed for triples, the same hidden-partitioning function an
 Iceberg ``bucket(conv_id)`` spec uses). Re-running after a failure skips
@@ -85,7 +85,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("WARN")
 
-    from json_ld_spark.pipeline.job import run_full_pipeline, run_snapshot_pipeline
+    from json_ld_spark.pipeline.job import run_extraction_job, run_snapshot_pipeline
     from json_ld_spark.pipeline.manifest import bucket_of
 
     t0 = time.perf_counter()
@@ -99,8 +99,11 @@ def main() -> None:
         )
         _, res.nodes, res.edges = canonicalize(res.triples)
     else:
-        res = run_full_pipeline(
-            spark, args.sf_dir, args.warehouse, n_buckets=args.n_buckets
+        from json_ld_spark.pipeline.transcripts import synth_transcripts
+
+        res = run_extraction_job(
+            spark, synth_transcripts(spark, args.sf_dir), args.warehouse,
+            n_buckets=args.n_buckets, with_entity_layer=True,
         )
     clean = res.triples.where(F.col("error_code").isNull())
     if args.nquads_out:
