@@ -130,14 +130,14 @@ def _kg_flatten_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, nodes, _ = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, nodes, _ = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     return nodes.orderBy("canon_id")
 
 
 def _kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     return edges.orderBy("src_canon", "pred", "dst_canon")
 
 
@@ -151,7 +151,7 @@ def _kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.graph import pagerank_fixed_point
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     pr = pagerank_fixed_point(
         edges.select(
             F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
@@ -171,7 +171,7 @@ def _kg_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.graph import label_propagation
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     return label_propagation(
         edges.select(
             F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
@@ -190,7 +190,7 @@ def _kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.graph import kcore
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     return kcore(
         edges.select(
             F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
@@ -225,7 +225,7 @@ def _kg_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.graph import link_candidates
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     return link_candidates(
         edges.select(
             F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
@@ -294,7 +294,7 @@ def _kg_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     golden edges."""
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     out_d = edges.groupBy(F.col("src_canon").alias("node")).agg(
         F.count("*").alias("out_degree")
     )
@@ -322,7 +322,7 @@ def _kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.graph import triangle_counts
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     return triangle_counts(
         edges.select(
             F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
@@ -341,7 +341,7 @@ def _kg_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.pipeline.entity import canonicalize
 
     _, nodes, edges = canonicalize(
-        _clean_triples(spark, sf_dir), materialize=True
+        _clean_triples(spark, sf_dir).localCheckpoint()
     )
     return kg_integrity(nodes, edges)
 
@@ -525,7 +525,7 @@ def _kg_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from json_ld_spark.operators.graph import khop_reachability
     from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir).localCheckpoint())
     e = edges.select(
         F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
     )

@@ -18,12 +18,10 @@ from __future__ import annotations
 from typing import Mapping, NamedTuple, Optional
 
 from .kernel import (
-    Context,
     ErrorCode,
     JsonLdError,
     LoadDocumentOptions,
     ProcessorOptions,
-    process_context,
 )
 
 
@@ -112,13 +110,12 @@ DEFAULT_DOCUMENT_IRI = "https://example.org/transcripts/"
 
 
 class ContextDict:
-    """Pre-resolved context dictionary + driver-side compile cache.
+    """Pre-resolved context dictionary.
 
-    ``raw`` maps ctx_iri → context document (used by the kernel loader; it
-    is what the extraction plan broadcasts); ``compiled(iri)`` memoizes
-    fully-processed active contexts for driver-side callers. Executors do
-    not use it: each task compiles and memoizes its own active contexts
-    (``pipeline/extract.TurnExpander``).
+    ``raw`` maps ctx_iri → context document: the kernel loader reads it and
+    the extraction plan broadcasts it. ``processor`` carries it as the
+    context loader; each task compiles and memoizes its own active
+    contexts (``pipeline/extract.TurnExpander``).
     """
 
     def __init__(
@@ -128,7 +125,6 @@ class ContextDict:
     ) -> None:
         self.raw: dict[str, dict] = dict(raw if raw is not None else FIXTURE_CONTEXTS)
         self.document_iri = document_iri
-        self._compiled: dict[str, Context] = {}
 
     @property
     def processor(self) -> ProcessorOptions:
@@ -155,11 +151,3 @@ class ContextDict:
         if doc is None:
             raise JsonLdError(ErrorCode.LOADING_REMOTE_CONTEXT_FAILED, iri)
         return RemoteDocument(context_url=None, document_url=iri, document=doc)
-
-    def compiled(self, ctx_iri: str) -> Context:
-        if ctx_iri not in self._compiled:
-            base_ctx = Context(base=self.document_iri)
-            self._compiled[ctx_iri] = process_context(
-                self.processor, base_ctx, ctx_iri, self.document_iri
-            )
-        return self._compiled[ctx_iri]

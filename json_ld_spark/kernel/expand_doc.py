@@ -632,11 +632,8 @@ def _literal_parts(value_object: Mapping[str, Any]) -> tuple[str, Optional[str],
     if isinstance(value, int):
         return (str(value), ty or XSD_INTEGER, None, None)
     if isinstance(value, float):
-        if value == int(value) and abs(value) < 1e15 and ty is None:
-            # canonical xsd:double form per RDF 1.1 canonical mapping
-            lexical = f"{value:E}".replace("E+0", "E").replace("E-0", "E-")
-        else:
-            lexical = f"{value:E}".replace("E+0", "E").replace("E-0", "E-")
+        # canonical xsd:double form per RDF 1.1 canonical mapping
+        lexical = f"{value:E}".replace("E+0", "E").replace("E-0", "E-")
         return (lexical, ty or XSD_DOUBLE, None, None)
     if lang is not None:
         return (str(value), None, lang, direction)

@@ -145,21 +145,11 @@ def canonical_triples(triples, max_perms: int = 5040):
     return _canonical_core(triples, max_perms)[0]
 
 
-def canonical_label_assignment(triples, max_perms: int = 5040) -> dict:
-    """The ``old label → _:c<i>`` mapping behind :func:`canonical_triples`
-    (the one whose serialization wins the within-class minimization).
-    Relabeling rows through it BEFORE reconstruction makes every
-    downstream artifact — node sort order, list items, fingerprints — a
-    pure function of graph structure, with the same exact-under-
-    ``max_perms`` guarantee (past the cap the intra-class assignment
-    falls back to sorted original labels: deterministic, label-
-    dependent)."""
-    return _canonical_core(triples, max_perms)[1]
-
-
 def canonical_triples_with_assignment(triples, max_perms: int = 5040):
     """Both outputs of the shared core in ONE pass: the canonical form and
-    the winning label mapping. Callers needing both (reconstruct's
+    the winning ``old label → _:c<i>`` mapping (past the ``max_perms`` cap
+    the intra-class assignment falls back to sorted original labels:
+    deterministic, label-dependent). Callers needing both (reconstruct's
     roundtrip check relabels with the mapping and compares against the
     form) must not pay the permutation search twice — it is the dominant
     per-turn cost on the 10^12-turn hot path."""

@@ -1,2 +1,2 @@
 """Pipeline stages: transcript synthesis, triple extraction, entity linking,
-connected-components canonicalization, manifest/resume, end-to-end job."""
+block canonicalization, manifest/resume, end-to-end job."""

@@ -37,9 +37,8 @@ from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
 
-# Largest block ``same_as_edges`` links by default, and the cap
-# ``block_canon`` applies: the closed form equals the CC labels only while
-# the two agree.
+# Largest block ``same_as_edges`` links, and the cap ``block_canon``
+# applies: the closed form equals the CC labels only under one cap.
 _MAX_BLOCK = 64
 
 # The entity-layer tables, as the snapshot state stores them next to the
@@ -88,8 +87,8 @@ def detect_mentions(transcripts: DataFrame) -> DataFrame:
 
     Fully vectorized inside the Arrow batch: ``Series.str.extractall`` runs
     the regex sweep in pandas' C loop and returns one row per match with
-    the originating row index — no per-row Python ``finditer`` loop (the
-    round-2 shape), which matters at 10^12 turns."""
+    the originating row index — no per-row Python ``finditer`` loop,
+    which matters at 10^12 turns."""
     src = transcripts.select("conv_id", "turn_idx", "text")
     empty = pd.DataFrame(
         {
@@ -170,9 +169,7 @@ def link_mentions(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     )
 
 
-def same_as_edges(
-    entities: DataFrame, max_block: int = _MAX_BLOCK
-) -> DataFrame:
+def same_as_edges(entities: DataFrame) -> DataFrame:
     """Same-entity edges: IRIs sharing a blocking key are duplicates of one
     canonical entity (fixture semantics: ctx/base emits
     ``http://ex.org/d/person-N`` for the same entity as
@@ -180,7 +177,7 @@ def same_as_edges(
 
     Instead of an O(k²) pairwise self-join per block, each block links all
     members to the block's lexicographic minimum — a star, computed with
-    one groupBy + one join. ``max_block`` guards against degenerate giant
+    one groupBy + one join. ``_MAX_BLOCK`` guards against degenerate giant
     blocks (a block bigger than the cap is almost certainly a bad key, not
     one entity).
 
@@ -190,7 +187,7 @@ def same_as_edges(
     sized = entities.groupBy("block_key").agg(
         F.min("entity_iri").alias("canon_candidate"),
         F.count("*").alias("k"),
-    ).where((F.col("k") > 1) & (F.col("k") <= max_block))
+    ).where((F.col("k") > 1) & (F.col("k") <= _MAX_BLOCK))
     return (
         entities.join(sized, "block_key")
         .where(F.col("entity_iri") != F.col("canon_candidate"))
@@ -270,32 +267,26 @@ def rewrite_edges(triples: DataFrame, canon: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize(
-    triples: DataFrame, materialize: bool = False
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def canonicalize(triples: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full entity layer: returns (canon, nodes, edges).
 
     canon:     (iri, canon_id)   — entity IRI → canonical id (CANON_SCHEMA)
     nodes:     (canon_id, iri, kind, n_aliases)
     edges:     (src_canon, pred, dst_canon, provenance)
 
-    ``triples`` is consumed twice (entity dictionary + canonical rewrite).
-    In the job path the input is already a materialized parquet table
-    (manifest.read_triples), so re-reading is cheap — keep the default.
-    When the input is a live extraction plan (the driver's kg_nodes /
-    kg_edges queries), pass ``materialize=True`` to localCheckpoint it
-    once instead of running the Python kernel per consumer.
+    ``triples`` is read twice (entity dictionary + canonical rewrite), and
+    both skip its quarantine rows. In the job path it is a parquet table
+    (manifest.read_triples), so re-reading is cheap; a caller holding a
+    live extraction plan passes ``triples.localCheckpoint()`` so the
+    Python kernel runs once, not per consumer.
     """
-    clean = triples.where(F.col("error_code").isNull())
-    if materialize:
-        clean = clean.localCheckpoint()
     # read three times: the nodes aggregation and both rewrite joins
     canon = (
-        block_canon(entity_dictionary(clean))
+        block_canon(entity_dictionary(triples))
         .select(F.col("entity_iri").alias("iri"), "canon_id")
         .localCheckpoint()
     )
-    return canon, derive_nodes(canon), rewrite_edges(clean, canon)
+    return canon, derive_nodes(canon), rewrite_edges(triples, canon)
 
 
 def incremental_canonicalize(
@@ -361,7 +352,7 @@ def incremental_canonicalize(
     is (iri, canon_id) for every known entity.
     """
     genuinely_new = (
-        entity_dictionary(new_triples.where(F.col("error_code").isNull()))
+        entity_dictionary(new_triples)
         .join(prev_entities.select("entity_iri"), "entity_iri", "left_anti")
         .localCheckpoint()
     )

@@ -44,6 +44,7 @@ from pyspark.sql.types import (
 from ..contexts import ContextDict
 from ..kernel import (
     Context,
+    ErrorCode,
     JsonLdError,
     ProcessorOptions,
     cleanup_null_markers,
@@ -104,6 +105,11 @@ def iter_turn_documents(text, tool) -> list[str]:
     if isinstance(text, str) and "<jsonld>" in text:
         raws.extend(_INLINE_RE.findall(text))
     return raws
+
+
+def _not_json(literal: str):
+    """``json.loads``' ``parse_constant``: NaN and ±Infinity are not JSON."""
+    raise ValueError(f"{literal} is not a JSON value")
 
 
 def _fingerprint(value) -> str:
@@ -172,10 +178,12 @@ class TurnExpander:
 
     def expand_raw(self, raw: str) -> Optional[tuple[Context, list]]:
         """THE document step: ``(active context, expanded form)`` of one raw
-        document string, or None when it is not JSON. Raises JsonLdError."""
+        document string, or None when it is not JSON (NaN/Infinity literals
+        and nesting too deep to parse included). Raises JsonLdError, or
+        RecursionError for nesting too deep to expand."""
         try:
-            doc = json.loads(raw)
-        except ValueError:  # json.JSONDecodeError is a ValueError
+            doc = json.loads(raw, parse_constant=_not_json)
+        except (ValueError, RecursionError):  # JSONDecodeError is a ValueError
             return None
         active, body = self._context_of(doc)
         return active, expand_document(self.processor, active, body)
@@ -201,6 +209,8 @@ class TurnExpander:
                 )
         except JsonLdError as e:
             result = ((None,) * 8 + (e.code.value,),)
+        except RecursionError:
+            result = ((None,) * 8 + (ErrorCode.UNCATEGORIZED.value,),)
         if len(self._doc_cache) >= self.DOC_CACHE_MAX:
             # FIFO eviction: drop the oldest insertion (dict is ordered)
             self._doc_cache.pop(next(iter(self._doc_cache)))
@@ -218,16 +228,16 @@ class TurnExpander:
 
 def _turn_docs(expander: TurnExpander, text, tool, fn) -> Iterator[tuple[int, object]]:
     """``(doc_idx, fn(active, expanded))`` per document of one turn. A
-    document that is not JSON, or raises JsonLdError in expansion or in
-    ``fn``, is skipped (quarantine is extract_triples' job) but keeps its
-    index."""
+    document that is not JSON, or raises JsonLdError or RecursionError in
+    expansion or in ``fn``, is skipped (quarantine is extract_triples' job)
+    but keeps its index."""
     for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
         try:
             step = expander.expand_raw(raw)
             if step is None:
                 continue
             value = fn(*step)
-        except JsonLdError:
+        except (JsonLdError, RecursionError):
             continue
         yield doc_idx, value
 

@@ -9,19 +9,19 @@ idempotent: killed after bucket k's manifest commit, a re-run processes only
 pending buckets and the final triples table is identical
 (tests/test_pipeline_resume.py).
 
-Scale shape (the round-1 design rescanned the full input once per bucket —
-2 × n_buckets source scans and zero inter-bucket parallelism; at 100 TB
-that is the difference between 1 pass and 32):
+Scale shape (a job per bucket would rescan the full input once per bucket
+and extract the buckets one after another; at 100 TB that is the
+difference between 1 pass and 32):
 
 1. ONE extraction job writes every pending bucket via
    ``partitionBy("bucket")`` with dynamic partition overwrite — all buckets
    extract in parallel, the source is scanned exactly once, and committed
    buckets' directories are never touched. Per-bucket input-row counts ride
-   the same action as ``observe()`` counters (round 2 paid a separate count
-   job — a second full source scan).
+   the same action as ``observe()`` counters, so counting them costs no
+   second source scan.
 2. ONE grouped metrics job aggregates clean/error/checksum for every
-   written bucket directory (round 2 ran 3 jobs per bucket,
-   driver-serially — the job-launch-latency wall at 10^3+ buckets).
+   written bucket directory (jobs per bucket, run driver-serially, would
+   hit the job-launch-latency wall at 10^3+ buckets).
 3. A driver-side loop then writes only the tiny atomic manifest rows —
    each a one-row ``pyarrow.parquet`` write committed by ``atomic_write``
    on the driver, no Spark job (manifest.py; on a real deployment the
@@ -89,10 +89,10 @@ def run_extraction_job(
 
         # per-bucket input-row counts ride the extraction action itself via
         # observe() — map-side conditional counters collected while the write
-        # job runs, so the source is scanned exactly ONCE (the round-2 shape
-        # paid a separate count job = a second full scan). One counter per
-        # pending bucket is fine for the Iceberg-typical 16–1024 bucket range;
-        # a 10^4+ bucket spec would batch commits into counter groups instead.
+        # job runs, so the source is scanned exactly ONCE (a separate count
+        # job would be a second full scan). One counter per pending bucket
+        # is fine for the Iceberg-typical 16–1024 bucket range; a 10^4+
+        # bucket spec would batch commits into counter groups instead.
         obs = Observation(f"input_rows_{run_id}")
         bucketed = bucketed.observe(
             obs,
@@ -153,7 +153,8 @@ def run_snapshot_pipeline(
     same snapshot, so appends committed between crash and resume cannot
     leak into this run's output (north rule: resume idempotently from the
     last committed snapshot). A later fresh run (new warehouse) picks up
-    the newer snapshot."""
+    the newer snapshot. Returns the triples, nodes and edges, as
+    ``run_extraction_job(..., with_entity_layer=True)`` does."""
     manifest = ParquetManifest(spark, warehouse, n_buckets)
     pinned = manifest.pinned_snapshot()
     if pinned is None:
@@ -163,7 +164,8 @@ def run_snapshot_pipeline(
         pinned = str(current)
     transcripts = store.read(int(pinned))
     return run_extraction_job(
-        spark, transcripts, warehouse, n_buckets, snapshot_id=pinned
+        spark, transcripts, warehouse, n_buckets, with_entity_layer=True,
+        snapshot_id=pinned,
     )
 
 

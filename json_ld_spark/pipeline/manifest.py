@@ -118,15 +118,14 @@ class ParquetManifest:
         """Per-bucket commit metrics (clean count, error count, checksum) in
         ONE grouped aggregate over all the buckets' written directories.
 
-        The round-2 shape ran 3 separate Spark jobs per bucket
-        (clean-count, error-count, checksum), driver-serially — at a
-        realistic 10^3–10^4 buckets that is the job-launch-latency wall.
-        Here the partition-discovered ``bucket`` column groups the whole
-        sweep into one job whose result is ≤ n_buckets tiny rows; the
-        manifest-row write (the atomic commit point) stays per-bucket, so
-        crash/resume granularity is unchanged. Buckets with no directory
-        (zero emitted rows) simply have no entry — callers commit them
-        with zero metrics."""
+        Three Spark jobs per bucket (clean-count, error-count, checksum),
+        run driver-serially, would hit the job-launch-latency wall at a
+        realistic 10^3–10^4 buckets. Here the partition-discovered
+        ``bucket`` column groups the whole sweep into one job whose result
+        is ≤ n_buckets tiny rows; the manifest-row write (the atomic commit
+        point) stays per-bucket, so crash/resume granularity is unchanged.
+        Buckets with no directory (zero emitted rows) simply have no entry
+        — callers commit them with zero metrics."""
         dirs = [
             d
             for d in (

@@ -96,10 +96,11 @@ def reconstruct_turn_stats(rows: list[dict]) -> tuple:
     Rows are relabeled to their canonical blank labels BEFORE
     reconstruction, so the rebuilt document — node sort order, list
     items, and the md5 fingerprint of its canonical JSON — is a pure
-    function of graph structure (exact under canonical_label_assignment's
-    ``max_perms``; past that cap the assignment is deterministic but
-    label-dependent, so a poison graph can only report a false
-    "changed" in a cross-snapshot diff, never a false "unchanged").
+    function of graph structure (exact under
+    canonical_triples_with_assignment's ``max_perms``; past that cap the
+    assignment is deterministic but label-dependent, so a poison graph
+    can only report a false "changed" in a cross-snapshot diff, never a
+    false "unchanged").
     Renaming structurally (not textually) means a string literal whose
     text starts with "_:" is never touched and cannot collide another
     document's fingerprint."""

@@ -42,12 +42,14 @@ TRANSCRIPT_DDL = (
     "tool string, ts timestamp"
 )
 
+# Files per micro-batch, the event-time lateness bound on ``ts`` and the
+# tumbling window of ``windowed_turn_stats``.
+_MAX_FILES_PER_TRIGGER = 8
+_WATERMARK = "1 hour"
+_WINDOW = "10 minutes"
 
-def stream_transcript_source(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int = 8,
-) -> DataFrame:
+
+def stream_transcript_source(spark: SparkSession, path: str) -> DataFrame:
     """File-based streaming source over transcript parquet drops.
 
     On a real cluster this is ``spark.readStream.format("iceberg")`` with
@@ -59,7 +61,7 @@ def stream_transcript_source(
     """
     return (
         spark.readStream.schema(TRANSCRIPT_DDL)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .option("maxFilesPerTrigger", str(_MAX_FILES_PER_TRIGGER))
         .parquet(path)
     )
 
@@ -67,7 +69,6 @@ def stream_transcript_source(
 def stream_extract_triples(
     transcripts: DataFrame,
     contexts: Optional[ContextDict] = None,
-    watermark: str = "1 hour",
     dedup_within_watermark: bool = True,
 ) -> DataFrame:
     """Streaming plan: watermark → within-watermark turn dedup → kernel.
@@ -76,7 +77,7 @@ def stream_extract_triples(
     never pay kernel CPU twice. Triple-level exact dedup is the batch
     path's per-turn rule inside the kernel, which keeps no state.
     """
-    stream = transcripts.withWatermark("ts", watermark)
+    stream = transcripts.withWatermark("ts", _WATERMARK)
     if dedup_within_watermark:
         stream = stream.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
     # ts must survive for the sink's event-time bookkeeping; the kernel
@@ -84,27 +85,23 @@ def stream_extract_triples(
     return extract_triples(stream, contexts)
 
 
-def windowed_turn_stats(
-    transcripts: DataFrame,
-    window_duration: str = "10 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def windowed_turn_stats(transcripts: DataFrame) -> DataFrame:
     """Tumbling-window incremental aggregation with late-data semantics
     (SURVEY §2 Table B streaming row): per-(window, role) turn counts and
     an HLL distinct-conversation sketch.
 
     The same plan runs batch or streaming. In streaming append mode the
     watermark is the late-data contract: a window emits exactly once, when
-    the watermark passes its end; rows arriving later than ``watermark``
+    the watermark passes its end; rows arriving later than ``_WATERMARK``
     behind max event time are dropped and surface in the query progress as
     ``stateOperators[].numRowsDroppedByWatermark`` — and window state is
-    freed, so state size is bounded by (watermark / window) × |roles|
+    freed, so state size is bounded by (_WATERMARK / _WINDOW) × |roles|
     regardless of stream length. approx_count_distinct's HLL merge is
     order-independent, so stream and batch agree exactly on finalized
     windows (pinned by tests/test_streaming_ingest.py)."""
     return (
-        transcripts.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "role")
+        transcripts.withWatermark("ts", _WATERMARK)
+        .groupBy(F.window("ts", _WINDOW).alias("w"), "role")
         .agg(
             F.count("*").alias("n_turns"),
             F.approx_count_distinct("conv_id").alias("n_convs_approx"),
@@ -124,14 +121,12 @@ def run_windowed_stats_stream(
     source_dir: str,
     sink_dir: str,
     checkpoint_dir: str,
-    window_duration: str = "10 minutes",
-    watermark: str = "1 hour",
     available_now: bool = True,
 ):
     """Drain ``source_dir`` through the windowed aggregation into parquet
     (append mode: only watermark-finalized windows are written)."""
     transcripts = stream_transcript_source(spark, source_dir)
-    stats = windowed_turn_stats(transcripts, window_duration, watermark)
+    stats = windowed_turn_stats(transcripts)
     return _parquet_sink(stats, sink_dir, checkpoint_dir, available_now)
 
 
@@ -194,7 +189,6 @@ def run_stream_to_snapshots_with_change_feed(
     state_dir: str,
     contexts: Optional[ContextDict] = None,
     available_now: bool = True,
-    max_work: int = 400,
 ):
     """Streaming snapshot ingest + per-commit graph-isomorphism change
     feed (the incremental form of ``pipeline/canonical.graph_diff``).
@@ -246,7 +240,7 @@ def run_stream_to_snapshots_with_change_feed(
     )
 
     def feed_and_fingerprints(batch_df, batch_id: int, tag: str) -> None:
-        new_fps = turn_fingerprints(batch_df, max_work=max_work).persist()
+        new_fps = turn_fingerprints(batch_df).persist()
         try:
             old = _latest_fingerprints(spark, fps_root)
             if old is None:  # first commit: diff against empty state
@@ -387,7 +381,6 @@ def run_stream_transcripts_to_snapshots(
     store,
     checkpoint_dir: str,
     available_now: bool = True,
-    max_files_per_trigger: int = 8,
 ):
     """Land RAW transcript micro-batches as atomic snapshot commits — the
     ingest half of the continuously-maintained KG: each drained batch
@@ -398,9 +391,7 @@ def run_stream_transcripts_to_snapshots(
     blocks). Stream and consolidation never share mutable state: the
     snapshot id sequence is the only coupling, which is what makes the
     composition exactly-once end-to-end."""
-    transcripts = stream_transcript_source(
-        spark, source_dir, max_files_per_trigger=max_files_per_trigger
-    )
+    transcripts = stream_transcript_source(spark, source_dir)
     return _snapshot_sink(
         transcripts, store, checkpoint_dir, "transcripts-", available_now
     )

@@ -16,7 +16,7 @@ from json_ld_spark.functions import (
     expand_term_join,
     prefix_suffix_split,
 )
-from json_ld_spark.kernel import expand_iri
+from json_ld_spark.kernel import Context, expand_iri, process_context
 from json_ld_spark.kernel.compact import compact_iri
 from json_ld_spark.kernel.iri import split_prefix
 
@@ -50,9 +50,16 @@ def ctxdict():
     return ContextDict()
 
 
+def _compile(cd, ctx_iri):
+    """The active context ``ctx_iri`` yields over the document base."""
+    return process_context(
+        cd.processor, Context(base=cd.document_iri), ctx_iri, cd.document_iri
+    )
+
+
 @pytest.mark.parametrize("ctx_iri", CTX_IRIS)
 def test_expand_term_col_matches_kernel(spark, ctxdict, ctx_iri):
-    ctx = ctxdict.compiled(ctx_iri)
+    ctx = _compile(ctxdict, ctx_iri)
     proc = ctxdict.processor
     want = {
         v: expand_iri(proc, ctx, v, vocab=True, document_relative=False)
@@ -70,7 +77,7 @@ def test_expand_term_col_matches_kernel(spark, ctxdict, ctx_iri):
 def test_expand_term_join_matches_col(spark, ctxdict, ctx_iri):
     """The broadcast-join realization must agree with the CASE-chain
     realization on every value class (both are pinned to the kernel)."""
-    ctx = ctxdict.compiled(ctx_iri)
+    ctx = _compile(ctxdict, ctx_iri)
     df = spark.createDataFrame([(v,) for v in EXPAND_INPUTS], "v string")
     via_col = {
         r["v"]: r["out"]
@@ -114,7 +121,7 @@ def test_expand_term_join_large_context(spark, ctxdict):
 
 @pytest.mark.parametrize("ctx_iri", CTX_IRIS)
 def test_compact_iri_col_matches_kernel(spark, ctxdict, ctx_iri):
-    ctx = ctxdict.compiled(ctx_iri)
+    ctx = _compile(ctxdict, ctx_iri)
     want = {v: compact_iri(ctx, v, vocab=True) for v in COMPACT_INPUTS}
     df = spark.createDataFrame([(v,) for v in COMPACT_INPUTS], "v string")
     got = {
@@ -130,7 +137,7 @@ def test_expand_compact_roundtrip_on_extracted_triples(spark, ctxdict, sf_dir):
     from json_ld_spark.pipeline.extract import extract_triples
     from json_ld_spark.pipeline.transcripts import synth_transcripts
 
-    ctx = ctxdict.compiled("https://example.org/ctx/prefix")
+    ctx = _compile(ctxdict, "https://example.org/ctx/prefix")
     preds = (
         extract_triples(synth_transcripts(spark, sf_dir))
         .where(F.col("error_code").isNull())

@@ -8,7 +8,7 @@ layers are pinned: expansion→compaction round-trips on the fixture shapes.
 import pytest
 
 from json_ld_spark.contexts import ContextDict
-from json_ld_spark.kernel import expand_document
+from json_ld_spark.kernel import Context, expand_document, process_context
 from json_ld_spark.kernel.compact import compact_document, compact_value
 
 
@@ -17,20 +17,27 @@ def cd():
     return ContextDict()
 
 
+def _compile(cd, ctx_iri):
+    """The active context ``ctx_iri`` yields over the document base."""
+    return process_context(
+        cd.processor, Context(base=cd.document_iri), ctx_iri, cd.document_iri
+    )
+
+
 def _roundtrip(cd, ctx_iri, doc_body):
-    ctx = cd.compiled(ctx_iri)
+    ctx = _compile(cd, ctx_iri)
     expanded = expand_document(cd.processor, ctx, doc_body)
     return compact_document(ctx, expanded)
 
 
 def test_compact_value_typed_id(cd):
-    ctx = cd.compiled("https://example.org/ctx/prefix")
+    ctx = _compile(cd, "https://example.org/ctx/prefix")
     td = ctx.term_definitions["knows"]  # @type: @id
     assert compact_value(ctx, td, {"@id": "http://ex.org/p1"}) == "http://ex.org/p1"
 
 
 def test_compact_value_plain_string(cd):
-    ctx = cd.compiled("https://example.org/ctx/prefix")
+    ctx = _compile(cd, "https://example.org/ctx/prefix")
     td = ctx.term_definitions["name"]
     assert compact_value(ctx, td, {"@value": "Alice"}) == "Alice"
 
@@ -320,7 +327,7 @@ def test_bare_iri_selects_id_typed_term(cd):
     CURIE (WD step 4: type/language value @id when value is null)."""
     from json_ld_spark.kernel.compact import compact_iri
 
-    ctx = cd.compiled("https://example.org/ctx/prefix")
+    ctx = _compile(cd, "https://example.org/ctx/prefix")
     assert compact_iri(ctx, "http://schema.org/knows", vocab=True) == "knows"
 
 
@@ -431,7 +438,7 @@ def test_compact_to_relative_document(cd):
     from json_ld_spark.kernel import normalize_expanded
     from json_ld_spark.kernel.model import Context
 
-    ctx = cd.compiled("https://example.org/ctx/base")
+    ctx = _compile(cd, "https://example.org/ctx/base")
     assert ctx.base, "fixture context must carry @base for this test"
     doc = {
         "@id": f"{ctx.base}person-7",

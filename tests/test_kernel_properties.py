@@ -27,11 +27,18 @@ _PATH = st.text(string.ascii_lowercase + string.digits + "-_", min_size=0, max_s
 _LOCAL = st.text(string.ascii_lowercase + string.digits + "-_.", min_size=0, max_size=12)
 
 
+def _compile(cd, ctx_iri):
+    """The active context ``ctx_iri`` yields over the document base."""
+    return process_context(
+        cd.processor, Context(base=cd.document_iri), ctx_iri, cd.document_iri
+    )
+
+
 @settings(max_examples=200, deadline=None)
 @given(host=_HOST, path=_PATH)
 def test_expand_idempotent_on_absolute_iris(host, path):
     cd = ContextDict()
-    ctx = cd.compiled("https://example.org/ctx/prefix")
+    ctx = _compile(cd, "https://example.org/ctx/prefix")
     iri = f"http://{host}/{path}"
     once = expand_iri(cd.processor, ctx, iri, vocab=True, document_relative=False)
     twice = expand_iri(cd.processor, ctx, once, vocab=True, document_relative=False)
@@ -43,7 +50,7 @@ def test_expand_idempotent_on_absolute_iris(host, path):
 @given(word=st.text(string.ascii_letters, min_size=1, max_size=10))
 def test_keyword_form_always_null(word):
     cd = ContextDict()
-    ctx = cd.compiled("https://example.org/ctx/prefix")
+    ctx = _compile(cd, "https://example.org/ctx/prefix")
     value = "@" + word
     got = expand_iri(cd.processor, ctx, value, vocab=True, document_relative=False)
     if value in KEYWORDS:

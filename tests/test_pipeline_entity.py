@@ -465,7 +465,7 @@ def test_incremental_no_forced_broadcast(spark, sf_dir):
 
 def test_incremental_block_cap_dissolution(spark):
     """The self-review catch: an append pushing a block past
-    same_as_edges(max_block) DISSOLVES the component (no star edges → every
+    same_as_edges' block cap DISSOLVES the component (no star edges → every
     member its own canon). The old representative keeps its canon id
     verbatim, yet all its edge groups are stale — without the closure over
     stale components its triples (and triples POINTING at it) would never

@@ -76,7 +76,9 @@ def test_failing_documents_skip_but_keep_their_index(spark):
     """Every per-turn operator shares one document step: a document that
     is not JSON or fails expansion is skipped by the shape operators
     (keeping the doc_idx of the ones after it) and quarantined by
-    extract_triples."""
+    extract_triples. NaN/Infinity literals (which Python's json accepts)
+    and an array nested too deep to parse are not JSON; nodes nested too
+    deep to expand are an uncategorized error. None aborts the task."""
     from json_ld_spark.kernel import JsonLdError
     from json_ld_spark.pipeline.extract import (
         TaskMetricsParam,
@@ -91,6 +93,10 @@ def test_failing_documents_skip_but_keep_their_index(spark):
         "@context": {"name": "http://schema.org/name"},
         "@id": "http://ex.org/alice", "name": "Alice",
     })
+    non_finite = [
+        '{"@id": "http://ex.org/n", "http://ex.org/v": %s}' % c
+        for c in ("NaN", "Infinity", "-Infinity")
+    ]
     rows = [
         ("c1", 0, "bad <jsonld>{not json}</jsonld>", None),
         ("c1", 1, "ok", bad_vocab),
@@ -99,6 +105,13 @@ def test_failing_documents_skip_but_keep_their_index(spark):
         ("c1", 3, f"<jsonld>{bad_vocab}</jsonld> <jsonld>{good}</jsonld>",
          "{not json}"),
         ("c1", 4, "no documents here", None),
+        # [deep array, NaN, Infinity, -Infinity, good doc]
+        ("c1", 5, "".join(f"<jsonld>{d}</jsonld>" for d in non_finite)
+         + f"<jsonld>{good}</jsonld>", "[" * 100_000 + "]" * 100_000),
+        # [600 nested nodes, good doc]
+        ("c1", 6, f"<jsonld>{good}</jsonld>",
+         '{"http://ex.org/p": ' * 600 + '{"@id": "http://ex.org/leaf"}'
+         + "}" * 600),
     ]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, text string, tool string"
@@ -106,15 +119,20 @@ def test_failing_documents_skip_but_keep_their_index(spark):
 
     for op in (frame_turn_entities, frame_compact_turn_entities):
         got = [(r.turn_idx, r.doc_idx, r.root_id) for r in op(df).collect()]
-        assert got == [(3, 2, "http://ex.org/alice")], op.__name__
+        assert got == [
+            (3, 2, "http://ex.org/alice"),
+            (5, 4, "http://ex.org/alice"),
+            (6, 1, "http://ex.org/alice"),
+        ], op.__name__
     got = [(r.turn_idx, r.doc_idx, r.roundtrip_ok)
            for r in compact_turn_docs(df).collect()]
-    assert got == [(3, 2, 1)]
+    assert got == [(3, 2, 1), (5, 4, 1), (6, 1, 1)]
 
     stats = {r.turn_idx: tuple(r)[2:] for r in flatten_turn_stats(df).collect()}
-    assert set(stats) == {0, 1, 2, 3}  # one row per candidate turn
+    assert set(stats) == {0, 1, 2, 3, 5, 6}  # one row per candidate turn
     assert stats[0] == stats[1] == stats[2] == (0, 0, 0, 0)
     assert stats[3][0] == 1 and stats[3][1] >= 1
+    assert stats[5] == stats[6] == stats[3]  # the good doc alone
 
     acc = spark.sparkContext.accumulator([], TaskMetricsParam())
     out = extract_triples(df, task_metrics_acc=acc).collect()
@@ -126,10 +144,14 @@ def test_failing_documents_skip_but_keep_their_index(spark):
         (3, ""),
         (3, "invalid vocab mapping"),
         (3, "loading document failed"),
+        (5, ""),
+        (5, "loading document failed"),  # 4 equal rows, deduped per turn
+        (6, ""),
+        (6, "uncategorized error"),
     ]
     samples = acc.value
-    assert sum(s[0] for s in samples) == 4  # candidate turns
-    assert sum(s[4] + s[5] for s in samples) == 6  # documents
+    assert sum(s[0] for s in samples) == 6  # candidate turns
+    assert sum(s[4] + s[5] for s in samples) == 13  # documents
 
     # the compacting frame compiles on the driver: an invalid frame
     # context fails when the operator is called, not inside a task

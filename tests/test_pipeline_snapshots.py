@@ -170,9 +170,9 @@ def test_stream_commits_snapshots_exactly_once(spark, sf_dir, tmp_path):
 
 def test_resume_pins_input_snapshot(spark, sf_dir, tmp_path, crash_commit):
     """Kill after 2 buckets, append NEW data to the store, resume: the
-    resumed run must re-read the pinned snapshot, so the final triples
-    equal an uninterrupted run over snapshot 1 — the new append is
-    invisible until a fresh run starts."""
+    resumed run must re-read the pinned snapshot, so the final triples,
+    nodes and edges equal an uninterrupted run over snapshot 1 — the new
+    append is invisible until a fresh run starts."""
     store = ParquetSnapshotStore(spark, str(tmp_path / "store3"))
     transcripts = synth_transcripts(spark, sf_dir)
     store.append(transcripts)
@@ -180,6 +180,12 @@ def test_resume_pins_input_snapshot(spark, sf_dir, tmp_path, crash_commit):
     # uninterrupted baseline over snapshot 1
     base = run_snapshot_pipeline(spark, store, str(tmp_path / "w_base"), 4)
     golden = _sorted_triples(base.triples)
+
+    def nodes_edges(res):
+        return [sorted(map(tuple, df.collect())) for df in (res.nodes, res.edges)]
+
+    golden_kg = nodes_edges(base)
+    assert all(golden_kg)  # the entity layer ran: nodes and edges exist
 
     # crash inside the third bucket commit
     w = str(tmp_path / "w_pin")
@@ -197,6 +203,7 @@ def test_resume_pins_input_snapshot(spark, sf_dir, tmp_path, crash_commit):
 
     resumed = run_snapshot_pipeline(spark, store, w, 4)
     assert _sorted_triples(resumed.triples) == golden  # no late- rows
+    assert nodes_edges(resumed) == golden_kg
     manifest = ParquetManifest(spark, w, 4).read_manifest()
     sids = {r.snapshot_id for r in manifest.collect()}
     assert sids == {"1"}
@@ -255,7 +262,7 @@ def test_incremental_pipeline_over_snapshots(spark, sf_dir, tmp_path):
     assert inc.buckets_processed == 1
 
     full_triples = extract_triples(store.read(), dedup_turns=True)
-    _, full_nodes, full_edges = canonicalize(full_triples, materialize=True)
+    _, full_nodes, full_edges = canonicalize(full_triples.localCheckpoint())
 
     def rows(df, cols):
         return sorted(tuple(r) for r in df.select(*cols).collect())
@@ -359,7 +366,7 @@ def test_multi_append_crash_resume_matches_full_build(
         assert res.buckets_processed == 1
 
     full_triples = extract_triples(store.read(), dedup_turns=True)
-    _, full_nodes, full_edges = canonicalize(full_triples, materialize=True)
+    _, full_nodes, full_edges = canonicalize(full_triples.localCheckpoint())
 
     def rows(df, cols):
         return sorted(tuple(r) for r in df.select(*cols).collect())

@@ -70,13 +70,13 @@ def test_windowed_stats_stream_matches_batch(spark, sf_dir, stream_dirs):
 
     q = run_windowed_stats_stream(
         spark, stream_dirs["source"], stream_dirs["sink"], stream_dirs["ckpt"],
-        window_duration="10 minutes", watermark="1 hour", available_now=True,
+        available_now=True,
     )
     q.awaitTermination(300)
     assert not q.isActive
 
     got = spark.read.parquet(stream_dirs["sink"])
-    batch_all = windowed_turn_stats(transcripts, "10 minutes", "1 hour")
+    batch_all = windowed_turn_stats(transcripts)
     # every emitted window matches the batch computation exactly
     assert got.exceptAll(batch_all).count() == 0
     # coverage: at least the strictly-closed windows were emitted
@@ -170,7 +170,7 @@ def test_stream_feeds_incremental_entity_pipeline(spark, sf_dir, tmp_path):
     assert inc.buckets_processed == 1
 
     full_triples = extract_triples(store.read(), dedup_turns=True)
-    _, full_nodes, full_edges = canonicalize(full_triples, materialize=True)
+    _, full_nodes, full_edges = canonicalize(full_triples.localCheckpoint())
 
     def rows(df, cols):
         return sorted(tuple(r) for r in df.select(*cols).collect())

@@ -90,14 +90,12 @@ def main() -> None:
 
     t0 = time.perf_counter()
     if args.snapshot_store:
-        from json_ld_spark.pipeline.entity import canonicalize
         from json_ld_spark.pipeline.snapshots import ParquetSnapshotStore
 
         store = ParquetSnapshotStore(spark, args.snapshot_store)
         res = run_snapshot_pipeline(
             spark, store, args.warehouse, n_buckets=args.n_buckets
         )
-        _, res.nodes, res.edges = canonicalize(res.triples)
     else:
         from json_ld_spark.pipeline.transcripts import synth_transcripts
 
