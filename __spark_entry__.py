@@ -790,7 +790,7 @@ def _kg_nodes_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     NB for bench readers: this is an end-to-end JOB benchmark, not an
     operator microbenchmark — it runs TWO full pipeline executions
     (bootstrap + incremental) including crash-atomic state persistence
-    (5 tables × 2 commits), which is why it is the suite's most expensive
+    (4 tables × 2 commits), which is why it is the suite's most expensive
     entry. The operator-level cost of the incremental path itself is the
     point of the design: O(delta + affected blocks), pinned by the
     equality tests."""
@@ -1646,7 +1646,7 @@ def jobs() -> dict[str, str]:
         "kg_nodes_incremental": (
             "two full pipeline executions (bootstrap + incremental "
             "append) including crash-atomic state persistence "
-            "(5 tables x 2 commits)"
+            "(4 tables x 2 commits)"
         ),
     }
 

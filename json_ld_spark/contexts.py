@@ -15,22 +15,9 @@ exercises a distinct reference algorithm branch (citations inline).
 
 from __future__ import annotations
 
-from typing import Mapping, NamedTuple, Optional
+from typing import Mapping, Optional
 
-from .kernel import (
-    ErrorCode,
-    JsonLdError,
-    LoadDocumentOptions,
-    ProcessorOptions,
-)
-
-
-class RemoteDocument(NamedTuple):
-    """Mirror of reference ``RemoteDocument`` (src/remote.rs:112-120)."""
-
-    context_url: Optional[str]
-    document_url: str
-    document: dict
+from .kernel import ProcessorOptions
 
 # ctx_iri → context *document* (a JSON object containing "@context").
 FIXTURE_CONTEXTS: dict[str, dict] = {
@@ -131,23 +118,3 @@ class ContextDict:
         return ProcessorOptions(
             document_iri=self.document_iri, context_loader=self.raw
         )
-
-    def load(
-        self, iri: str, options: Optional[LoadDocumentOptions] = None
-    ) -> RemoteDocument:
-        """``LoadRemoteDocument::load`` surface (src/remote.rs:39-109):
-        dictionary lookup honoring the caching contract trivially (the dict
-        IS the cache; a context is never re-dereferenced, :29-38), raising
-        the spec error on a miss (src/error.rs:196-198).
-
-        ``options`` (extract_all_scripts / profile / request_profile) are
-        accepted for API parity but have no observable effect here: they
-        only matter for HTML script extraction and HTTP content
-        negotiation, and this loader is offline by design — the same
-        reason the reference's own remote path is unreachable (quirk R1).
-        """
-        _ = options or LoadDocumentOptions()
-        doc = self.raw.get(iri)
-        if doc is None:
-            raise JsonLdError(ErrorCode.LOADING_REMOTE_CONTEXT_FAILED, iri)
-        return RemoteDocument(context_url=None, document_url=iri, document=doc)

@@ -23,6 +23,8 @@ with obj_kind ∈ {iri, bnode, literal}; graph is None for the default graph.
 from __future__ import annotations
 
 import json
+import math
+from decimal import Decimal
 from typing import Any, Mapping, Optional
 
 from .context_processing import expand_iri, process_context
@@ -629,15 +631,33 @@ def _literal_parts(value_object: Mapping[str, Any]) -> tuple[str, Optional[str],
         )
     if isinstance(value, bool):
         return ("true" if value else "false", ty or XSD_BOOLEAN, None, None)
-    if isinstance(value, int):
-        return (str(value), ty or XSD_INTEGER, None, None)
-    if isinstance(value, float):
-        # canonical xsd:double form per RDF 1.1 canonical mapping
-        lexical = f"{value:E}".replace("E+0", "E").replace("E-0", "E-")
-        return (lexical, ty or XSD_DOUBLE, None, None)
+    if isinstance(value, (int, float)):
+        # JSON-LD 1.1 toRdf: a number with a fractional part, of magnitude
+        # >= 1e21 or typed xsd:double is an xsd:double, any other number
+        # an xsd:integer (5.0 → "5")
+        if (ty == XSD_DOUBLE or abs(value) >= 1e21
+                or not float(value).is_integer()):
+            return (_canonical_double(value), ty or XSD_DOUBLE, None, None)
+        return (str(int(value)), ty or XSD_INTEGER, None, None)
     if lang is not None:
         return (str(value), None, lang, direction)
     return (str(value), ty or XSD_STRING, None, direction)
+
+
+def _canonical_double(value: float | int) -> str:
+    """The canonical xsd:double form: the shortest mantissa that round-trips,
+    one digit before the point, an exponent without "+" or leading zeros
+    (1.5 → "1.5E0", 1e21 → "1.0E21"); past the double range, ±INF."""
+    try:
+        value = float(value)
+    except OverflowError:  # an integer past the double range
+        value = math.inf if value > 0 else -math.inf
+    if not math.isfinite(value):
+        return "NaN" if math.isnan(value) else "INF" if value > 0 else "-INF"
+    mantissa, _, exp = f"{Decimal(repr(value)).normalize():E}".partition("E")
+    if "." not in mantissa:
+        mantissa += ".0"
+    return f"{mantissa}E{int(exp)}"
 
 
 def _emit_object(

@@ -98,10 +98,11 @@ class LoadDocumentOptions:
     """Loader options — src/remote.rs:49-109 (WD §loaddocumentoptions).
 
     ``extract_all_scripts`` / ``profile`` / ``request_profile`` with the
-    reference's defaults (all unset). Consumed by ContextDict.load(); the
-    dictionary-backed loader records but never acts on them, matching the
-    reference where the only code path that would (HTML extraction / HTTP
-    Accept headers) sits behind the unreachable remote path (quirk R1).
+    reference's defaults (all unset). No loader here takes them: the
+    dictionary lookup in ``context_processing._process_remote_context``
+    has no use for them, matching the reference where the only code path
+    that would (HTML extraction / HTTP Accept headers) sits behind the
+    unreachable remote path (quirk R1).
     """
 
     __slots__ = ("extract_all_scripts", "profile", "request_profile")

@@ -102,8 +102,8 @@ def minhash_lsh_pairs(
     10^9 docs one degenerate band (e.g. a boilerplate-dominated signature)
     is a job-killer. Buckets past the cap are dropped entirely; a bucket
     that large is a boilerplate cluster, not a near-dup candidate set worth
-    pairwise expansion (mirror of same_as_edges(max_block), entity.py). The
-    DuckDB oracle applies the identical cap.
+    pairwise expansion (mirror of the ``_MAX_BLOCK`` cap of same_as_edges,
+    entity.py). The DuckDB oracle applies the identical cap.
     """
     assert n_hashes % n_bands == 0
     rows = n_hashes // n_bands

@@ -52,12 +52,6 @@ CANON_SCHEMA = StructType([
     StructField("iri", StringType()),
     StructField("canon_id", StringType()),
 ])
-NODE_SCHEMA = StructType([
-    StructField("canon_id", StringType()),
-    StructField("iri", StringType()),
-    StructField("kind", StringType()),
-    StructField("n_aliases", LongType()),
-])
 EDGE_SCHEMA = StructType([
     StructField("src_canon", StringType()),
     StructField("pred", StringType()),
@@ -295,7 +289,7 @@ def incremental_canonicalize(
     prev_entities: DataFrame,
     prev_canon: DataFrame,
     prev_edges: DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Incremental entity layer for snapshot appends: canonicalize ONLY the
     blocks a genuinely-new entity touches and rewrite ONLY the triples an
     affected canon touches, instead of re-labelling every entity and
@@ -348,15 +342,14 @@ def incremental_canonicalize(
     pins that a disabled broadcast threshold yields a broadcast-free plan
     with unchanged results).
 
-    Returns ``(entities, canon_full, nodes, edges)`` where ``canon_full``
-    is (iri, canon_id) for every known entity.
+    Returns ``(canon, nodes, edges)`` like ``canonicalize``, where
+    ``canon`` is (iri, canon_id) for every known entity.
     """
     genuinely_new = (
         entity_dictionary(new_triples)
         .join(prev_entities.select("entity_iri"), "entity_iri", "left_anti")
         .localCheckpoint()
     )
-    entities = prev_entities.unionByName(genuinely_new)
     affected_keys = F.broadcast(genuinely_new.select("block_key").distinct())
 
     prev_aff = prev_canon.select(
@@ -433,4 +426,4 @@ def incremental_canonicalize(
         .groupBy("src_canon", "pred", "dst_canon")
         .agg(F.sum("provenance").alias("provenance"))
     )
-    return entities, canon_full, derive_nodes(canon_full), edges
+    return canon_full, derive_nodes(canon_full), edges

@@ -45,8 +45,8 @@ from pyspark.sql import functions as F
 
 from ..contexts import ContextDict
 from .entity import (
-    CANON_SCHEMA, EDGE_SCHEMA, ENTITY_SCHEMA, NODE_SCHEMA,
-    canonicalize, entity_local_name, incremental_canonicalize,
+    CANON_SCHEMA, EDGE_SCHEMA, ENTITY_SCHEMA, canonicalize, derive_nodes,
+    entity_local_name, incremental_canonicalize,
 )
 from .extract import TRIPLE_SCHEMA, extract_triples
 from .manifest import ParquetManifest, bucket_of
@@ -173,7 +173,7 @@ def run_snapshot_pipeline(
 # table per name under warehouse/entity_state/v<N>/, with its schema.
 STATE_SCHEMAS = {
     "triples": TRIPLE_SCHEMA, "entities": ENTITY_SCHEMA,
-    "canon": CANON_SCHEMA, "nodes": NODE_SCHEMA, "edges": EDGE_SCHEMA,
+    "canon": CANON_SCHEMA, "edges": EDGE_SCHEMA,
 }
 
 
@@ -220,7 +220,8 @@ def run_incremental_snapshot_pipeline(
     lives under ``warehouse/entity_state``; its ``state.json`` pointer
     commits through ``snapshots.atomic_write``, the same commit step as
     the manifest rows and the snapshot log. ``read_entity_state`` reads
-    the state back without a Spark job.
+    the state back without a Spark job. Nodes are not stored: the result
+    derives them from ``canon``, as the full build does.
 
     At 10^12 turns this turns a snapshot append from "re-label every entity
     and run two rewrite joins over every triple" into O(delta + affected
@@ -234,38 +235,13 @@ def run_incremental_snapshot_pipeline(
     if current is None:
         raise ValueError("snapshot store is empty")
     meta = _state_meta(state_dir)
-    cur_version = meta["version"] if meta else 0
-
-    def _commit_state(tables: dict, snapshot_id) -> None:
-        # crash-atomic versioned commit: the ENTIRE new state lands under a
-        # fresh v<N+1> directory while the previous version stays intact
-        # (the new DataFrames are lazy plans READING the old state), then
-        # ONE atomic_write of state.json — the single commit point — flips
-        # the pointer. A crash anywhere before the pointer swap leaves v<N>
-        # authoritative and v<N+1> an invisible orphan, so the
-        # next run re-applies the delta against the OLD state exactly once
-        # (no duplicated triples / double-counted provenance, unlike a
-        # dir-by-dir rename sequence). Old versions are pruned only after
-        # the swap, best-effort.
-        new_version = cur_version + 1
-        for name in STATE_SCHEMAS:
-            tables[name].write.mode("overwrite").parquet(
-                os.path.join(state_dir, f"v{new_version}", name)
-            )
-        pointer = {"snapshot_id": snapshot_id, "version": new_version}
-        atomic_write(
-            meta_path, lambda fh: fh.write(json.dumps(pointer).encode())
-        )
-        for entry in os.listdir(state_dir):
-            if entry.startswith("v") and entry != f"v{new_version}":
-                shutil.rmtree(os.path.join(state_dir, entry), ignore_errors=True)
-
     run_id = uuid.uuid4().hex[:12]
 
     def _result(processed: int) -> JobResult:
         state = read_entity_state(spark, warehouse)
         return JobResult(
-            run_id, processed, state["triples"], state["nodes"], state["edges"]
+            run_id, processed, state["triples"],
+            derive_nodes(state["canon"]), state["edges"],
         )
 
     if meta is None:
@@ -276,35 +252,50 @@ def run_incremental_snapshot_pipeline(
         triples = extract_triples(
             store.read(current), contexts, dedup_turns=True
         ).localCheckpoint()
-        canon, nodes, edges = canonicalize(triples)
-        # one canon row per entity: the dictionary is its IRI column
-        entities = canon.select(
-            F.col("iri").alias("entity_iri"),
-            entity_local_name(F.col("iri")).alias("block_key"),
-        )
-        _commit_state(
-            {"triples": triples, "entities": entities, "canon": canon,
-             "nodes": nodes, "edges": edges},
-            current,
-        )
-        return _result(1)
-
-    last = meta["snapshot_id"]
-    if current == last:
+        canon, _, edges = canonicalize(triples)
+    elif current == meta["snapshot_id"]:
         return _result(0)
+    else:
+        prev = read_entity_state(spark, warehouse)
+        new_triples = extract_triples(
+            store.read_delta(meta["snapshot_id"], current), contexts,
+            dedup_turns=True,
+        ).localCheckpoint()
+        canon, _, edges = incremental_canonicalize(
+            prev["triples"], new_triples,
+            prev["entities"], prev["canon"], prev["edges"],
+        )
+        triples = prev["triples"].unionByName(new_triples)
 
-    prev = read_entity_state(spark, warehouse)
-    new_triples = extract_triples(
-        store.read_delta(last, current), contexts, dedup_turns=True
-    ).localCheckpoint()
-    entities, canon, nodes, edges = incremental_canonicalize(
-        prev["triples"], new_triples,
-        prev["entities"], prev["canon"], prev["edges"],
+    # one canon row per entity: the dictionary is its IRI column. It is
+    # stored only because the benchmark's append probe reads it (ROADMAP
+    # item 2); canon already implies it.
+    entities = canon.select(
+        F.col("iri").alias("entity_iri"),
+        entity_local_name(F.col("iri")).alias("block_key"),
     )
-    _commit_state(
-        {"triples": prev["triples"].unionByName(new_triples),
-         "entities": entities, "canon": canon, "nodes": nodes,
-         "edges": edges},
-        current,
-    )
+    tables = {
+        "triples": triples, "entities": entities, "canon": canon,
+        "edges": edges,
+    }
+    # crash-atomic versioned commit: the ENTIRE new state lands under a
+    # fresh v<N+1> directory while the previous version stays intact (the
+    # new DataFrames are lazy plans READING the old state), then ONE
+    # atomic_write of state.json — the single commit point — flips the
+    # pointer. A crash anywhere before the pointer swap leaves v<N>
+    # authoritative and v<N+1> an invisible orphan, so the next run
+    # re-applies the delta against the OLD state exactly once (no
+    # duplicated triples / double-counted provenance, unlike a dir-by-dir
+    # rename sequence). Old versions are pruned only after the swap,
+    # best-effort.
+    new_version = (meta["version"] if meta else 0) + 1
+    for name in STATE_SCHEMAS:
+        tables[name].write.mode("overwrite").parquet(
+            os.path.join(state_dir, f"v{new_version}", name)
+        )
+    pointer = {"snapshot_id": current, "version": new_version}
+    atomic_write(meta_path, lambda fh: fh.write(json.dumps(pointer).encode()))
+    for entry in os.listdir(state_dir):
+        if entry.startswith("v") and entry != f"v{new_version}":
+            shutil.rmtree(os.path.join(state_dir, entry), ignore_errors=True)
     return _result(1)

@@ -1,6 +1,8 @@
 """Document expansion → triples conformance (the layer the reference stubs,
 built to the WD it cites — SURVEY.md §7 M0)."""
 
+import json
+
 import pytest
 
 from json_ld_spark.kernel import (
@@ -117,17 +119,35 @@ def test_typed_value_object():
 
 
 def test_number_and_bool_literals():
-    doc = {
-        "@id": "http://ex.org/a",
-        "http://ex.org/v#n": 42,
-        "http://ex.org/v#f": 2.5,
-        "http://ex.org/v#b": True,
+    xsd_double = "http://www.w3.org/2001/XMLSchema#double"
+    # JSON-LD 1.1 toRdf: a number with a fractional part, of magnitude
+    # >= 1e21 or typed xsd:double is a canonical xsd:double (shortest
+    # round-tripping mantissa, no "+" or leading zeros in the exponent);
+    # any other number is an xsd:integer
+    expected = {
+        "n": (42, "42", "integer"),
+        "f": (2.5, "2.5E0", "double"),
+        "f2": (1.5, "1.5E0", "double"),
+        "p1": (1.23456789, "1.23456789E0", "double"),
+        "p2": (1.2345681, "1.2345681E0", "double"),
+        "big": (1e21, "1.0E21", "double"),
+        "tenth": (0.1, "1.0E-1", "double"),
+        "neg": (-2.5e-7, "-2.5E-7", "double"),
+        "whole": (5.0, "5", "integer"),
+        "typed": ({"@value": 5, "@type": xsd_double}, "5.0E0", "double"),
+        # past the double range: neither may raise
+        "huge_int": (10**400, "INF", "double"),
+        "overflowed": (json.loads("1e400"), "INF", "double"),
     }
+    doc = {"@id": "http://ex.org/a", "http://ex.org/v#b": True}
+    for k, (v, _, _) in expected.items():
+        doc[f"http://ex.org/v#{k}"] = v
     m = tmap(triples(doc))
-    assert m[("http://ex.org/a", "http://ex.org/v#n")]["obj_value"] == "42"
-    assert m[("http://ex.org/a", "http://ex.org/v#n")]["obj_type"].endswith("integer")
     assert m[("http://ex.org/a", "http://ex.org/v#b")]["obj_value"] == "true"
-    assert m[("http://ex.org/a", "http://ex.org/v#f")]["obj_type"].endswith("double")
+    for k, (_, lexical, ty) in expected.items():
+        t = m[("http://ex.org/a", f"http://ex.org/v#{k}")]
+        got = (t["obj_value"], t["obj_type"].rsplit("#", 1)[1])
+        assert got == (lexical, ty), k
 
 
 def test_list_expansion_to_rdf_chain():

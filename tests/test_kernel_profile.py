@@ -2,16 +2,7 @@
 src/remote/profile.rs, and the LoadDocumentOptions loader surface vs
 src/remote.rs:49-109. Spark-free."""
 
-import pytest
-
-from json_ld_spark.contexts import ContextDict, RemoteDocument
-from json_ld_spark.kernel import (
-    ErrorCode,
-    JsonLdError,
-    LoadDocumentOptions,
-    Profile,
-    RequestProfile,
-)
+from json_ld_spark.kernel import LoadDocumentOptions, Profile, RequestProfile
 
 # profile.rs:23-39 — the six URIs, verbatim
 EXPECTED_URIS = {
@@ -71,14 +62,3 @@ def test_loader_options_defaults():
     assert opts.request_profile == RequestProfile()
     assert opts == LoadDocumentOptions()
 
-
-def test_context_dict_load_hit_and_miss():
-    cd = ContextDict()
-    iri = "https://example.org/ctx/prefix"
-    doc = cd.load(iri, LoadDocumentOptions(profile=Profile.CONTEXT))
-    assert isinstance(doc, RemoteDocument)
-    assert doc.document_url == iri
-    assert "@context" in doc.document
-    with pytest.raises(JsonLdError) as ei:
-        cd.load("https://example.org/ctx/404")
-    assert ei.value.code == ErrorCode.LOADING_REMOTE_CONTEXT_FAILED

@@ -337,7 +337,7 @@ def test_incremental_canonicalize_matches_full(spark, sf_dir):
     new_triples = extract_triples(t2).localCheckpoint()
     assert new_triples.where(F.col("error_code").isNotNull()).count() == 0
 
-    ents, canon_full, nodes, edges = incremental_canonicalize(
+    canon_full, nodes, edges = incremental_canonicalize(
         old_triples, new_triples, prev_entities, prev_canon, edges_prev
     )
     full_canon, full_nodes, full_edges = canonicalize(
@@ -386,7 +386,7 @@ def test_incremental_noop_delta_is_identity(spark, sf_dir):
     empty = spark.createDataFrame(
         [], old_triples.schema
     )
-    ents, canon_full, nodes, edges = incremental_canonicalize(
+    canon_full, nodes, edges = incremental_canonicalize(
         old_triples, empty, prev_entities, prev_canon,
         edges_prev.localCheckpoint(),
     )
@@ -450,7 +450,7 @@ def test_incremental_no_forced_broadcast(spark, sf_dir):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ents, canon_full, nodes, edges = incremental_canonicalize(
+        canon_full, nodes, edges = incremental_canonicalize(
             old_triples, new_triples, prev_entities, prev_canon, edges_prev
         )
         plan = edges._jdf.queryExecution().executedPlan().toString()
@@ -496,7 +496,7 @@ def test_incremental_block_cap_dissolution(spark):
     new = spark.createDataFrame(
         [t("http://ex.org/zz/item-1", stable)], TRIPLE_SCHEMA
     ).localCheckpoint()
-    ents, canon_full, nodes, edges = incremental_canonicalize(
+    canon_full, nodes, edges = incremental_canonicalize(
         old, new, prev_entities, prev_canon, edges_prev.localCheckpoint()
     )
     full_canon, full_nodes, full_edges = canonicalize(old.unionByName(new))

@@ -17,10 +17,11 @@ from json_ld_spark.pipeline.entity import (
     CANON_SCHEMA,
     EDGE_SCHEMA,
     ENTITY_SCHEMA,
-    NODE_SCHEMA,
+    derive_nodes,
 )
 from json_ld_spark.pipeline.extract import TRIPLE_SCHEMA
 from json_ld_spark.pipeline.job import (
+    STATE_SCHEMAS,
     read_entity_state,
     run_incremental_snapshot_pipeline,
     run_snapshot_pipeline,
@@ -281,8 +282,9 @@ def test_incremental_pipeline_over_snapshots(spark, sf_dir, tmp_path):
 def test_state_reads_use_explicit_schemas(
     spark, sf_dir, tmp_path, jobs_launched
 ):
-    """The five state tables read back with the schema constants, so the
-    reads (and a no-op run, which only reads) launch no Spark job."""
+    """The four state tables read back with the schema constants, so the
+    reads (and a no-op run, which only reads) launch no Spark job. The
+    state stores no nodes table: every run derives nodes from canon."""
     store = ParquetSnapshotStore(spark, str(tmp_path / "schema_store"))
     store.append(synth_transcripts(spark, sf_dir).limit(200).localCheckpoint())
     w = str(tmp_path / "schema_wh")
@@ -304,9 +306,10 @@ def test_state_reads_use_explicit_schemas(
 
     constants = {
         "triples": TRIPLE_SCHEMA, "entities": ENTITY_SCHEMA,
-        "canon": CANON_SCHEMA, "nodes": NODE_SCHEMA, "edges": EDGE_SCHEMA,
+        "canon": CANON_SCHEMA, "edges": EDGE_SCHEMA,
     }
-    assert set(state) == set(constants)
+    assert set(state) == set(constants) == set(STATE_SCHEMAS)
+    assert sorted(os.listdir(v)) == sorted(STATE_SCHEMAS)
     for name, schema in constants.items():
         on_disk = spark.read.parquet(os.path.join(v, name)).schema
         assert fields(on_disk) == fields(schema), name
@@ -320,7 +323,7 @@ def test_state_reads_use_explicit_schemas(
     noop = out[0]
     assert noop.buckets_processed == 0
     assert noop.triples.schema == TRIPLE_SCHEMA
-    assert noop.nodes.schema == NODE_SCHEMA
+    assert noop.nodes.schema == derive_nodes(state["canon"]).schema
     assert noop.edges.schema == EDGE_SCHEMA
 
 
@@ -374,6 +377,7 @@ def test_multi_append_crash_resume_matches_full_build(
     cols_n = ["canon_id", "iri", "kind", "n_aliases"]
     cols_e = ["src_canon", "pred", "dst_canon", "provenance"]
     assert _sorted_triples(res.triples) == _sorted_triples(full_triples)
+    assert res.nodes.schema == full_nodes.schema
     assert rows(res.nodes, cols_n) == rows(full_nodes, cols_n)
     assert rows(res.edges, cols_e) == rows(full_edges, cols_e)
     assert res.nodes.where(
