@@ -37,7 +37,7 @@ from .frame import (
     frame_expanded,
 )
 from .from_rdf import triples_to_expanded
-from .profile import LoadDocumentOptions, Profile, RequestProfile
+from .profile import Profile, RequestProfile
 
 __all__ = [
     "ErrorCode",
@@ -65,7 +65,6 @@ __all__ = [
     "frame_document",
     "frame_expanded",
     "triples_to_expanded",
-    "LoadDocumentOptions",
     "Profile",
     "RequestProfile",
 ]

@@ -45,8 +45,6 @@ from typing import Callable, Iterable, Mapping, Optional
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 I18N_NS = "https://www.w3.org/ns/i18n#"
 
-_BN_POSITIONS = ("subj", "obj_value", "graph")
-
 
 class CanonicalizationTooComplex(Exception):
     """Raised when the HNDQ work budget is exhausted (poison graph)."""

@@ -99,10 +99,6 @@ def create_inverse_context(
     return inv
 
 
-# keep the old private name importable — tests/tools may hold it
-_inverse_context = create_inverse_context
-
-
 def select_term(
     inverse: Mapping[str, Any],
     iri: str,

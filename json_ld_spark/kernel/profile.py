@@ -2,8 +2,8 @@
 
 Mirrors reference ``src/remote/profile.rs:7-127``: the six JSON-LD
 media-type profiles (``src/remote/profile.rs:7-20``, URIs ``:23-39``) and
-the ``RequestProfile`` u8-bitset set type (``:70-91``) used for HTTP
-content negotiation in ``LoadDocumentOptions`` (``src/remote.rs:49-109``).
+the ``RequestProfile`` u8-bitset set type (``:70-91``) the reference's
+loader options use for HTTP content negotiation (``src/remote.rs:49-109``).
 
 The reference stores the set as a single byte with one bit per variant
 (``single_bit``, ``profile.rs:42-52``); equality/iteration are therefore
@@ -93,40 +93,3 @@ class RequestProfile:
     def __repr__(self) -> str:
         return "{" + ", ".join(p.name for p in self) + "}"
 
-
-class LoadDocumentOptions:
-    """Loader options — src/remote.rs:49-109 (WD §loaddocumentoptions).
-
-    ``extract_all_scripts`` / ``profile`` / ``request_profile`` with the
-    reference's defaults (all unset). No loader here takes them: the
-    dictionary lookup in ``context_processing._process_remote_context``
-    has no use for them, matching the reference where the only code path
-    that would (HTML extraction / HTTP Accept headers) sits behind the
-    unreachable remote path (quirk R1).
-    """
-
-    __slots__ = ("extract_all_scripts", "profile", "request_profile")
-
-    def __init__(
-        self,
-        extract_all_scripts: bool = False,
-        profile: Optional[Profile] = None,
-        request_profile: Optional[RequestProfile] = None,
-    ) -> None:
-        self.extract_all_scripts = extract_all_scripts
-        self.profile = profile
-        self.request_profile = request_profile or RequestProfile()
-
-    def __eq__(self, other) -> bool:
-        return (
-            isinstance(other, LoadDocumentOptions)
-            and self.extract_all_scripts == other.extract_all_scripts
-            and self.profile == other.profile
-            and self.request_profile == other.request_profile
-        )
-
-    def __repr__(self) -> str:
-        return (
-            f"LoadDocumentOptions(extract_all_scripts={self.extract_all_scripts}, "
-            f"profile={self.profile}, request_profile={self.request_profile})"
-        )

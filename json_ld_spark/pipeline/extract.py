@@ -5,9 +5,10 @@ This is operator U1 of SURVEY.md §2 — the ``mapInPandas`` stage that wraps
 the whole kernel (A1-A33): per Arrow batch, each JSON-bearing turn's
 documents are parsed, their contexts resolved against the broadcast context
 dictionary (compiled once per task and memoized), expanded, and fanned out
-1→N. In ``extract_triples`` errors never abort the job: they become
-quarantine rows with the exact reference error code (src/error.rs taxonomy)
-carried in ``error_code`` (FIXTURES.md §5.4). The other four operators
+1→N by one memoized document step (``TurnExpander.docs``). In
+``extract_triples`` errors never abort the job: each failing document
+becomes a quarantine row with the exact reference error code (src/error.rs
+taxonomy) in ``error_code`` (FIXTURES.md §5.4). The other four operators
 reshape the same expanded documents and skip the failing ones.
 
 Every operator is a candidate frame plus a ``turn_rows`` function, run by
@@ -46,7 +47,6 @@ from ..kernel import (
     Context,
     ErrorCode,
     JsonLdError,
-    ProcessorOptions,
     cleanup_null_markers,
     compact_document,
     expand_document,
@@ -78,7 +78,7 @@ TRIPLE_SCHEMA = StructType(
 _INLINE_RE = re.compile(r"<jsonld>(.*?)</jsonld>", re.DOTALL)
 
 # The JVM-side candidate predicate, the Python-side document discovery and
-# TurnExpander.expand_raw below are THE definition of "which turns carry
+# TurnExpander.docs below are THE definition of "which turns carry
 # documents, which documents, and how each one is parsed and expanded" —
 # every operator in this module goes through them (via _map_turns), so they
 # can never silently diverge. (A function, not a module-level Column:
@@ -121,27 +121,26 @@ def _fingerprint(value) -> str:
 
 
 class TurnExpander:
-    """Per-task expansion kernel with context-compile and document memo
+    """Per-task document step with context-compile and document memo
     caches.
 
-    The document memo exploits that expansion is a *pure function* of the
-    raw document string once the context dictionary is frozen: identical
-    payloads (retried tool calls, templated agent turns, re-sent context
-    blobs — extremely common in real transcript corpora) expand once and
-    then cost a dict lookup. Bounded FIFO eviction keeps worker memory flat
+    The document memo exploits that a document's result is a *pure
+    function* of its raw string: one expander serves one operator, so the
+    ``fn`` given to ``docs`` is fixed for its lifetime. Identical payloads
+    (retried tool calls, templated agent turns, re-sent context blobs —
+    extremely common in real transcript corpora) run once and then cost a
+    dict lookup. Bounded FIFO eviction keeps worker memory flat
     regardless of corpus size; cache hit/miss changes throughput, never
     output.
     """
 
     DOC_CACHE_MAX = 65536
 
-    def __init__(self, raw_contexts: Mapping[str, dict], document_iri: str) -> None:
-        self.processor = ProcessorOptions(
-            document_iri=document_iri, context_loader=dict(raw_contexts)
-        )
-        self.document_iri = document_iri
+    def __init__(self, contexts: ContextDict) -> None:
+        self.processor = contexts.processor
+        self.document_iri = contexts.document_iri
         self._cache: dict[str, Context] = {}
-        self._doc_cache: dict[str, tuple[tuple, ...]] = {}
+        self._doc_cache: dict[str, tuple[object, Optional[str]]] = {}
         # memoization hit-rate, surfaced through the extraction metrics
         # accumulator: real corpora reuse a handful of inline @context
         # blobs across millions of turns (the reference keeps a per-run
@@ -177,10 +176,10 @@ class TurnExpander:
         return self._active_context(ctx_value), body
 
     def expand_raw(self, raw: str) -> Optional[tuple[Context, list]]:
-        """THE document step: ``(active context, expanded form)`` of one raw
-        document string, or None when it is not JSON (NaN/Infinity literals
-        and nesting too deep to parse included). Raises JsonLdError, or
-        RecursionError for nesting too deep to expand."""
+        """Parse, context, expand: ``(active context, expanded form)`` of
+        one raw document string, or None when it is not JSON (NaN/Infinity
+        literals and nesting too deep to parse included). Raises
+        JsonLdError, or RecursionError for nesting too deep to expand."""
         try:
             doc = json.loads(raw, parse_constant=_not_json)
         except (ValueError, RecursionError):  # JSONDecodeError is a ValueError
@@ -188,58 +187,32 @@ class TurnExpander:
         active, body = self._context_of(doc)
         return active, expand_document(self.processor, active, body)
 
-    def _expand_doc(self, raw: str) -> tuple[tuple, ...]:
-        """Expand one raw document string to partial rows (everything after
-        the conv_id/turn_idx prefix), memoized on the raw string."""
-        cached = self._doc_cache.get(raw)
-        if cached is not None:
-            self.cache_stats["doc_hits"] += 1
-            return cached
-        self.cache_stats["doc_misses"] += 1
-        try:
-            step = self.expand_raw(raw)
-            if step is None:
-                result = ((None,) * 8 + ("loading document failed",),)
+    def docs(self, text, tool, fn) -> Iterator[tuple[int, object, Optional[str]]]:
+        """THE document step of every operator: ``(doc_idx, fn(active,
+        expanded), None)`` per document of one turn, memoized on the raw
+        string. A failing document yields ``(doc_idx, None, error_code)``:
+        not JSON is ``loading document failed``, a JsonLdError in
+        expansion or in ``fn`` is its code, a RecursionError is
+        ``uncategorized error``."""
+        for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
+            result = self._doc_cache.get(raw)
+            if result is not None:
+                self.cache_stats["doc_hits"] += 1
             else:
-                result = tuple(
-                    (t["subj"], t["pred"], t["obj_kind"], t["obj_value"],
-                     t["obj_type"], t["obj_lang"], t["obj_direction"],
-                     t["graph"], None)
-                    for t in expanded_to_triples(step[1])
-                )
-        except JsonLdError as e:
-            result = ((None,) * 8 + (e.code.value,),)
-        except RecursionError:
-            result = ((None,) * 8 + (ErrorCode.UNCATEGORIZED.value,),)
-        if len(self._doc_cache) >= self.DOC_CACHE_MAX:
-            # FIFO eviction: drop the oldest insertion (dict is ordered)
-            self._doc_cache.pop(next(iter(self._doc_cache)))
-        self._doc_cache[raw] = result
-        return result
-
-    def expand_turn(self, conv_id: str, turn_idx: int, text, tool) -> list[tuple]:
-        """All triples (or quarantine rows) for one turn."""
-        out: list[tuple] = []
-        for raw in iter_turn_documents(text, tool):
-            for part in self._expand_doc(raw):
-                out.append((conv_id, turn_idx) + part)
-        return out
-
-
-def _turn_docs(expander: TurnExpander, text, tool, fn) -> Iterator[tuple[int, object]]:
-    """``(doc_idx, fn(active, expanded))`` per document of one turn. A
-    document that is not JSON, or raises JsonLdError or RecursionError in
-    expansion or in ``fn``, is skipped (quarantine is extract_triples' job)
-    but keeps its index."""
-    for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
-        try:
-            step = expander.expand_raw(raw)
-            if step is None:
-                continue
-            value = fn(*step)
-        except (JsonLdError, RecursionError):
-            continue
-        yield doc_idx, value
+                self.cache_stats["doc_misses"] += 1
+                try:
+                    step = self.expand_raw(raw)
+                    result = ((None, ErrorCode.LOADING_DOCUMENT_FAILED.value)
+                              if step is None else (fn(*step), None))
+                except JsonLdError as e:
+                    result = (None, e.code.value)
+                except RecursionError:
+                    result = (None, ErrorCode.UNCATEGORIZED.value)
+                if len(self._doc_cache) >= self.DOC_CACHE_MAX:
+                    # FIFO eviction: drop the oldest insertion (dict is ordered)
+                    self._doc_cache.pop(next(iter(self._doc_cache)))
+                self._doc_cache[raw] = result
+            yield doc_idx, *result
 
 
 class TaskMetricsParam:
@@ -272,7 +245,8 @@ def _map_turns(
     """THE kernel plan of every operator in this module: ``candidates``
     (4-column turns) → one map-only ``mapInPandas`` stage. Each task builds
     one TurnExpander and emits ``turn_rows(expander, payload, conv_id,
-    turn_idx, text, tool)`` for every turn.
+    turn_idx, text, tool)`` for every turn; ``turn_rows`` gets its
+    documents from ``expander.docs``.
 
     The context dictionary and the operator's constants (``payload``) ship
     as one broadcast variable: closure capture re-pickles them into every
@@ -281,13 +255,13 @@ def _map_turns(
     adds one TaskMetricsParam sample."""
     contexts = contexts or ContextDict()
     bc = candidates.sparkSession.sparkContext.broadcast(
-        (contexts.raw, contexts.document_iri, payload)
+        (contexts, payload)
     )
     columns = schema.fieldNames()
 
     def run_task(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        raw_contexts, document_iri, task_payload = bc.value
-        expander = TurnExpander(raw_contexts, document_iri)
+        task_contexts, task_payload = bc.value
+        expander = TurnExpander(task_contexts)
         n_in = 0
         t0 = time.perf_counter()
         for pdf in batches:
@@ -311,18 +285,37 @@ def _map_turns(
     return candidates.mapInPandas(run_task, schema=schema)
 
 
+def _triple_parts(_active, expanded) -> tuple[tuple, ...]:
+    """One document's rows minus the (conv_id, turn_idx) prefix."""
+    return tuple(
+        (t["subj"], t["pred"], t["obj_kind"], t["obj_value"], t["obj_type"],
+         t["obj_lang"], t["obj_direction"], t["graph"], None)
+        for t in expanded_to_triples(expanded)
+    )
+
+
 def _triple_rows(expander, _payload, conv_id, turn_idx, text, tool) -> list[tuple]:
     # G1 — exact triple dedup, shuffle-free. The dedup key is the FULL row
     # including (conv_id, turn_idx), and a turn is expanded exactly once in
     # exactly one task, so duplicates of the key can only arise *within*
     # this turn's own output (e.g. the same doc in both text and tool).
     # Per-turn set-dedup is therefore exactly equivalent to a global
-    # dropDuplicates over all 11 columns — minus a ~full-output shuffle,
+    # dropDuplicates over the clean triples — minus a ~full-output shuffle,
     # which at the 100 TB target is the difference between a map-only stage
     # and a petascale exchange. It keeps no state, so batch and streaming
-    # plans run the same rule.
-    rows = expander.expand_turn(conv_id, turn_idx, text, tool)
-    return list(dict.fromkeys(rows))
+    # plans run the same rule. Quarantine rows are per document: each
+    # failing document adds its own row to the manifest's error count.
+    clean: list[tuple] = []
+    quarantine: list[tuple] = []
+    for _, parts, code in expander.docs(text, tool, _triple_parts):
+        if code is None:
+            clean.extend(parts)
+        else:
+            quarantine.append((None,) * 8 + (code,))
+    return [
+        (conv_id, turn_idx) + part
+        for part in (*dict.fromkeys(clean), *quarantine)
+    ]
 
 
 def extract_triples(
@@ -399,10 +392,11 @@ FLATTEN_STATS_SCHEMA = StructType(
 
 def _flatten_rows(expander, _payload, conv_id, turn_idx, text, tool) -> list[tuple]:
     stats = [
-        st for _, st in _turn_docs(
-            expander, text, tool,
+        st for _, st, code in expander.docs(
+            text, tool,
             lambda _active, expanded: flatten_stats(flatten_expanded(expanded)),
         )
+        if code is None
     ]
     n_nodes, n_props, n_blank = (sum(st[i] for st in stats) for i in range(3))
     return [(conv_id, turn_idx, len(stats), n_nodes, n_props, n_blank)]
@@ -467,10 +461,10 @@ def _framed_rows(expander, frame, conv_id, turn_idx, text, tool) -> list[tuple]:
     return [
         (conv_id, turn_idx, doc_idx, root["@id"], *_framed_node_stats(root),
          _fingerprint(root))
-        for doc_idx, roots in _turn_docs(
-            expander, text, tool,
-            lambda _active, expanded: frame_expanded(expanded, frame),
+        for doc_idx, roots, code in expander.docs(
+            text, tool, lambda _active, expanded: frame_expanded(expanded, frame)
         )
+        if code is None
         for root in roots
     ]
 
@@ -534,7 +528,8 @@ def _framed_compact_rows(expander, payload, conv_id, turn_idx, text, tool) -> li
     return [
         (conv_id, turn_idx, doc_idx, root.get("@id", ""), len(root),
          sum(1 for v in root.values() if v is None), _fingerprint(root))
-        for doc_idx, roots in _turn_docs(expander, text, tool, frame_compact)
+        for doc_idx, roots, code in expander.docs(text, tool, frame_compact)
+        if code is None
         for root in roots
     ]
 
@@ -557,7 +552,7 @@ def frame_compact_turn_entities(
     the broadcast."""
     frame = frame or DEFAULT_COMPACT_FRAME
     contexts = contexts or ContextDict()
-    compiler = TurnExpander(contexts.raw, contexts.document_iri)
+    compiler = TurnExpander(contexts)
     frame_ctx, _ = compiler._context_of(frame)
     expanded_frame = expand_frame(compiler.processor, frame_ctx, frame)
     return _map_turns(
@@ -606,21 +601,20 @@ def _compacted_doc_stats(element) -> tuple[int, int, int]:
 
 
 def _compact_rows(expander, _payload, conv_id, turn_idx, text, tool) -> list[tuple]:
-    def compact_roundtrip(active, expanded) -> tuple[object, int]:
+    def compact_roundtrip(active, expanded) -> tuple:
         # compactToRelative=False (spec option, default true): the
         # pipeline publishes absolute subject/object IRIs so consumers
         # join without needing the producer's base
         compacted = compact_document(active, expanded, compact_to_relative=False)
         reexpanded = expand_document(expander.processor, active, compacted)
         rt = normalize_expanded(reexpanded) == normalize_expanded(expanded)
-        return compacted, 1 if rt else 0
+        return (*_compacted_doc_stats(compacted), 1 if rt else 0,
+                _fingerprint(compacted))
 
     return [
-        (conv_id, turn_idx, doc_idx, *_compacted_doc_stats(compacted), rt,
-         _fingerprint(compacted))
-        for doc_idx, (compacted, rt) in _turn_docs(
-            expander, text, tool, compact_roundtrip
-        )
+        (conv_id, turn_idx, doc_idx, *stats)
+        for doc_idx, stats, code in expander.docs(text, tool, compact_roundtrip)
+        if code is None
     ]
 
 

@@ -4,7 +4,7 @@
     → single partitioned write → per-bucket manifest commit
     → entity linking → block canonicalization → nodes/edges
 
-Run via ``spark-submit --py-files`` (see bench.py / scripts). The job is
+Entry point: ``tools/run_job.py`` (``spark-submit --py-files``). The job is
 idempotent: killed after bucket k's manifest commit, a re-run processes only
 pending buckets and the final triples table is identical
 (tests/test_pipeline_resume.py).
@@ -81,7 +81,6 @@ def run_extraction_job(
     # tail: the derived node/edge tables are still (re)computed when
     # requested — returning nodes=None would crash re-runs of the
     # production entrypoint
-    processed = 0
     if pending:
         bucketed = transcripts.withColumn(
             "bucket", bucket_of(F.col("conv_id"), n_buckets)
@@ -130,12 +129,11 @@ def run_extraction_job(
         stats = manifest.bucket_stats(pending)
         for bucket in pending:
             manifest.commit_bucket(
-                run_id, bucket, input_rows.get(bucket, 0), stats.get(bucket),
+                run_id, bucket, input_rows[bucket], stats.get(bucket),
                 snapshot_id,
             )
-            processed += 1
 
-    result = JobResult(run_id, processed, manifest.read_triples())
+    result = JobResult(run_id, len(pending), manifest.read_triples())
     if with_entity_layer:
         _, result.nodes, result.edges = canonicalize(result.triples)
     return result
@@ -244,23 +242,24 @@ def run_incremental_snapshot_pipeline(
             derive_nodes(state["canon"]), state["edges"],
         )
 
-    if meta is None:
-        # bootstrap: full pipeline over the current snapshot. The kernel
-        # pass is the job's most expensive stage — checkpoint it once so
-        # canonicalize and the state write don't each re-run extraction
-        # from scratch.
-        triples = extract_triples(
-            store.read(current), contexts, dedup_turns=True
-        ).localCheckpoint()
-        canon, _, edges = canonicalize(triples)
-    elif current == meta["snapshot_id"]:
+    if meta is not None and current == meta["snapshot_id"]:
         return _result(0)
+    # the bootstrap extracts the current snapshot, an append only the
+    # delta. The kernel pass is the job's most expensive stage —
+    # checkpoint it once so the entity layer and the state write don't
+    # each re-run extraction from scratch.
+    source = (
+        store.read(current) if meta is None
+        else store.read_delta(meta["snapshot_id"], current)
+    )
+    new_triples = extract_triples(
+        source, contexts, dedup_turns=True
+    ).localCheckpoint()
+    if meta is None:
+        triples = new_triples
+        canon, _, edges = canonicalize(triples)
     else:
         prev = read_entity_state(spark, warehouse)
-        new_triples = extract_triples(
-            store.read_delta(meta["snapshot_id"], current), contexts,
-            dedup_turns=True,
-        ).localCheckpoint()
         canon, _, edges = incremental_canonicalize(
             prev["triples"], new_triples,
             prev["entities"], prev["canon"], prev["edges"],

@@ -1,8 +1,7 @@
 """A32 parity: document profiles + RequestProfile bitset vs reference
-src/remote/profile.rs, and the LoadDocumentOptions loader surface vs
-src/remote.rs:49-109. Spark-free."""
+src/remote/profile.rs. Spark-free."""
 
-from json_ld_spark.kernel import LoadDocumentOptions, Profile, RequestProfile
+from json_ld_spark.kernel import Profile, RequestProfile
 
 # profile.rs:23-39 — the six URIs, verbatim
 EXPECTED_URIS = {
@@ -52,13 +51,4 @@ def test_request_profile_from_single():
     assert list(rp) == [Profile.FRAME]
     assert RequestProfile() != rp
     assert not list(RequestProfile())
-
-
-def test_loader_options_defaults():
-    # src/remote.rs:49-66 — defaults: no scripts extraction, no profiles
-    opts = LoadDocumentOptions()
-    assert opts.extract_all_scripts is False
-    assert opts.profile is None
-    assert opts.request_profile == RequestProfile()
-    assert opts == LoadDocumentOptions()
 

@@ -1,10 +1,12 @@
 """End-to-end extraction tests on local Spark (SURVEY.md §5.2 item 3).
 
-The golden oracle is the Spark-free kernel itself: the same turns are
-expanded driver-side and compared exactly (P/R == 1.0 ⊃ the ≥0.95 gate).
+The golden oracle is the Spark-free, cache-free kernel loop of
+``tools/make_golden.extract_rows``: the same turns are expanded
+driver-side and compared exactly (P/R == 1.0 ⊃ the ≥0.95 gate).
 """
 
 import json
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +14,7 @@ from pyspark.sql import functions as F
 from json_ld_spark.contexts import ContextDict
 from json_ld_spark.pipeline.extract import TurnExpander, extract_triples
 from json_ld_spark.pipeline.transcripts import synth_transcripts
+from tools.make_golden import extract_rows
 
 
 @pytest.fixture(scope="module")
@@ -40,13 +43,8 @@ def test_extract_matches_kernel_oracle(spark, transcripts):
         tuple(r) for r in triples.where(F.col("error_code").isNull()).collect()
     }
     # driver-side oracle over the same turns
-    ctx = ContextDict()
-    expander = TurnExpander(ctx.raw, ctx.document_iri)
-    expected = set()
-    for row in transcripts.select("conv_id", "turn_idx", "text", "tool").collect():
-        for t in expander.expand_turn(row.conv_id, row.turn_idx, row.text, row.tool):
-            if t[-1] is None:
-                expected.add(t)
+    turns = transcripts.select("conv_id", "turn_idx", "text", "tool").toPandas()
+    expected = {t for t in extract_rows(turns) if t[-1] is None}
     assert got == expected
     assert len(got) > 0
 
@@ -76,9 +74,10 @@ def test_failing_documents_skip_but_keep_their_index(spark):
     """Every per-turn operator shares one document step: a document that
     is not JSON or fails expansion is skipped by the shape operators
     (keeping the doc_idx of the ones after it) and quarantined by
-    extract_triples. NaN/Infinity literals (which Python's json accepts)
-    and an array nested too deep to parse are not JSON; nodes nested too
-    deep to expand are an uncategorized error. None aborts the task."""
+    extract_triples, one row per failing document. NaN/Infinity literals
+    (which Python's json accepts) and an array nested too deep to parse
+    are not JSON; nodes nested too deep to expand are an uncategorized
+    error. None aborts the task, and the Spark-free mirror agrees."""
     from json_ld_spark.kernel import JsonLdError
     from json_ld_spark.pipeline.extract import (
         TaskMetricsParam,
@@ -145,13 +144,14 @@ def test_failing_documents_skip_but_keep_their_index(spark):
         (3, "invalid vocab mapping"),
         (3, "loading document failed"),
         (5, ""),
-        (5, "loading document failed"),  # 4 equal rows, deduped per turn
+        *[(5, "loading document failed")] * 4,  # one row per document
         (6, ""),
         (6, "uncategorized error"),
     ]
     samples = acc.value
     assert sum(s[0] for s in samples) == 6  # candidate turns
     assert sum(s[4] + s[5] for s in samples) == 13  # documents
+    assert Counter(map(tuple, out)) == Counter(extract_rows(df.toPandas()))
 
     # the compacting frame compiles on the driver: an invalid frame
     # context fails when the operator is called, not inside a task
@@ -256,7 +256,7 @@ def test_compact_turn_docs_fixpoint_and_kernel_parity(spark, transcripts):
     assert all(r[6] == 1 for r in got), "a fixture doc failed the fixpoint"
 
     ctx = ContextDict()
-    expander = TurnExpander(ctx.raw, ctx.document_iri)
+    expander = TurnExpander(ctx)
     expected = set()
     for row in transcripts.select("conv_id", "turn_idx", "text", "tool").collect():
         for doc_idx, raw in enumerate(iter_turn_documents(row.text, row.tool)):
@@ -299,28 +299,31 @@ def test_turn_expander_memoizes_contexts_and_documents():
     document once — everything after is a dict lookup. Spark-free
     microbench surface: the counters are what the extraction metrics
     accumulator ships per task."""
-    import json as _json
+    from json_ld_spark.pipeline.extract import _triple_parts
 
-    from json_ld_spark.contexts import ContextDict
-    from json_ld_spark.pipeline.extract import TurnExpander
-
-    cd = ContextDict()
-    ex = TurnExpander(cd.raw, cd.document_iri)
+    ex = TurnExpander(ContextDict())
     ctx = {"name": "http://schema.org/name"}
-    doc_a = _json.dumps({"@context": ctx, "@id": "http://e/a", "name": "A"})
-    doc_b = _json.dumps({"@context": ctx, "@id": "http://e/b", "name": "B"})
+    doc_a = json.dumps({"@context": ctx, "@id": "http://e/a", "name": "A"})
+    doc_b = json.dumps({"@context": ctx, "@id": "http://e/b", "name": "B"})
 
-    rows_a = ex.expand_turn("c1", 0, None, doc_a)
-    assert rows_a and ex.cache_stats["ctx_misses"] == 1
+    [(idx, parts_a, code)] = ex.docs(None, doc_a, _triple_parts)
+    assert (idx, code) == (0, None) and parts_a
+    assert ex.cache_stats["ctx_misses"] == 1
     # different doc, byte-identical inline context: compile cache hit
-    ex.expand_turn("c1", 1, None, doc_b)
+    list(ex.docs(None, doc_b, _triple_parts))
     assert ex.cache_stats == {
         "ctx_hits": 1, "ctx_misses": 1, "doc_hits": 0, "doc_misses": 2,
     }
-    # identical raw doc (retried tool call): whole-document memo hit,
-    # no new context work, and the memo returns the same rows re-keyed
-    rows_a2 = ex.expand_turn("c9", 7, None, doc_a)
-    assert ex.cache_stats["doc_hits"] == 1
+    # identical raw doc (retried tool call, here inline and second in its
+    # turn): whole-document memo hit, no new context work, same parts
+    again = list(ex.docs(f"<jsonld>{doc_a}</jsonld>", doc_b, _triple_parts))
+    assert ex.cache_stats["doc_hits"] == 2
     assert ex.cache_stats["ctx_hits"] == 1  # not even a ctx lookup
-    assert [r[2:] for r in rows_a2] == [r[2:] for r in rows_a]
-    assert [(r[0], r[1]) for r in rows_a2] == [("c9", 7)] * len(rows_a2)
+    assert again[1] == (1, parts_a, None)
+    # a failing document is memoized with its error code
+    for _ in range(2):
+        assert list(ex.docs(None, "{not json", _triple_parts)) == [
+            (0, None, "loading document failed")
+        ]
+    assert ex.cache_stats["doc_misses"] == 3
+    assert ex.cache_stats["doc_hits"] == 3

@@ -101,13 +101,22 @@ def write_transcripts(sf_dir: str, out_dir: str) -> None:
 
 # ---------------------------------------------------- kernel-only triples
 
+def _reject_constant(literal: str):
+    """NaN, Infinity and -Infinity are not JSON values (RFC 8259 §6)."""
+    raise ValueError(f"{literal} is not JSON")
+
+
 def _expand_doc(raw: str, processor, document_iri: str) -> list[tuple]:
-    """Mirror of pipeline/extract.TurnExpander._expand_doc WITHOUT any
-    caching — straight kernel calls per document."""
+    """One document's triple rows (minus the conv_id/turn_idx prefix), or
+    one quarantine row when it fails — the per-document rules of
+    pipeline/extract.extract_triples, from straight kernel calls with no
+    caching. Not JSON (NaN/Infinity literals and nesting too deep to
+    parse included) is "loading document failed", a JsonLdError is its
+    code, and nesting too deep to expand is "uncategorized error"."""
     out: list[tuple] = []
     try:
-        doc = json.loads(raw)
-    except (json.JSONDecodeError, ValueError):
+        doc = json.loads(raw, parse_constant=_reject_constant)
+    except (ValueError, RecursionError):
         return [(None,) * 8 + ("loading document failed",)]
     try:
         ctx_value = doc.get("@context") if isinstance(doc, Mapping) else None
@@ -128,10 +137,30 @@ def _expand_doc(raw: str, processor, document_iri: str) -> list[tuple]:
             )
     except JsonLdError as e:
         out = [(None,) * 8 + (e.code.value,)]
+    except RecursionError:
+        out = [(None,) * 8 + ("uncategorized error",)]
     return out
 
 
+# Spark's Python workers run at CPython's default recursion limit; a driver
+# that has built a pyspark Column runs at 3000 (pyspark imports IPython,
+# whose jedi raises the limit). How deep a document may nest before it
+# fails depends on the limit, so the mirror expands at the workers' one.
+_WORKER_RECURSION_LIMIT = 1000
+
+
 def extract_rows(transcripts: pd.DataFrame) -> list[tuple]:
+    """The rows ``extract_triples`` writes for ``transcripts``, from the
+    Spark-free, cache-free kernel loop at the workers' recursion limit."""
+    limit = sys.getrecursionlimit()
+    sys.setrecursionlimit(_WORKER_RECURSION_LIMIT)
+    try:
+        return _extract_rows(transcripts)
+    finally:
+        sys.setrecursionlimit(limit)
+
+
+def _extract_rows(transcripts: pd.DataFrame) -> list[tuple]:
     cd = ContextDict()
     processor = cd.processor
     document_iri = cd.document_iri
@@ -144,15 +173,20 @@ def extract_rows(transcripts: pd.DataFrame) -> list[tuple]:
         has_inline = isinstance(text, str) and "<jsonld>" in text
         if _tool_is_null(tool) and not has_inline:
             continue  # candidate filter parity (NaN counts as null)
-        turn_rows: list[tuple] = []
-        if has_tool:
-            for part in _expand_doc(tool, processor, document_iri):
-                turn_rows.append((conv_id, int(turn_idx)) + part)
-        if has_inline:
-            for raw in _INLINE_RE.findall(text):
-                for part in _expand_doc(raw, processor, document_iri):
-                    turn_rows.append((conv_id, int(turn_idx)) + part)
-        rows.extend(dict.fromkeys(turn_rows))  # per-turn dedup parity
+        raws = ([tool] if has_tool else []) + (
+            _INLINE_RE.findall(text) if has_inline else []
+        )
+        triples: list[tuple] = []
+        quarantine: list[tuple] = []
+        for raw in raws:
+            for part in _expand_doc(raw, processor, document_iri):
+                row = (conv_id, int(turn_idx)) + part
+                (triples if part[8] is None else quarantine).append(row)
+        # exact dedup of the turn's clean triples (equal to a global
+        # dropDuplicates over them, as a turn is extracted once); every
+        # failing document keeps its own quarantine row
+        rows.extend(dict.fromkeys(triples))
+        rows.extend(quarantine)
     return rows
 
 
