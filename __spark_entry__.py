@@ -675,7 +675,10 @@ def _kg_graph_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged), bucket 3 also duplicated under a fresh conv_id (added).
     Oracle: Spark-free kernel golden applying the same mutation
     (tools/make_golden.write_graph_diff)."""
-    from json_ld_spark.pipeline.canonical import graph_diff
+    from json_ld_spark.pipeline.canonical import (
+        graph_diff,
+        turn_fingerprints,
+    )
     from json_ld_spark.pipeline.extract import extract_triples
     from json_ld_spark.pipeline.transcripts import synth_transcripts
 
@@ -686,9 +689,9 @@ def _kg_graph_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bench honest about the diff operator's own cost.
     old = extract_triples(synth_transcripts(spark, sf_dir)).persist()
     old.count()  # materialize: both sides scan the cache, not the lineage
-    return graph_diff(old, _mutated_snapshot(old)).orderBy(
-        "conv_id", "turn_idx"
-    )
+    return graph_diff(
+        turn_fingerprints(old), turn_fingerprints(_mutated_snapshot(old))
+    ).orderBy("conv_id", "turn_idx")
 
 
 def _mutated_snapshot(old: DataFrame) -> DataFrame:

@@ -29,7 +29,7 @@ in ``@direction`` canonicalize to different bytes — required for the
 
 Poison-graph protection (spec Security Considerations): highly
 automorphic graphs drive Hash N-Degree Quads through factorial
-permutation work. ``max_work`` bounds total HNDQ invocations; exceeding
+permutation work. ``_MAX_WORK`` bounds total HNDQ invocations; exceeding
 it raises :class:`CanonicalizationTooComplex`, which the distributed
 operator maps to a quarantine row instead of a job failure — mirroring
 the extraction pipeline's per-row error philosophy.
@@ -44,6 +44,7 @@ from typing import Callable, Iterable, Mapping, Optional
 
 XSD_STRING = "http://www.w3.org/2001/XMLSchema#string"
 I18N_NS = "https://www.w3.org/ns/i18n#"
+_MAX_WORK = 400
 
 
 class CanonicalizationTooComplex(Exception):
@@ -159,9 +160,9 @@ def _hash_first_degree(
 
 
 class _State:
-    __slots__ = ("bn_to_quads", "h1dq", "canonical", "work", "max_work")
+    __slots__ = ("bn_to_quads", "h1dq", "canonical", "work")
 
-    def __init__(self, quads: list, max_work: int) -> None:
+    def __init__(self, quads: list) -> None:
         self.bn_to_quads: dict[str, list] = defaultdict(list)
         for q in quads:
             for b in _quad_bnodes(q):
@@ -172,7 +173,6 @@ class _State:
         }
         self.canonical = IdentifierIssuer("c14n")
         self.work = 0
-        self.max_work = max_work
 
 
 def _hash_related(
@@ -203,9 +203,9 @@ def _hash_ndegree(
     by hashing their neighborhood, searching label permutations for the
     lexicographically-least path."""
     state.work += 1
-    if state.work > state.max_work:
+    if state.work > _MAX_WORK:
         raise CanonicalizationTooComplex(
-            f"hash-n-degree work budget exceeded ({state.max_work}); "
+            f"hash-n-degree work budget exceeded ({_MAX_WORK}); "
             "dataset is too automorphic to canonicalize within bounds"
         )
 
@@ -275,9 +275,7 @@ def _hash_ndegree(
     )
 
 
-def canonical_label_map(
-    quads: Iterable[Mapping], max_work: int = 400
-) -> dict[str, str]:
+def canonical_label_map(quads: Iterable[Mapping]) -> dict[str, str]:
     """Spec §4.4 main loop — returns {old blank label → canonical label
     (without the ``_:`` prefix)} for every blank node in ``quads``."""
     quads = list(quads)
@@ -295,7 +293,7 @@ def canonical_label_map(
     if len(seen) == 1:
         return {next(iter(seen)): "c14n0"}
 
-    state = _State(quads, max_work)
+    state = _State(quads)
 
     hash_to_bn: dict[str, list[str]] = defaultdict(list)
     for b, h in state.h1dq.items():
@@ -326,15 +324,13 @@ def canonical_label_map(
     return dict(state.canonical.issued)
 
 
-def canonicalize_quads(
-    quads: Iterable[Mapping], max_work: int = 400
-) -> list[str]:
+def canonicalize_quads(quads: Iterable[Mapping]) -> list[str]:
     """Canonical N-Quads of the dataset: blank nodes relabeled
     ``_:c14n<i>`` per RDFC-1.0, lines sorted in code-point order,
     trailing newlines stripped. Two datasets are isomorphic iff this
     returns identical lists."""
     quads = list(quads)
-    mapping = canonical_label_map(quads, max_work=max_work)
+    mapping = canonical_label_map(quads)
     lines = [
         serialize_quad(q, lambda v: "_:" + mapping[v]).rstrip("\n")
         for q in quads

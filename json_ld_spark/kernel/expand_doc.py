@@ -55,11 +55,10 @@ def expand_document(
     processor: ProcessorOptions,
     active_context: Context,
     element: Any,
-    base: Optional[str] = None,
 ) -> list[dict[str, Any]]:
     """Expand a parsed JSON-LD document to its expanded form (array of node
-    objects). ``base`` defaults to the processor's document IRI."""
-    base = base if base is not None else processor.document_iri
+    objects), resolving relative IRIs against the processor's document IRI."""
+    base = processor.document_iri
     expanded = _expand(processor, active_context, None, element, base)
     # §5.1 final step: unwrap a lone @graph, coerce to array
     if isinstance(expanded, Mapping) and set(expanded.keys()) == {"@graph"}:

@@ -23,6 +23,8 @@ from typing import Any, Optional
 
 from .expand_doc import RDF_FIRST, RDF_JSON, RDF_NIL, RDF_REST, RDF_TYPE, XSD_STRING
 
+_MAX_PERMS = 5040
+
 
 def _object_repr(t: dict) -> dict:
     if t["obj_kind"] in ("iri", "bnode"):
@@ -125,7 +127,7 @@ def triples_to_expanded(triples: list[dict]) -> list[dict[str, Any]]:
     return [n for _, n in sorted(default.items())]
 
 
-def canonical_triples(triples, max_perms: int = 5040):
+def canonical_triples(triples):
     """Canonical form of a triple set under blank-node relabeling;
     returns a sorted list of key/value tuple rows.
 
@@ -135,28 +137,28 @@ def canonical_triples(triples, max_perms: int = 5040):
     serialization over all within-class relabelings. Refinement classes
     are isomorphism-invariant, so two triple sets are equal as RDF
     graphs iff their canonical forms are equal — EXACT whenever the
-    number of within-class relabelings is ≤ ``max_perms`` (ties after
+    number of within-class relabelings is ≤ ``_MAX_PERMS`` (ties after
     refinement need automorphism-group search; real reconstruction
     outputs resolve almost all labels by refinement alone). Beyond the
     cap the intra-class order falls back to sorted labels — a
     deterministic comparator that may report false inequality for
     adversarial highly-symmetric graphs, never false equality.
     """
-    return _canonical_core(triples, max_perms)[0]
+    return _canonical_core(triples)[0]
 
 
-def canonical_triples_with_assignment(triples, max_perms: int = 5040):
+def canonical_triples_with_assignment(triples):
     """Both outputs of the shared core in ONE pass: the canonical form and
-    the winning ``old label → _:c<i>`` mapping (past the ``max_perms`` cap
+    the winning ``old label → _:c<i>`` mapping (past the ``_MAX_PERMS`` cap
     the intra-class assignment falls back to sorted original labels:
     deterministic, label-dependent). Callers needing both (reconstruct's
     roundtrip check relabels with the mapping and compares against the
     form) must not pay the permutation search twice — it is the dominant
     per-turn cost on the 10^12-turn hot path."""
-    return _canonical_core(triples, max_perms)
+    return _canonical_core(triples)
 
 
-def _canonical_core(triples, max_perms: int):
+def _canonical_core(triples):
     from itertools import permutations, product as iproduct
     from math import factorial
 
@@ -236,10 +238,10 @@ def _canonical_core(triples, max_perms: int):
     n_perms = 1
     for c in class_ids:
         n_perms *= factorial(len(groups[c]))
-        if n_perms > max_perms:
+        if n_perms > _MAX_PERMS:
             break
 
-    if n_perms <= max_perms:
+    if n_perms <= _MAX_PERMS:
         best = best_mapping = None
         for combo in iproduct(
             *[permutations(sorted(groups[c])) for c in class_ids]

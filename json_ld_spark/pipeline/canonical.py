@@ -16,7 +16,7 @@ on (conv_id, turn_idx) + sort-within-partitions + a streaming
 ``mapInPandas`` that stitches the single group that can straddle an Arrow
 batch boundary. Per-group input is bounded by one turn's triples
 (O(10^1-10^2) rows at any corpus size) and per-group CPU by the kernel's
-``max_work`` poison-graph budget, so the stage has no skew exposure at
+``_MAX_WORK`` poison-graph budget, so the stage has no skew exposure at
 10^12 turns. A too-automorphic turn degrades to ONE quarantine row
 (``error_code`` set) instead of failing the job — the extraction
 pipeline's per-row error philosophy.
@@ -36,8 +36,10 @@ from pyspark.sql.types import (
 
 from ..kernel.canonicalize import (
     CanonicalizationTooComplex,
+    canonical_label_map,
     canonicalize_quads,
 )
+from .extract import TRIPLE_SCHEMA
 from .reconstruct import _TRIPLE_FIELDS, map_turn_groups
 
 CANONICAL_SCHEMA = StructType(
@@ -53,21 +55,19 @@ CANONICAL_SCHEMA = StructType(
 TOO_COMPLEX = "canonicalization too complex"
 
 
-def canonical_turn_lines(
-    rows: list[dict], max_work: int = 400
-) -> list[tuple[int, str, str]]:
+def canonical_turn_lines(rows: list[dict]) -> list[tuple[int, str, str]]:
     """Kernel core shared verbatim by the Spark operator, the golden
     writer (tools/make_golden.py), and tests: one turn's triple rows →
     ``[(line_idx, nquad, error_code)]``. Output is a pure function of
     the row *set* (canonicalization sorts and dedups internally)."""
     try:
-        lines = canonicalize_quads(rows, max_work=max_work)
+        lines = canonicalize_quads(rows)
     except CanonicalizationTooComplex:
         return [(0, None, TOO_COMPLEX)]
     return [(i, ln, None) for i, ln in enumerate(lines)]
 
 
-def canonical_nquads(triples: DataFrame, max_work: int = 400) -> DataFrame:
+def canonical_nquads(triples: DataFrame) -> DataFrame:
     """Per-turn canonical N-Quads (see module docstring for the plan
     shape; shared :func:`..pipeline.reconstruct.map_turn_groups` walker).
     Quarantined extraction rows are excluded — they carry no triple."""
@@ -75,33 +75,17 @@ def canonical_nquads(triples: DataFrame, max_work: int = 400) -> DataFrame:
     def finish(conv_id, turn_idx, rows):
         return [
             (conv_id, turn_idx, i, ln, err)
-            for i, ln, err in canonical_turn_lines(rows, max_work=max_work)
+            for i, ln, err in canonical_turn_lines(rows)
         ]
 
     return map_turn_groups(triples, finish, CANONICAL_SCHEMA)
 
 
-SKOLEM_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("subj", StringType()),
-        StructField("pred", StringType()),
-        StructField("obj_kind", StringType()),
-        StructField("obj_value", StringType()),
-        StructField("obj_type", StringType()),
-        StructField("obj_lang", StringType()),
-        StructField("obj_direction", StringType()),
-        StructField("graph", StringType()),
-        StructField("error_code", StringType()),
-    ]
-)
-
 _GENID_PREFIX = "https://kg.example.org/.well-known/genid"
 
 
 def skolemize_turn_rows(
-    rows: list[dict], conv_id: str, turn_idx: int, max_work: int = 400
+    rows: list[dict], conv_id: str, turn_idx: int
 ) -> list[dict]:
     """Kernel core shared by the Spark operator, the golden writer, and
     tests: replace every blank node in one turn's rows with a *stable*
@@ -113,19 +97,13 @@ def skolemize_turn_rows(
     former blank nodes joinable across snapshots and pipelines. A
     too-automorphic turn quarantines (``error_code``), keeping its blank
     labels untouched."""
-    from ..kernel.canonicalize import canonical_label_map
-
     try:
         mapping = {
             old: f"{_GENID_PREFIX}/{conv_id}/{turn_idx}/{label}"
-            for old, label in canonical_label_map(
-                rows, max_work=max_work
-            ).items()
+            for old, label in canonical_label_map(rows).items()
         }
     except CanonicalizationTooComplex:
-        return [
-            {**dict(r), "error_code": TOO_COMPLEX} for r in rows
-        ]
+        return [{**dict(r), "error_code": TOO_COMPLEX} for r in rows]
     out = []
     for r in rows:
         r = dict(r)
@@ -141,7 +119,7 @@ def skolemize_turn_rows(
     return out
 
 
-def skolemize_triples(triples: DataFrame, max_work: int = 400) -> DataFrame:
+def skolemize_triples(triples: DataFrame) -> DataFrame:
     """Per-turn skolemization of the triple table (shared
     :func:`..pipeline.reconstruct.map_turn_groups` single-shuffle plan;
     see ``skolemize_turn_rows`` for the semantics). Output keeps the
@@ -153,12 +131,10 @@ def skolemize_triples(triples: DataFrame, max_work: int = 400) -> DataFrame:
             (conv_id, turn_idx)
             + tuple(r[k] for k in _TRIPLE_FIELDS)
             + (r["error_code"],)
-            for r in skolemize_turn_rows(
-                rows, conv_id, turn_idx, max_work=max_work
-            )
+            for r in skolemize_turn_rows(rows, conv_id, turn_idx)
         ]
 
-    return map_turn_groups(triples, finish, SKOLEM_SCHEMA)
+    return map_turn_groups(triples, finish, TRIPLE_SCHEMA)
 
 
 FPS_SCHEMA = StructType(
@@ -171,7 +147,7 @@ FPS_SCHEMA = StructType(
 )
 
 
-def turn_fingerprints(triples: DataFrame, max_work: int = 400) -> DataFrame:
+def turn_fingerprints(triples: DataFrame) -> DataFrame:
     """Per-turn canonical content address: ``fp = sha256(sorted canonical
     N-Quad lines)`` — equal iff the turns carry isomorphic RDF datasets.
     sha256, not md5: the fingerprint drives data-dropping decisions
@@ -191,15 +167,13 @@ def turn_fingerprints(triples: DataFrame, max_work: int = 400) -> DataFrame:
     whether to exclude (dedup) or report it (diff).
 
     This is the table to PERSIST between pipeline runs: feeding it back as
-    ``graph_diff(old_fingerprints=...)`` turns the daily diff into one
-    canonicalization pass over the new snapshot only."""
+    the ``old_fingerprints`` of :func:`graph_diff` turns the daily diff
+    into one canonicalization pass over the new snapshot only."""
     import hashlib
 
     def finish(conv_id, turn_idx, rows):
         lines = [
-            ln
-            for _, ln, err in canonical_turn_lines(rows, max_work=max_work)
-            if err is None
+            ln for _, ln, err in canonical_turn_lines(rows) if err is None
         ]
         if not lines:  # quarantined: no isomorphism verdict exists
             return [(conv_id, turn_idx, None, 0)]
@@ -210,13 +184,10 @@ def turn_fingerprints(triples: DataFrame, max_work: int = 400) -> DataFrame:
 
 
 def graph_diff(
-    old_triples: DataFrame | None,
-    new_triples: DataFrame | None,
-    max_work: int = 400,
-    old_fingerprints: DataFrame | None = None,
-    new_fingerprints: DataFrame | None = None,
+    old_fingerprints: DataFrame, new_fingerprints: DataFrame
 ) -> DataFrame:
-    """Cross-snapshot KG diff: per-turn verdicts between two extractions.
+    """Cross-snapshot KG diff: per-turn verdicts between two extractions,
+    each given as its :func:`turn_fingerprints` table.
 
     ``status`` per (conv_id, turn_idx):
 
@@ -227,31 +198,18 @@ def graph_diff(
       cannot give;
     - ``changed`` — both present, datasets not isomorphic;
     - ``unknown`` — a side was quarantined as too automorphic to
-      canonicalize within ``max_work``: no isomorphism verdict exists, and
-      an honest diff must say so rather than guess.
+      canonicalize within the kernel's work budget: no isomorphism verdict
+      exists, and an honest diff must say so rather than guess.
 
     This is the incremental-curation primitive: at 100 TB pass the
-    PREVIOUS run's persisted :func:`turn_fingerprints` output as
-    ``old_fingerprints`` instead of ``old_triples`` and the daily diff
-    costs one canonicalization pass over the NEW snapshot plus a
-    full-outer sort-merge join on the turn key. Plan note: fingerprints
+    PREVIOUS run's persisted fingerprints as ``old_fingerprints`` and the
+    daily diff costs one canonicalization pass over the NEW snapshot plus
+    a full-outer sort-merge join on the turn key. Plan note: fingerprints
     come out of a ``mapInPandas`` kernel, whose partitioning Catalyst
     cannot see, so the join re-hashes each computed side (one
     ENSURE_REQUIREMENTS exchange per side) — and none for a persisted
     side written bucketed by the turn key.
     """
-    if (old_triples is None) == (old_fingerprints is None):
-        raise ValueError(
-            "pass exactly one of old_triples / old_fingerprints"
-        )
-    if (new_triples is None) == (new_fingerprints is None):
-        raise ValueError(
-            "pass exactly one of new_triples / new_fingerprints"
-        )
-    if old_fingerprints is None:
-        old_fingerprints = turn_fingerprints(old_triples, max_work=max_work)
-    if new_fingerprints is None:
-        new_fingerprints = turn_fingerprints(new_triples, max_work=max_work)
     o = old_fingerprints.select(
         "conv_id",
         "turn_idx",
@@ -287,9 +245,7 @@ def graph_diff(
     )
 
 
-def graph_dedup(
-    triples: DataFrame, max_work: int = 400, min_group_size: int = 1
-) -> DataFrame:
+def graph_dedup(triples: DataFrame) -> DataFrame:
     """Graph-level turn dedup: two turns are duplicates iff their RDF
     datasets are isomorphic — exactly when their canonical N-Quads are
     byte-identical. The canonical serialization therefore acts as a
@@ -309,23 +265,15 @@ def graph_dedup(
     degenerate groups on one task. Too-automorphic turns (NULL fp from
     the kernel) are excluded: no isomorphism verdict exists for them.
 
-    ``min_group_size`` bounds the REPORT path at corpus scale: at 10^12
-    turns the default (1) materializes one output row per turn even when
-    almost every fingerprint group is a singleton. Passing 2 keeps only
-    actual duplicate groups — the filter lands on the grouped-aggregate
-    side (post map-side combine), so singleton groups never reach the
-    join or the output. Default behavior (and the driver oracle) is
-    unchanged.
+    A report of duplicate groups only filters ``group_size >= 2`` on the
+    result: Catalyst pushes that filter below the join onto the
+    aggregate, so singleton groups never reach the join.
     """
-    fps = turn_fingerprints(triples, max_work=max_work).where(
-        F.col("graph_fp").isNotNull()
-    )
+    fps = turn_fingerprints(triples).where(F.col("graph_fp").isNotNull())
     reps = fps.groupBy("graph_fp").agg(
         F.min(F.struct("conv_id", "turn_idx")).alias("rep"),
         F.count(F.lit(1)).alias("group_size"),
     )
-    if min_group_size > 1:
-        reps = reps.where(F.col("group_size") >= min_group_size)
     return fps.join(reps, "graph_fp").select(
         "conv_id",
         "turn_idx",

@@ -220,20 +220,15 @@ def derive_nodes(canon: DataFrame) -> DataFrame:
     """nodes(canon_id, iri, kind, n_aliases) from canon(iri, canon_id): one
     row per canonical entity with its alias count and smallest alias.
 
-    ``kind`` is a substring test on ``canon_id``. It has a known defect —
-    ``"org"`` also matches the ``http://ex.org/`` domain — which
-    tools/make_golden.py mirrors, so it stays as it is until ``kind`` gets
-    an independent derivation."""
+    ``kind`` is the part of ``canon_id``'s local name before its first
+    ``-`` when that is ``person``, ``event`` or ``org`` (the ``<kind>-<n>``
+    block key), else ``other``."""
+    prefix = F.substring_index(entity_local_name(F.col("canon_id")), "-", 1)
+    kind = F.when(prefix.isin("person", "event", "org"), prefix)
     return (
         canon.groupBy("canon_id")
         .agg(F.count("*").alias("n_aliases"), F.min("iri").alias("iri"))
-        .withColumn(
-            "kind",
-            F.when(F.col("canon_id").contains("person"), "person")
-            .when(F.col("canon_id").contains("event"), "event")
-            .when(F.col("canon_id").contains("org"), "org")
-            .otherwise("other"),
-        )
+        .withColumn("kind", kind.otherwise("other"))
         .select("canon_id", "iri", "kind", "n_aliases")
     )
 
@@ -274,7 +269,7 @@ def canonicalize(triples: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     live extraction plan passes ``triples.localCheckpoint()`` so the
     Python kernel runs once, not per consumer.
     """
-    # read three times: the nodes aggregation and both rewrite joins
+    # canon is read three times: the nodes aggregation and both rewrite joins
     canon = (
         block_canon(entity_dictionary(triples))
         .select(F.col("entity_iri").alias("iri"), "canon_id")

@@ -112,6 +112,27 @@ def _not_json(literal: str):
     raise ValueError(f"{literal} is not a JSON value")
 
 
+# A document nesting arrays and objects deeper than this fails to load. At
+# CPython's default recursion limit (Spark's Python workers) the kernel
+# handles 246 nested nodes in compact_turn_docs' round trip and 493 in the
+# other operators, so the rule, not the limit, decides.
+_MAX_DEPTH = 100
+
+
+def _too_deep(doc) -> bool:
+    """Whether ``doc`` nests arrays and objects more than ``_MAX_DEPTH``
+    levels deep (an iterative walk: recursion is what the rule guards)."""
+    stack = [(doc, 1)]
+    while stack:
+        value, depth = stack.pop()
+        if isinstance(value, (dict, list)):
+            if depth > _MAX_DEPTH:
+                return True
+            items = value.values() if isinstance(value, dict) else value
+            stack.extend((v, depth + 1) for v in items)
+    return False
+
+
 def _fingerprint(value) -> str:
     """md5 of the canonical JSON of ``value`` — a bit-exact pin of a whole
     output structure for the golden oracle."""
@@ -178,11 +199,14 @@ class TurnExpander:
     def expand_raw(self, raw: str) -> Optional[tuple[Context, list]]:
         """Parse, context, expand: ``(active context, expanded form)`` of
         one raw document string, or None when it is not JSON (NaN/Infinity
-        literals and nesting too deep to parse included). Raises
-        JsonLdError, or RecursionError for nesting too deep to expand."""
+        literals and nesting too deep to parse included) or nests more than
+        ``_MAX_DEPTH`` levels. Raises JsonLdError (or, as a safety net,
+        RecursionError)."""
         try:
             doc = json.loads(raw, parse_constant=_not_json)
         except (ValueError, RecursionError):  # JSONDecodeError is a ValueError
+            return None
+        if _too_deep(doc):
             return None
         active, body = self._context_of(doc)
         return active, expand_document(self.processor, active, body)
@@ -191,9 +215,9 @@ class TurnExpander:
         """THE document step of every operator: ``(doc_idx, fn(active,
         expanded), None)`` per document of one turn, memoized on the raw
         string. A failing document yields ``(doc_idx, None, error_code)``:
-        not JSON is ``loading document failed``, a JsonLdError in
-        expansion or in ``fn`` is its code, a RecursionError is
-        ``uncategorized error``."""
+        not JSON or nested more than ``_MAX_DEPTH`` levels is ``loading
+        document failed``, a JsonLdError in expansion or in ``fn`` is its
+        code, a RecursionError is ``uncategorized error``."""
         for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
             result = self._doc_cache.get(raw)
             if result is not None:

@@ -18,7 +18,8 @@ pyarrow write takes about a millisecond. The committed-bucket and
 pinned-snapshot lookups read the manifest files with pyarrow for the same
 reason; ``read_manifest`` still returns the table as a DataFrame.
 
-Resume = left-anti join of input work units against committed manifest rows:
+Resume = ``pending_buckets()`` (the committed bucket ids, read with
+pyarrow) plus an ``isin`` filter of the input on the pending buckets:
 already-done units are skipped, so re-running after a failure appends only
 the missing partitions and the final table is byte-identical (FIXTURES.md
 §5.2).

@@ -97,7 +97,7 @@ def reconstruct_turn_stats(rows: list[dict]) -> tuple:
     reconstruction, so the rebuilt document — node sort order, list
     items, and the md5 fingerprint of its canonical JSON — is a pure
     function of graph structure (exact under
-    canonical_triples_with_assignment's ``max_perms``; past that cap the
+    canonical_triples_with_assignment's ``_MAX_PERMS``; past that cap the
     assignment is deterministic but label-dependent, so a poison graph
     can only report a false "changed" in a cross-snapshot diff, never a
     false "unchanged").

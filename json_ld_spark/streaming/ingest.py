@@ -28,7 +28,6 @@ Table B marks these rows as pipeline scaffolding, not reference algorithms.
 
 from __future__ import annotations
 
-import json
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -199,9 +198,9 @@ def run_stream_to_snapshots_with_change_feed(
        :func:`_snapshot_sink`);
     2. fingerprints per turn (``turn_fingerprints`` — one exchange, one
        row per turn, quarantine → NULL fp);
-    3. diffs against the persisted cumulative fingerprint state with
-       ``graph_diff(old_fingerprints=...)`` — so a daily/continuous diff
-       never re-canonicalizes history, only the new commit;
+    3. diffs them against the persisted cumulative fingerprint state
+       with ``graph_diff`` — so a daily/continuous diff never
+       re-canonicalizes history, only the new commit;
     4. writes the commit's change feed under ``state_dir/feed/`` and its
        fingerprints under ``state_dir/fps/`` (per-commit partitions).
 
@@ -245,9 +244,9 @@ def run_stream_to_snapshots_with_change_feed(
             old = _latest_fingerprints(spark, fps_root)
             if old is None:  # first commit: diff against empty state
                 old = spark.createDataFrame([], FPS_SCHEMA)
-            feed = graph_diff(
-                None, None, old_fingerprints=old, new_fingerprints=new_fps
-            ).where(F.col("status") != "removed")
+            feed = graph_diff(old, new_fps).where(
+                F.col("status") != "removed"
+            )
             feed.write.mode("overwrite").parquet(
                 os.path.join(feed_root, f"commit={tag}")
             )
@@ -319,20 +318,19 @@ def _snapshot_sink(
     a crash-replayed batch finds its tag committed and is a no-op.
 
     The tag is ``<prefix><query id>-batch-<n>``. The streaming query id is
-    minted with the checkpoint, persisted in ``<checkpoint>/metadata`` at
-    query start and read on the first batch. Batch ids alone restart at 0
-    when a checkpoint is wiped or relocated, and the replay guard would
-    then silently discard new batches as already-committed ones.
+    minted with the checkpoint (``<checkpoint>/metadata``), and Spark hands
+    it to each batch as the ``sql.streaming.queryId`` local property.
+    Batch ids alone restart at 0 when a checkpoint is wiped or relocated,
+    and the replay guard would then silently discard new batches as
+    already-committed ones.
 
     With ``then``, the batch is persisted, appended, handed to
     ``then(batch_df, batch_id, tag)`` and unpersisted."""
-    spark = stream.sparkSession
-    query_id: list[str] = []
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        if not query_id:
-            query_id.append(_checkpoint_query_id(spark, checkpoint_dir))
-        tag = f"{prefix}{query_id[0]}-batch-{batch_id}"
+        sc = batch_df.sparkSession.sparkContext
+        query_id = sc.getLocalProperty("sql.streaming.queryId")
+        tag = f"{prefix}{query_id}-batch-{batch_id}"
         if then is None:
             store.append(batch_df, tag=tag)
             return
@@ -348,31 +346,6 @@ def _snapshot_sink(
         .option("checkpointLocation", checkpoint_dir),
         available_now,
     )
-
-
-def _checkpoint_query_id(spark: SparkSession, checkpoint_dir: str) -> str:
-    """Read the streaming query id from ``<checkpoint>/metadata`` through
-    the Hadoop filesystem API, so HDFS/S3/file: checkpoint locations work
-    exactly like bare local paths (a driver-local ``open()`` would crash
-    the first batch on any non-local scheme). foreachBatch runs
-    driver-side, where the JVM gateway is available."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(checkpoint_dir, "metadata")
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(path)
-    try:
-        reader = jvm.java.io.BufferedReader(
-            jvm.java.io.InputStreamReader(stream, "UTF-8")
-        )
-        lines = []
-        while True:
-            line = reader.readLine()
-            if line is None:
-                break
-            lines.append(line)
-    finally:
-        stream.close()
-    return json.loads("\n".join(lines))["id"]
 
 
 def run_stream_transcripts_to_snapshots(

@@ -273,7 +273,7 @@ def test_poison_graph_exhausts_budget():
     bns = [f"_:b{i}" for i in range(7)]
     quads = [q(a, "http://e/p", b) for a in bns for b in bns if a != b]
     with pytest.raises(CanonicalizationTooComplex):
-        canonicalize_quads(quads, max_work=50)
+        canonicalize_quads(quads)
 
 
 def test_budget_generous_enough_for_real_shapes():

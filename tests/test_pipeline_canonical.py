@@ -13,6 +13,7 @@ from json_ld_spark.pipeline.canonical import (
     graph_diff,
     skolemize_triples,
     skolemize_turn_rows,
+    turn_fingerprints,
 )
 
 _COLS = (
@@ -51,7 +52,7 @@ def test_canonical_nquads_matches_kernel_and_quarantines(spark):
         _row("c4", 2, None, None, None, err="loading document failed"),
     ]
     df = spark.createDataFrame(rows, _COLS)
-    out = canonical_nquads(df, max_work=50).collect()
+    out = canonical_nquads(df).collect()
 
     by_turn: dict[tuple, list] = {}
     for r in out:
@@ -104,7 +105,7 @@ def test_graph_dedup_collapses_isomorphic_turns(spark):
     df = spark.createDataFrame(rows, _COLS)
     out = {
         (r.conv_id, r.turn_idx): r
-        for r in graph_dedup(df, max_work=50).collect()
+        for r in graph_dedup(df).collect()
     }
     assert set(out) == {("c1", 0), ("c2", 5), ("c1", 9), ("c3", 2)}
     iso = [out[("c1", 0)], out[("c1", 9)], out[("c2", 5)]]
@@ -114,21 +115,6 @@ def test_graph_dedup_collapses_isomorphic_turns(spark):
     assert [r.keep for r in iso] == [True, False, False]
     assert out[("c3", 2)].keep and out[("c3", 2)].group_size == 1
     assert out[("c3", 2)].graph_fp != iso[0].graph_fp
-
-    # min_group_size=2 (the corpus-scale REPORT knob): only actual
-    # duplicate groups survive — the singleton c3 never reaches the
-    # output, and the duplicate group is byte-identical to the default
-    # run's rows for the same turns (flag changes coverage, not content)
-    only_dups = {
-        (r.conv_id, r.turn_idx): r
-        for r in graph_dedup(df, max_work=50, min_group_size=2).collect()
-    }
-    assert set(only_dups) == {("c1", 0), ("c2", 5), ("c1", 9)}
-    for key, r in only_dups.items():
-        assert (r.graph_fp, r.n_quads, r.group_size, r.keep) == (
-            out[key].graph_fp, out[key].n_quads,
-            out[key].group_size, out[key].keep,
-        )
 
 
 def test_graph_diff_statuses(spark):
@@ -155,7 +141,9 @@ def test_graph_diff_statuses(spark):
     new = spark.createDataFrame(new_rows, _COLS)
     out = {
         (r.conv_id, r.turn_idx): r
-        for r in graph_diff(old, new, max_work=50).collect()
+        for r in graph_diff(
+            turn_fingerprints(old), turn_fingerprints(new)
+        ).collect()
     }
     assert out[("c1", 0)].status == "unchanged"
     assert out[("c1", 0)].old_fp == out[("c1", 0)].new_fp
@@ -170,14 +158,10 @@ def test_graph_diff_statuses(spark):
     assert len(out) == 5
 
 
-def test_graph_diff_from_persisted_fingerprints(spark):
-    """The incremental form: passing the previous run's persisted
-    turn_fingerprints output must yield the identical diff as passing the
-    old triples themselves."""
-    import pytest as _pytest
-
-    from json_ld_spark.pipeline.canonical import turn_fingerprints
-
+def test_graph_diff_from_persisted_fingerprints(spark, tmp_path):
+    """The incremental form: the previous run's turn_fingerprints output,
+    written to parquet and read back, must yield the identical diff as
+    freshly computed fingerprints."""
     old_rows = [
         _row("c1", 0, "_:x", "http://e/knows", "_:y", kind="bnode"),
         _row("c2", 1, "http://e/s", "http://e/p", "v1", kind="literal"),
@@ -189,23 +173,16 @@ def test_graph_diff_from_persisted_fingerprints(spark):
     ]
     old = spark.createDataFrame(old_rows, _COLS)
     new = spark.createDataFrame(new_rows, _COLS)
-    from_triples = sorted(
-        map(tuple, graph_diff(old, new, max_work=50).collect())
+    new_fps = turn_fingerprints(new)
+    fresh = sorted(
+        map(tuple, graph_diff(turn_fingerprints(old), new_fps).collect())
     )
-    fps = turn_fingerprints(old, max_work=50)
-    from_fps = sorted(
-        map(
-            tuple,
-            graph_diff(
-                None, new, max_work=50, old_fingerprints=fps
-            ).collect(),
-        )
+    path = str(tmp_path / "fps")
+    turn_fingerprints(old).write.parquet(path)
+    persisted = sorted(
+        map(tuple, graph_diff(spark.read.parquet(path), new_fps).collect())
     )
-    assert from_triples == from_fps
-    with _pytest.raises(ValueError):
-        graph_diff(old, new, old_fingerprints=fps)
-    with _pytest.raises(ValueError):
-        graph_diff(None, new)
+    assert fresh == persisted
 
 
 def test_triple_diff_over_skolemized(spark):
@@ -233,8 +210,8 @@ def test_triple_diff_over_skolemized(spark):
         _row("c4", 3, "http://e/s", "http://e/p", "fresh", kind="literal"),
         *_poison_rows("c6", 5),
     ]
-    old = skolemize_triples(spark.createDataFrame(old_rows, _COLS), max_work=50)
-    new = skolemize_triples(spark.createDataFrame(new_rows, _COLS), max_work=50)
+    old = skolemize_triples(spark.createDataFrame(old_rows, _COLS))
+    new = skolemize_triples(spark.createDataFrame(new_rows, _COLS))
     out = triple_diff(old, new).collect()
     by_status: dict[str, list] = {}
     for r in out:
@@ -261,7 +238,7 @@ def test_skolemize_stable_across_relabeling(spark):
         _row("c3", 2, None, None, None, err="loading document failed"),
     ]
     df = spark.createDataFrame(rows, _COLS)
-    out = skolemize_triples(df, max_work=50).collect()
+    out = skolemize_triples(df).collect()
 
     by_turn: dict[tuple, list] = {}
     for r in out:

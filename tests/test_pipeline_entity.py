@@ -15,6 +15,7 @@ from json_ld_spark.pipeline.cc import (
 from json_ld_spark.pipeline.entity import (
     block_canon,
     canonicalize,
+    derive_nodes,
     detect_mentions,
     entity_dictionary,
     entity_local_name,
@@ -237,6 +238,27 @@ def test_block_canon_spot_labels(spark):
         {("http://ex.org/x", "http://ex.org/x"): 1,
          ("http://ex.org/y", "http://ex.org/y"): 1, (None, None): 1}
     )
+
+
+def test_derive_nodes_kind_from_local_name(spark):
+    """``kind`` is the ``<kind>-<n>`` prefix of the local name, never a
+    substring elsewhere in the IRI (the domain, a path segment)."""
+    iris = [
+        "http://ex.org/x",
+        "http://example.com/organization/7",
+        "http://ex.org/d/org-3",
+        "http://ex.org/v#person-4",
+    ]
+    canon = spark.createDataFrame(
+        [(i, i) for i in iris], "iri string, canon_id string"
+    )
+    kinds = dict(derive_nodes(canon).select("canon_id", "kind").collect())
+    assert kinds == {
+        "http://ex.org/x": "other",
+        "http://example.com/organization/7": "other",
+        "http://ex.org/d/org-3": "org",
+        "http://ex.org/v#person-4": "person",
+    }
 
 
 _IRI = st.builds(

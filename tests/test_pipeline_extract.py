@@ -76,8 +76,8 @@ def test_failing_documents_skip_but_keep_their_index(spark):
     (keeping the doc_idx of the ones after it) and quarantined by
     extract_triples, one row per failing document. NaN/Infinity literals
     (which Python's json accepts) and an array nested too deep to parse
-    are not JSON; nodes nested too deep to expand are an uncategorized
-    error. None aborts the task, and the Spark-free mirror agrees."""
+    are not JSON; nodes nested more than 100 levels deep fail to load.
+    None aborts the task, and the Spark-free mirror agrees."""
     from json_ld_spark.kernel import JsonLdError
     from json_ld_spark.pipeline.extract import (
         TaskMetricsParam,
@@ -146,7 +146,7 @@ def test_failing_documents_skip_but_keep_their_index(spark):
         (5, ""),
         *[(5, "loading document failed")] * 4,  # one row per document
         (6, ""),
-        (6, "uncategorized error"),
+        (6, "loading document failed"),
     ]
     samples = acc.value
     assert sum(s[0] for s in samples) == 6  # candidate turns
@@ -159,6 +159,52 @@ def test_failing_documents_skip_but_keep_their_index(spark):
         frame_compact_turn_entities(
             df, frame={"@context": {"@vocab": 42}, "name": {}}
         )
+
+
+def _node_chain(levels: int) -> str:
+    """A named root node over a chain of nested nodes: ``levels`` levels
+    of JSON objects."""
+    doc = {"@id": "http://ex.org/leaf"}
+    for _ in range(levels - 2):
+        doc = {"http://ex.org/p": doc}
+    return json.dumps({
+        "@id": "http://ex.org/root", "http://schema.org/name": "Root",
+        "http://ex.org/p": doc,
+    })
+
+
+def test_nesting_depth_rule(spark):
+    """100 levels of objects run in all five operators in Spark's
+    workers; 101 levels fail to load, in extract_triples and in the
+    Spark-free mirror run in this driver process (whose recursion limit
+    differs from the workers') alike."""
+    from json_ld_spark.pipeline.extract import (
+        compact_turn_docs,
+        flatten_turn_stats,
+        frame_compact_turn_entities,
+        frame_turn_entities,
+    )
+
+    df = spark.createDataFrame(
+        [("d", n, "ok", _node_chain(n)) for n in (100, 101)],
+        "conv_id string, turn_idx int, text string, tool string",
+    )
+    out = extract_triples(df).collect()
+    assert Counter((r.turn_idx, r.error_code) for r in out) == Counter(
+        {(100, None): 100, (101, "loading document failed"): 1}
+    )
+    assert Counter(map(tuple, out)) == Counter(extract_rows(df.toPandas()))
+
+    for op in (frame_turn_entities, frame_compact_turn_entities):
+        got = [(r.turn_idx, r.doc_idx, r.root_id) for r in op(df).collect()]
+        assert got == [(100, 0, "http://ex.org/root")], op.__name__
+    got = [(r.turn_idx, r.doc_idx, r.roundtrip_ok)
+           for r in compact_turn_docs(df).collect()]
+    assert got == [(100, 0, 1)]
+    stats = {r.turn_idx: r for r in flatten_turn_stats(df).collect()}
+    # flattening drops the leaf: a node with only an @id
+    assert (stats[100].n_docs, stats[100].n_nodes) == (1, 99)
+    assert stats[101].n_docs == 0
 
 
 def test_per_turn_text_equality_invariant(spark, transcripts):

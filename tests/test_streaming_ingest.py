@@ -5,7 +5,9 @@ and that the checkpoint makes re-drains idempotent (no double-counting on
 replay — the streaming analogue of manifest resume).
 """
 
+import json
 import os
+import re
 import shutil
 
 import pytest
@@ -216,15 +218,31 @@ def test_stream_snapshot_commits_survive_checkpoint_wipe(spark, tmp_path):
             spark, source, store, ckpt, available_now=True
         )
         q.awaitTermination(120)
+        with open(os.path.join(ckpt, "metadata")) as f:
+            return json.loads(f.readline())["id"]
+
+    def tags():
+        return [s["tag"] for s in store._snapshots()]
 
     land("wipe-c1")
-    drain()
+    id1 = drain()
     assert store.read().where(F.col("conv_id") == "wipe-c1").count() == 1
+    before = tags()
+    assert before and all(
+        re.fullmatch(rf"transcripts-{id1}-batch-\d+", t) for t in before
+    )
 
     # simulate checkpoint loss: batch ids restart at 0 on the next drain
     shutil.rmtree(ckpt)
     land("wipe-c2")
-    drain()
+    id2 = drain()
+    assert id2 != id1
+    after = tags()
+    assert after[: len(before)] == before and len(after) > len(before)
+    assert all(
+        re.fullmatch(rf"transcripts-{id2}-batch-\d+", t)
+        for t in after[len(before):]
+    )
     got = store.read()
     # the fresh lineage re-reads the backlog (at-least-once after losing
     # the checkpoint — expected); what it must NOT do is drop new data
@@ -233,7 +251,7 @@ def test_stream_snapshot_commits_survive_checkpoint_wipe(spark, tmp_path):
 
 def test_stream_change_feed_equals_batch_graph_diff(spark, tmp_path):
     """VERDICT r5 stretch: the streaming per-commit change feed (persisted
-    fingerprints + graph_diff(old_fingerprints=...) per micro-batch) must
+    fingerprints + graph_diff against them per micro-batch) must
     equal the batch graph_diff over the same two snapshots. Micro-batch 2
     re-sends one turn isomorphically relabeled (must feed as 'unchanged'),
     edits one literal ('changed'), and introduces one turn ('added')."""
@@ -316,9 +334,9 @@ def test_stream_change_feed_equals_batch_graph_diff(spark, tmp_path):
     # the feed must EQUAL the batch graph_diff over the same snapshots
     old_fps = turn_fingerprints(extract_triples(batch1))
     new_fps = turn_fingerprints(extract_triples(batch2))
-    expected = graph_diff(
-        None, None, old_fingerprints=old_fps, new_fingerprints=new_fps
-    ).where(F.col("status") != "removed")
+    expected = graph_diff(old_fps, new_fps).where(
+        F.col("status") != "removed"
+    )
     got2 = sorted(map(tuple, feed2.select(feed_cols).collect()))
     want2 = sorted(map(tuple, expected.select(feed_cols).collect()))
     assert got2 == want2

@@ -106,18 +106,35 @@ def _reject_constant(literal: str):
     raise ValueError(f"{literal} is not JSON")
 
 
+def _nesting_depth(value) -> int:
+    """Levels of arrays and objects in ``value``, counted level by level."""
+    depth, level = 0, [value]
+    while True:
+        level = [v for v in level if isinstance(v, (dict, list))]
+        if not level:
+            return depth
+        depth += 1
+        level = [
+            c for v in level for c in (v.values() if isinstance(v, dict) else v)
+        ]
+
+
 def _expand_doc(raw: str, processor, document_iri: str) -> list[tuple]:
     """One document's triple rows (minus the conv_id/turn_idx prefix), or
     one quarantine row when it fails — the per-document rules of
     pipeline/extract.extract_triples, from straight kernel calls with no
     caching. Not JSON (NaN/Infinity literals and nesting too deep to
-    parse included) is "loading document failed", a JsonLdError is its
-    code, and nesting too deep to expand is "uncategorized error"."""
-    out: list[tuple] = []
+    parse included) or more than 100 levels of arrays and objects is
+    "loading document failed", a JsonLdError is its code, and nesting too
+    deep to expand is "uncategorized error"."""
+    not_loaded = [(None,) * 8 + ("loading document failed",)]
     try:
         doc = json.loads(raw, parse_constant=_reject_constant)
     except (ValueError, RecursionError):
-        return [(None,) * 8 + ("loading document failed",)]
+        return not_loaded
+    if _nesting_depth(doc) > 100:
+        return not_loaded
+    out: list[tuple] = []
     try:
         ctx_value = doc.get("@context") if isinstance(doc, Mapping) else None
         if ctx_value is not None:
@@ -142,25 +159,9 @@ def _expand_doc(raw: str, processor, document_iri: str) -> list[tuple]:
     return out
 
 
-# Spark's Python workers run at CPython's default recursion limit; a driver
-# that has built a pyspark Column runs at 3000 (pyspark imports IPython,
-# whose jedi raises the limit). How deep a document may nest before it
-# fails depends on the limit, so the mirror expands at the workers' one.
-_WORKER_RECURSION_LIMIT = 1000
-
-
 def extract_rows(transcripts: pd.DataFrame) -> list[tuple]:
     """The rows ``extract_triples`` writes for ``transcripts``, from the
-    Spark-free, cache-free kernel loop at the workers' recursion limit."""
-    limit = sys.getrecursionlimit()
-    sys.setrecursionlimit(_WORKER_RECURSION_LIMIT)
-    try:
-        return _extract_rows(transcripts)
-    finally:
-        sys.setrecursionlimit(limit)
-
-
-def _extract_rows(transcripts: pd.DataFrame) -> list[tuple]:
+    Spark-free, cache-free kernel loop."""
     cd = ContextDict()
     processor = cd.processor
     document_iri = cd.document_iri
@@ -1051,12 +1052,9 @@ def write_nodes_edges(triple_rows: list[tuple], out_dir: str) -> None:
     node_rows = []
     for label, members in groups.items():
         cid = min(members)
-        kind = (
-            "person" if "person" in cid
-            else "event" if "event" in cid
-            else "org" if "org" in cid
-            else "other"
-        )
+        # kind: the local name's "<kind>-<n>" prefix, for the three kinds
+        prefix = _local_name(cid).split("-", 1)[0]
+        kind = prefix if prefix in ("person", "event", "org") else "other"
         node_rows.append((cid, min(members), kind, len(members)))
     node_rows.sort()
     pq.write_table(

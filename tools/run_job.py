@@ -123,12 +123,8 @@ def main() -> None:
             # of recomputing the canonicalization a second time
             fps = spark.read.parquet(args.fingerprints_out)
         if args.diff_against:
-            graph_diff(
-                None,
-                None,
-                old_fingerprints=spark.read.parquet(args.diff_against),
-                new_fingerprints=fps,
-            ).write.mode("overwrite").parquet(
+            old_fps = spark.read.parquet(args.diff_against)
+            graph_diff(old_fps, fps).write.mode("overwrite").parquet(
                 os.path.join(args.out, "diff")
             )
     skol_quarantined = None
