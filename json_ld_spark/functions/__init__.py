@@ -1,15 +1,3 @@
-from .iri_ops import (
-    classify_iri_col,
-    compact_iri_col,
-    expand_term_col,
-    expand_term_join,
-    prefix_suffix_split,
-)
+from .iri_ops import compact_iri_col
 
-__all__ = [
-    "classify_iri_col",
-    "compact_iri_col",
-    "expand_term_col",
-    "expand_term_join",
-    "prefix_suffix_split",
-]
+__all__ = ["compact_iri_col"]

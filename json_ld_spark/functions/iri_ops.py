@@ -1,30 +1,15 @@
-"""Vectorized JVM-side IRI operations (SURVEY.md §2 P2 / A23 tier-1 pre-pass).
+"""Vectorized JVM-side IRI compaction (SURVEY.md §2 P2).
 
-These are the whole-stage-codegen realizations of the reference's IRI
-helpers, compiled from a *frozen* broadcast context into plain Catalyst
-expressions — zero Python on the hot path:
+``compact_iri_col`` is §6.3 vocab-mode IRI compaction compiled from a
+*frozen* context into one Catalyst expression — zero Python on the hot
+path: exact inverse-context matches via a map literal, then the
+vocab-relative suffix, then the shortest compact-IRI candidate.
+kernel/compact.py is the spec-faithful oracle the tests pin it against.
 
-- ``classify_iri_col``    — src/iri.rs:5-72 category heuristic (keyword /
-  blank node / absolute / compact / relative), reference-verbatim including
-  the ``//``-based absolute-IRI heuristic (SURVEY.md quirk note A25:
-  parity over purity).
-- ``prefix_suffix_split`` — src/iri.rs:43-54 (first char never a separator,
-  spec issue 189/PR 203 note at src/iri.rs:48-49).
-- ``expand_term_col``     — the frozen-context fast path of IRI expansion
-  (src/expand/iri.rs:234-331): term→IRI dict becomes a Catalyst map literal,
-  vocab concat becomes string concat. Documents with scoped/term-creating
-  contexts fall back to the kernel inside mapInPandas (extract.py) — this
-  column op is for post-extraction analytics where the context is settled.
-- ``compact_iri_col``     — §6.3 compaction as a generated CASE chain:
-  exact-term matches via map literal, then longest-prefix compact-IRI
-  rewriting, then vocab-relative suffix. Mirrors kernel/compact.py, which
-  is the spec-faithful oracle the tests pin this against.
-
-Scale note: every function here produces a single Catalyst expression tree —
-no shuffle, no UDF, fully pushdown/codegen friendly. The context-derived
-literals are tiny (10s of terms), so the generated plan stays well under
-codegen limits; for contexts with thousands of terms, swap the CASE chain
-for a broadcast-join against a terms table (same semantics, one broadcast).
+Scale note: the result is a single Catalyst expression tree — no shuffle,
+no UDF, fully pushdown/codegen friendly. The context-derived literals are
+tiny (10s of terms), so the generated plan stays well under codegen
+limits.
 """
 
 from __future__ import annotations
@@ -35,180 +20,6 @@ from pyspark.sql import functions as F
 from ..kernel import Context
 from ..kernel.model import KEYWORDS
 
-
-# --------------------------------------------------------------- classify
-
-def classify_iri_col(col: Column) -> Column:
-    """Category per src/iri.rs:5-41: keyword | blank_node | absolute |
-    compact | relative. Uses the reference's heuristics, not RFC 3987."""
-    prefix = F.regexp_extract(col, r"^(.[^:]*):", 1)
-    suffix = F.regexp_extract(col, r"^.[^:]*:(.*)$", 1)
-    has_colon_split = F.length(prefix) > 0
-    return (
-        F.when(col.isNull(), F.lit(None).cast("string"))
-        .when(col.isin(*sorted(KEYWORDS)), F.lit("keyword"))
-        .when(col.startswith("_:"), F.lit("blank_node"))
-        # src/iri.rs:24-38: scheme:suffix where suffix does NOT start with
-        # "//" is still absolute; "//" means authority → absolute too; the
-        # reference treats any successful split as absolute-or-compact by
-        # whether the prefix is a declared term — at the *syntax* level both
-        # are "absolute IRI reference" per is_absolute_iri_ref (:57-63).
-        .when(has_colon_split & suffix.startswith("//"), F.lit("absolute"))
-        .when(has_colon_split, F.lit("compact"))
-        .otherwise(F.lit("relative"))
-    )
-
-
-def prefix_suffix_split(col: Column) -> tuple[Column, Column]:
-    """(prefix, suffix) per src/iri.rs:43-54; first char never a separator.
-    Both are empty strings when there is no colon past position 0."""
-    return (
-        F.regexp_extract(col, r"^(.[^:]*):", 1),
-        F.regexp_extract(col, r"^.[^:]*:(.*)$", 1),
-    )
-
-
-# ----------------------------------------------------------------- expand
-
-def expand_term_col(col: Column, ctx: Context) -> Column:
-    """Vocab-mode term→IRI expansion against a frozen context.
-
-    Order mirrors src/expand/iri.rs:234-331 for the value shapes that occur
-    post-freeze: keyword passthrough → defined-term lookup (null tombstone
-    blocks vocab fallback, iri.rs:261-272 / W3C t0032) → blank node →
-    compact-IRI via declared prefix (iri.rs:274-297) → absolute passthrough
-    → vocab concat (iri.rs:299-303) → unchanged passthrough (step 9,
-    iri.rs:330 — with no @vocab a relative value returns as-is, same as the
-    kernel; there is no document-relative resolution in vocab mode).
-    """
-    term_map: dict[str, str] = {}
-    tombstones: list[str] = []
-    prefixes: list[tuple[str, str]] = []
-    for term, td in ctx.term_definitions.items():
-        if td is None:
-            tombstones.append(term)
-            continue
-        term_map[term] = td.iri
-        if td.is_prefix:
-            prefixes.append((term, td.iri))
-
-    expr = F.when(col.isNull(), F.lit(None).cast("string"))
-    expr = expr.when(col.isin(*sorted(KEYWORDS)), col)
-    # keyword-form but not a keyword → null (iri.rs:244-247, syntax.rs:8-10)
-    expr = expr.when(col.rlike(r"^@[A-Za-z]+$"), F.lit(None).cast("string"))
-    if tombstones:
-        expr = expr.when(col.isin(*tombstones), F.lit(None).cast("string"))
-    if term_map:
-        items = []
-        for k in sorted(term_map):
-            items.extend([F.lit(k), F.lit(term_map[k])])
-        m = F.create_map(*items)
-        expr = expr.when(m[col].isNotNull(), m[col])
-    expr = expr.when(col.startswith("_:"), col)
-    # compact IRI: prefix must be a declared term; suffix "//" → treat as
-    # absolute passthrough (iri.rs:276-280)
-    pfx, sfx = prefix_suffix_split(col)
-    expr = expr.when(
-        (F.length(pfx) > 0) & sfx.startswith("//"), col
-    )
-    # NB: no length(sfx) > 0 guard — step 6.4 (iri.rs:282-291, kernel
-    # context_processing.py step 6.4) concatenates even for an empty suffix,
-    # so a declared prefix with trailing colon ("schema:") expands to the
-    # namespace IRI itself. The split regex already guarantees the colon sits
-    # past position 0, so pfx is non-empty exactly when a split exists.
-    for term, ns in sorted(prefixes, key=lambda p: (-len(p[0]), p[0])):
-        expr = expr.when(pfx == term, F.concat(F.lit(ns), sfx))
-    # NOTE: an undeclared-prefix value like "nope:x" is NOT absolute under
-    # the reference's //-heuristic (iri.rs:62-64) — it falls through to
-    # vocab concat (step 7) and then the literal fallback (step 9), exactly
-    # like the kernel.
-    if ctx.vocab is not None:
-        expr = expr.when(F.lit(True), F.concat(F.lit(ctx.vocab), col))
-    return expr.otherwise(col)
-
-
-def expand_term_join(
-    df, col_name: str, ctx: Context, out_col: str = "expanded"
-):
-    """Large-context realization of :func:`expand_term_col` as a pair of
-    broadcast joins against a terms table (the fallback promised in the
-    module docstring): the per-term CASE chain grows one Catalyst branch
-    per definition, which at real vocabulary sizes (10³-10⁴ terms) blows
-    past the codegen method-size limit and falls back to slow interpreted
-    evaluation. Here the term→IRI map becomes data, not plan:
-
-        df LEFT JOIN broadcast(terms)    ON value  == term      (step 4/5)
-           LEFT JOIN broadcast(prefixes) ON prefix == term      (step 6.4)
-
-    then one small, term-count-independent CASE resolves the precedence
-    (keyword → keyword-form → defined term / null tombstone → blank node →
-    '//'-suffix passthrough → prefix concat → vocab concat → step-9
-    passthrough) — exactly expand_term_col's order, which the tests pin on
-    both a small context (column-vs-join equivalence on every value class)
-    and a 5 000-term context (vs the kernel directly).
-
-    Returns ``df`` with ``out_col`` appended. Exact-term equality means at
-    most one terms row matches per input row, so row count is preserved.
-    A matched term with a null IRI is the tombstone: the hit flag (not the
-    IRI's nullness) decides the branch, so tombstones yield null rather
-    than falling through to @vocab (W3C t0032 semantics).
-    """
-    spark = df.sparkSession
-    term_rows = [
-        (term, td.iri if td is not None else None,
-         bool(td is not None and td.is_prefix))
-        for term, td in ctx.term_definitions.items()
-    ]
-    terms = spark.createDataFrame(
-        term_rows or [(None, None, None)],
-        "term string, iri string, is_prefix boolean",
-    ).where(F.col("term").isNotNull())
-
-    col = F.col(col_name)
-    pfx, sfx = prefix_suffix_split(col)
-    j = (
-        df.withColumn("__pfx", pfx)
-        .withColumn("__sfx", sfx)
-        .join(
-            F.broadcast(
-                terms.select(
-                    F.col("term").alias("__term"),
-                    F.col("iri").alias("__term_iri"),
-                    F.lit(True).alias("__term_hit"),
-                )
-            ),
-            col == F.col("__term"),
-            "left",
-        )
-        .join(
-            F.broadcast(
-                terms.where(F.col("is_prefix") & F.col("iri").isNotNull()).select(
-                    F.col("term").alias("__pfx_term"),
-                    F.col("iri").alias("__pfx_iri"),
-                )
-            ),
-            F.col("__pfx") == F.col("__pfx_term"),
-            "left",
-        )
-    )
-    expr = (
-        F.when(col.isNull(), F.lit(None).cast("string"))
-        .when(col.isin(*sorted(KEYWORDS)), col)
-        .when(col.rlike(r"^@[A-Za-z]+$"), F.lit(None).cast("string"))
-        .when(F.col("__term_hit"), F.col("__term_iri"))
-        .when(col.startswith("_:"), col)
-        .when((F.length(F.col("__pfx")) > 0) & F.col("__sfx").startswith("//"), col)
-        .when(F.col("__pfx_iri").isNotNull(), F.concat(F.col("__pfx_iri"), F.col("__sfx")))
-    )
-    if ctx.vocab is not None:
-        expr = expr.when(F.lit(True), F.concat(F.lit(ctx.vocab), col))
-    return j.withColumn(out_col, expr.otherwise(col)).drop(
-        "__pfx", "__sfx", "__term", "__term_iri", "__term_hit",
-        "__pfx_term", "__pfx_iri",
-    )
-
-
-# ---------------------------------------------------------------- compact
 
 def compact_iri_col(col: Column, ctx: Context) -> Column:
     """Vocab-mode IRI compaction as a Catalyst CASE chain (kernel/compact.py

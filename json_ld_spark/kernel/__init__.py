@@ -37,7 +37,6 @@ from .frame import (
     frame_expanded,
 )
 from .from_rdf import triples_to_expanded
-from .profile import Profile, RequestProfile
 
 __all__ = [
     "ErrorCode",
@@ -65,6 +64,4 @@ __all__ = [
     "frame_document",
     "frame_expanded",
     "triples_to_expanded",
-    "Profile",
-    "RequestProfile",
 ]

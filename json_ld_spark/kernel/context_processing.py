@@ -207,8 +207,6 @@ def _process_context_definition(
         )
         if not is_1_1:
             raise JsonLdError(ErrorCode.INVALID_VERSION_VALUE, f"@version={v!r}")
-        if processor.processing_mode_1_0:
-            raise JsonLdError(ErrorCode.PROCESSING_MODE_CONFLICT)
     # Step 5.6 — @import (ctx_def.rs:109-201); local keys win (R6)
     context = _process_import(processor, active_context, context, base)
     # Step 5.7 — @base, ignored inside remote contexts (ctx_def.rs:211; R6)
@@ -243,8 +241,6 @@ def _process_context_definition(
             raise JsonLdError(ErrorCode.INVALID_DEFAULT_LANGUAGE, f"@language={v!r}")
     # Step 5.10 — @direction (ctx_def.rs:334-356)
     if "@direction" in context:
-        if processor.processing_mode_1_0:
-            raise JsonLdError(ErrorCode.INVALID_CONTEXT_ENTRY, "@direction in 1.0")
         result.default_base_direction = parse_direction(context["@direction"])
     # Step 5.11 — @propagate validation is miswired in the reference (R3):
     # intentionally no validation here; the lenient read happened in step 2.
@@ -279,8 +275,6 @@ def _process_import(
     (reference: src/context/merge/ctx_def.rs:188-198; R6)."""
     if "@import" not in context:
         return context
-    if processor.processing_mode_1_0:
-        raise JsonLdError(ErrorCode.INVALID_CONTEXT_ENTRY, "@import in 1.0")
     imp = context["@import"]
     if not isinstance(imp, str):
         raise JsonLdError(ErrorCode.INVALID_IMPORT_VALUE, f"@import={imp!r}")
@@ -352,8 +346,6 @@ def create_term_definition(
     value = local_context[term]
     # Step 4 — `@type` may only be redefined as {"@container": "@set", [@protected]}
     if term == "@type":
-        if processor.processing_mode_1_0:
-            raise JsonLdError(ErrorCode.KEYWORD_REDEFINITION, "@type in 1.0")
         if not isinstance(value, Mapping):
             raise JsonLdError(ErrorCode.KEYWORD_REDEFINITION, f"@type={value!r}")
         if value.get("@container") != "@set":
@@ -396,8 +388,6 @@ def create_term_definition(
     # Step 11, 12 — @protected (create_term_def.rs:240-274)
     tp = value_map.get("@protected", MISSING)
     if tp is True:
-        if processor.processing_mode_1_0:
-            raise JsonLdError(ErrorCode.INVALID_TERM_DEFINITION, "@protected in 1.0")
         builder.set(protected=True)
     elif tp is False:
         pass
@@ -417,8 +407,6 @@ def create_term_definition(
         )
         if expanded_ty is None:
             raise JsonLdError(ErrorCode.INVALID_TYPE_MAPPING, f"@type={ty!r} → null")
-        if expanded_ty in ("@json", "@none") and processor.processing_mode_1_0:
-            raise JsonLdError(ErrorCode.INVALID_TYPE_MAPPING, f"{expanded_ty} in 1.0")
         # quirk R10: the reference's step 13.4 allow-list omits @json/@none
         # (create_term_def.rs:306) though its step 13.3 names them; we follow
         # the spec list so @json-typed terms (JSON literals) work.
@@ -529,11 +517,6 @@ def _run_for_non_reverse(
     # Step 21 — container (non_reverse.rs:303-358, 543-605)
     if "@container" in value:
         container = _validate_container(value["@container"])
-        if processor.processing_mode_1_0:
-            if isinstance(value["@container"], list):
-                raise JsonLdError(ErrorCode.INVALID_CONTAINER_MAPPING, "array in 1.0")
-            if container & {"@graph", "@id", "@type"}:
-                raise JsonLdError(ErrorCode.INVALID_CONTAINER_MAPPING, "1.1 item in 1.0")
         builder.set(container=container)
         # Step 21.4 — @type container forces type mapping ∈ {@id, @vocab}
         if "@type" in container:
@@ -546,7 +529,7 @@ def _run_for_non_reverse(
                 )
     # Step 22 — @index (requires index container; non_reverse.rs:361-394)
     if "@index" in value:
-        if processor.processing_mode_1_0 or not builder.container_contains("@index"):
+        if not builder.container_contains("@index"):
             raise JsonLdError(ErrorCode.INVALID_TERM_DEFINITION, "@index w/o container")
         idx = value["@index"]
         if not isinstance(idx, str):
@@ -555,8 +538,6 @@ def _run_for_non_reverse(
     # Step 23 — scoped context, eagerly processed with override_protected=True
     # (non_reverse.rs:397-422)
     if "@context" in value:
-        if processor.processing_mode_1_0:
-            raise JsonLdError(ErrorCode.INVALID_TERM_DEFINITION, "@context in 1.0")
         try:
             scoped = process_context(
                 processor, active_context, value["@context"], base,
@@ -577,8 +558,6 @@ def _run_for_non_reverse(
         builder.set(direction=parse_direction(value["@direction"]))
     # Step 26 — @nest (non_reverse.rs:444-473)
     if "@nest" in value:
-        if processor.processing_mode_1_0:
-            raise JsonLdError(ErrorCode.INVALID_TERM_DEFINITION, "@nest in 1.0")
         nest = value["@nest"]
         if not isinstance(nest, str):
             raise JsonLdError(ErrorCode.INVALID_NEST_VALUE, f"@nest={nest!r}")
@@ -587,8 +566,6 @@ def _run_for_non_reverse(
         builder.set(nest=nest)
     # Step 27 — @prefix (non_reverse.rs:476-515)
     if "@prefix" in value:
-        if processor.processing_mode_1_0:
-            raise JsonLdError(ErrorCode.INVALID_TERM_DEFINITION, "@prefix in 1.0")
         if ":" in term or "/" in term:
             raise JsonLdError(ErrorCode.INVALID_TERM_DEFINITION, "@prefix on compound term")
         pv = value["@prefix"]

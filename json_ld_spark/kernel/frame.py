@@ -3,10 +3,10 @@ documented subset over the flatten node map.
 
 The reference stubs every document algorithm but names framing twice on its
 public surface — the ``frame``/``framed`` document profiles and their URIs
-(``/root/reference/src/remote/profile.rs:13-18,31-36``), mirrored by this
-repo's ``kernel/profile.py:37-38``. Expand / compact / flatten / fromRdf all
-exist here; this module completes the JsonLdProcessor surface with the §9
-``frame()`` entry, built on §8 node-map generation (``kernel/flatten.py``).
+(reference ``src/remote/profile.rs:13-18,31-36``). Expand / compact /
+flatten / fromRdf all exist here; this module completes the JsonLdProcessor
+surface with the §9 ``frame()`` entry, built on §8 node-map generation
+(``kernel/flatten.py``).
 
 Implemented subset (everything a frame over the fixture/transcript corpus
 exercises, and the shape the W3C framing test suite's core cases use):

@@ -227,7 +227,6 @@ class ProcessorOptions:
     """
 
     document_iri: str
-    processing_mode_1_0: bool = False  # hardwired false in the reference (:34-37)
     context_loader: Any = None  # Mapping[str, dict] | None
 
     def base(self, context: Context) -> Optional[str]:

@@ -259,7 +259,9 @@ def graph_dedup(triples: DataFrame) -> DataFrame:
 
     Scale shape: fingerprints come straight out of the
     :func:`turn_fingerprints` kernel (one exchange, one row per turn —
-    see its docstring); everything after is JVM. Representatives come
+    see its docstring) and are local-checkpointed, so the kernel
+    canonicalizes each turn once although both sides of the ``graph_fp``
+    join read them; everything after is JVM. Representatives come
     from groupBy(graph_fp).min(struct) + an equi-join back — the
     map-side-combining, skew-safe shape; a window over fp would sort whole
     degenerate groups on one task. Too-automorphic turns (NULL fp from
@@ -269,7 +271,12 @@ def graph_dedup(triples: DataFrame) -> DataFrame:
     result: Catalyst pushes that filter below the join onto the
     aggregate, so singleton groups never reach the join.
     """
-    fps = turn_fingerprints(triples).where(F.col("graph_fp").isNotNull())
+    # fps feeds both join sides: checkpoint it so the kernel runs once
+    fps = (
+        turn_fingerprints(triples)
+        .where(F.col("graph_fp").isNotNull())
+        .localCheckpoint()
+    )
     reps = fps.groupBy("graph_fp").agg(
         F.min(F.struct("conv_id", "turn_idx")).alias("rep"),
         F.count(F.lit(1)).alias("group_size"),

@@ -5,8 +5,8 @@ triple-count metrics to a manifest table and resume idempotently. Without an
 Iceberg catalog in the sandbox, the same contract is implemented over
 parquet with an atomic-rename commit per work unit; on a real deployment the
 ``writeTo(...).append()`` path swaps in with the identical manifest schema
-(run_id, partition_id, input_rows, triples_out, errors, checksum, ts — the
-snapshot_id column then carries the Iceberg snapshot).
+(run_id, partition_id, n_buckets, input_rows, triples_out, errors, checksum,
+ts — the snapshot_id column then carries the Iceberg snapshot).
 
 A commit is a driver-side write, not a Spark job: the one-row file is
 written with ``pyarrow.parquet`` through ``snapshots.atomic_write`` (the
@@ -22,7 +22,9 @@ Resume = ``pending_buckets()`` (the committed bucket ids, read with
 pyarrow) plus an ``isin`` filter of the input on the pending buckets:
 already-done units are skipped, so re-running after a failure appends only
 the missing partitions and the final table is byte-identical (FIXTURES.md
-§5.2).
+§5.2). Each row records the bucket count it was committed under; a re-run
+with another count raises before any write, since its bucket ids would name
+other conversations and extract committed ones a second time.
 
 Work unit = a hash bucket of conv_id (``pmod(xxhash64(conv_id), n_buckets)``)
 — the same hidden-partitioning function an Iceberg ``bucket(conv_id)`` spec
@@ -45,8 +47,9 @@ from .extract import TRIPLE_SCHEMA
 from .snapshots import atomic_write
 
 MANIFEST_SCHEMA = (
-    "run_id string, partition_id int, input_rows long, triples_out long, "
-    "errors long, checksum string, snapshot_id string, ts double"
+    "run_id string, partition_id int, n_buckets int, input_rows long, "
+    "triples_out long, errors long, checksum string, snapshot_id string, "
+    "ts double"
 )
 
 _ARROW_TYPES = {
@@ -92,12 +95,17 @@ class ParquetManifest:
         ]
 
     def committed_buckets(self) -> set[int]:
-        return {
-            b
-            for f in self._manifest_files()
-            for b in pq.read_table(f, columns=["partition_id"])
-            .column(0).to_pylist()
-        }
+        done = set()
+        for f in self._manifest_files():
+            t = pq.read_table(f, columns=["partition_id", "n_buckets"])
+            for b, n in zip(*(c.to_pylist() for c in t.columns)):
+                if n != self.n_buckets:
+                    raise ValueError(
+                        f"warehouse {self.root} was committed with {n} "
+                        f"buckets; this run asks for {self.n_buckets}"
+                    )
+                done.add(b)
+        return done
 
     def pending_buckets(self) -> list[int]:
         done = self.committed_buckets()
@@ -196,6 +204,7 @@ class ParquetManifest:
         row = {
             "run_id": run_id,
             "partition_id": bucket,
+            "n_buckets": self.n_buckets,
             "snapshot_id": None if snapshot_id is None else str(snapshot_id),
             "ts": time.time(),
             **(stats or {"triples_out": 0, "errors": 0, "checksum": "0"}),

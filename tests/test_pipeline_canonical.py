@@ -103,10 +103,11 @@ def test_graph_dedup_collapses_isomorphic_turns(spark):
         *_poison_rows("c4", 1),
     ]
     df = spark.createDataFrame(rows, _COLS)
-    out = {
-        (r.conv_id, r.turn_idx): r
-        for r in graph_dedup(df).collect()
-    }
+    dedup = graph_dedup(df)
+    # one canonicalization pass feeds both sides of the graph_fp join
+    plan = dedup._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInPandas") <= 1, plan
+    out = {(r.conv_id, r.turn_idx): r for r in dedup.collect()}
     assert set(out) == {("c1", 0), ("c2", 5), ("c1", 9), ("c3", 2)}
     iso = [out[("c1", 0)], out[("c1", 9)], out[("c2", 5)]]
     assert len({r.graph_fp for r in iso}) == 1

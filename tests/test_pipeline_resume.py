@@ -84,6 +84,20 @@ def test_noop_rerun_with_entity_layer(spark, sf_dir, tmp_path):
     assert Counter(tuple(r) for r in again.edges.collect()) == edges
 
 
+def test_rerun_with_other_bucket_count_raises(spark, sf_dir, tmp_path):
+    """Bucket ids name other conversations under another bucket count, so
+    resuming a 2-bucket warehouse with 4 buckets would extract buckets 2
+    and 3 again and duplicate their triples. It raises before any write."""
+    transcripts = synth_transcripts(spark, sf_dir)
+    w = str(tmp_path / "w_rebucket")
+    golden = _sorted_triples(
+        run_extraction_job(spark, transcripts, w, n_buckets=2).triples
+    )
+    with pytest.raises(ValueError, match="2 buckets; this run asks for 4"):
+        run_extraction_job(spark, transcripts, w, n_buckets=4)
+    assert _sorted_triples(ParquetManifest(spark, w, 2).read_triples()) == golden
+
+
 def test_empty_buckets_commit_and_resume(spark, sf_dir, tmp_path):
     """Regression: a pending bucket that emits zero rows gets no partition
     directory from the dynamic-partition write — it must still commit its
