@@ -326,8 +326,7 @@ def _triple_rows(expander, _payload, conv_id, turn_idx, text, tool) -> list[tupl
     # Per-turn set-dedup is therefore exactly equivalent to a global
     # dropDuplicates over the clean triples — minus a ~full-output shuffle,
     # which at the 100 TB target is the difference between a map-only stage
-    # and a petascale exchange. It keeps no state, so batch and streaming
-    # plans run the same rule. Quarantine rows are per document: each
+    # and a petascale exchange. Quarantine rows are per document: each
     # failing document adds its own row to the manifest's error count.
     clean: list[tuple] = []
     quarantine: list[tuple] = []
@@ -357,12 +356,11 @@ def extract_triples(
     a single map-only stage, no exchange.
 
     PRECONDITION for the global-dedup guarantee: (conv_id, turn_idx) is
-    unique in ``transcripts``. The streaming path enforces this with
-    dropDuplicatesWithinWatermark (streaming/ingest.py); batch callers
-    with possibly-replayed turn rows (retried tool calls re-appended by an
-    upstream writer) must pass ``dedup_turns=True``, which inserts a cheap
-    pre-kernel ``dropDuplicates(["conv_id","turn_idx"])`` on the *candidate*
-    rows — a shuffle of the JSON-bearing slice only, far smaller than the
+    unique in ``transcripts``. Callers with possibly-replayed turn rows
+    (retried tool calls re-appended by an upstream writer) must pass
+    ``dedup_turns=True``, which inserts a cheap pre-kernel
+    ``dropDuplicates(["conv_id","turn_idx"])`` on the *candidate* rows — a
+    shuffle of the JSON-bearing slice only, far smaller than the
     full-output shuffle the old global dropDuplicates paid. The job path
     (pipeline/job.py) enables it.
     """

@@ -225,6 +225,13 @@ def run_incremental_snapshot_pipeline(
     and run two rewrite joins over every triple" into O(delta + affected
     blocks) — the only full-corpus work left is the semi-join-filtered
     old-triple scan for changed canons and the state rewrite.
+
+    Turn dedup is per delta: the append extracts the delta with
+    ``dedup_turns=True`` and unions the result onto the stored triples, so
+    a (conv_id, turn_idx) that re-appears in a later snapshot is counted
+    again (its triples twice, its edges' provenance +1). A full build
+    (``run_snapshot_pipeline``) dedups turns across the whole store and
+    keeps one copy.
     """
     state_dir = os.path.join(warehouse, "entity_state")
     os.makedirs(state_dir, exist_ok=True)

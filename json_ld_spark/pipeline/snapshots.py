@@ -7,14 +7,20 @@ implementations:
 
 - ``IcebergSnapshotStore`` — the real API calls, for deployments with an
   Iceberg catalog on the classpath. Not executable in this sandbox (no
-  Iceberg jars); enable with spark-submit conf::
+  Iceberg jars). Start the session with the catalog conf::
 
       spark-submit \
         --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \
         --conf spark.sql.catalog.kg=org.apache.iceberg.spark.SparkCatalog \
         --conf spark.sql.catalog.kg.type=hadoop \
         --conf spark.sql.catalog.kg.warehouse=hdfs://…/warehouse \
-        job.py --table kg.db.transcripts --use-iceberg
+        <your driver script>
+
+  then build the store in code and hand it to a pipeline::
+
+      store = IcebergSnapshotStore(spark, "kg.db.transcripts")
+      run_snapshot_pipeline(spark, store, warehouse)             # full build
+      run_incremental_snapshot_pipeline(spark, store, warehouse) # append
 
 - ``ParquetSnapshotStore`` — the sandbox default: the SAME contract over
   parquet with real snapshot semantics. Each ``append`` writes an
@@ -210,8 +216,9 @@ class ParquetSnapshotStore:
     def append(self, df: DataFrame, tag: Optional[str] = None) -> int:
         """Append a snapshot; ``tag`` makes the commit idempotent: a second
         append with an already-committed tag is a no-op returning the
-        original snapshot id. This is the exactly-once hook for streaming
-        ``foreachBatch`` sinks (tag = micro-batch id): a replayed batch
+        original snapshot id. This is the exactly-once hook for the
+        transcript stream's ``foreachBatch`` commits (tag = query id +
+        micro-batch id, see streaming/ingest.py): a replayed batch
         after a crash re-writes an orphan data dir at worst, never a second
         snapshot — the same write-idempotence contract Iceberg gives
         ``writeTo().append()`` under Spark's commit coordinator.

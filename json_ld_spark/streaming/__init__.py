@@ -1,8 +1,6 @@
-from .ingest import stream_extract_triples, stream_transcript_source
-from .stateful import conversation_stats_stream
+from .ingest import run_stream_transcripts_to_snapshots, stream_transcript_source
 
 __all__ = [
-    "conversation_stats_stream",
-    "stream_extract_triples",
+    "run_stream_transcripts_to_snapshots",
     "stream_transcript_source",
 ]

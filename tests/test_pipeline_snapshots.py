@@ -117,58 +117,6 @@ def test_every_commit_point_fsyncs_before_rename(
         assert ("fsync", ino) in events[:i], f"{name} renamed unsynced"
 
 
-def test_stream_commits_snapshots_exactly_once(spark, sf_dir, tmp_path):
-    """Streaming → snapshot-store loop: micro-batches land as atomic
-    snapshot commits; a re-drain on the same checkpoint adds nothing; a
-    direct replayed append with a committed tag is a no-op."""
-    import os
-
-    from json_ld_spark.pipeline.extract import extract_triples
-    from json_ld_spark.pipeline.snapshots import ParquetSnapshotStore
-    from json_ld_spark.streaming.ingest import run_stream_to_snapshots
-
-    source = str(tmp_path / "src")
-    os.makedirs(source)
-    transcripts = synth_transcripts(spark, sf_dir)
-    transcripts.coalesce(1).write.mode("append").parquet(source)
-
-    store = ParquetSnapshotStore(spark, str(tmp_path / "snapstore"))
-    q = run_stream_to_snapshots(
-        spark, source, store, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(300)
-    assert not q.isActive
-
-    n_snaps = store.current_snapshot_id()
-    assert n_snaps is not None and n_snaps >= 1
-    got = store.read().count()
-    want = extract_triples(transcripts).count()
-    assert got == want
-
-    # re-drain: committed backlog → no new snapshots, same rows
-    q2 = run_stream_to_snapshots(
-        spark, source, store, str(tmp_path / "ckpt"), available_now=True
-    )
-    q2.awaitTermination(300)
-    assert store.current_snapshot_id() == n_snaps
-    assert store.read().count() == want
-
-    # simulated foreachBatch replay: re-appending under an already-
-    # committed tag (query-id-scoped since the wiped-checkpoint fix) is a
-    # no-op returning the original snapshot id
-    committed_tags = [
-        s["tag"] for s in store._snapshots() if s.get("tag")
-    ]
-    assert committed_tags and all(
-        "-batch-" in t for t in committed_tags
-    ), committed_tags
-    replay = store.append(
-        extract_triples(transcripts), tag=committed_tags[0]
-    )
-    assert replay <= n_snaps
-    assert store.current_snapshot_id() == n_snaps
-
-
 def test_resume_pins_input_snapshot(spark, sf_dir, tmp_path, crash_commit):
     """Kill after 2 buckets, append NEW data to the store, resume: the
     resumed run must re-read the pinned snapshot, so the final triples,
@@ -228,6 +176,10 @@ def test_append_tag_charset_validated(spark, tmp_path):
         store.append(df, tag="bad'tag; DROP")
     assert store.current_snapshot_id() is None  # nothing committed
     assert store.append(df, tag="batch-0.retry:1_ok") == 1
+    # a replayed append under an already-committed tag is a no-op
+    # returning the original snapshot id
+    assert store.append(df, tag="batch-0.retry:1_ok") == 1
+    assert store.current_snapshot_id() == 1
 
 
 def test_incremental_pipeline_over_snapshots(spark, sf_dir, tmp_path):

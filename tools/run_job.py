@@ -36,9 +36,9 @@ def main() -> None:
         "--snapshot-store",
         help="root of a ParquetSnapshotStore to ingest from (snapshot-"
         "pinned resume); when absent, transcripts synthesize from "
-        "--sf-dir directly. On an Iceberg deployment swap in "
-        "IcebergSnapshotStore via the documented spark-submit conf "
-        "(json_ld_spark/pipeline/snapshots.py).",
+        "--sf-dir directly. An Iceberg table has no flag here: build "
+        "IcebergSnapshotStore(spark, table) in code and pass it to "
+        "run_snapshot_pipeline (json_ld_spark/pipeline/snapshots.py).",
     )
     ap.add_argument(
         "--nquads-out",
