@@ -335,3 +335,36 @@ def test_multi_append_crash_resume_matches_full_build(
     assert res.nodes.where(
         F.col("iri") == "http://ex.org/a/person-3"
     ).count() == 1
+
+
+@pytest.mark.xfail(strict=True, reason="ROADMAP item 3")
+def test_reappearing_turn_counted_once(spark, tmp_path):
+    """A turn committed again in a later snapshot (the transcript stream
+    re-landing its backlog after a lost checkpoint) counts once, as it does
+    in a from-scratch build over the whole store."""
+    from json_ld_spark.pipeline.entity import canonicalize
+    from json_ld_spark.pipeline.extract import extract_triples
+
+    store = ParquetSnapshotStore(spark, str(tmp_path / "again_store"))
+    w = str(tmp_path / "again_wh")
+    turn = spark.createDataFrame(
+        [(
+            "conv-again", 0, "tool", "tool call",
+            '{"@id":"http://ex.org/a/person-3",'
+            '"http://schema.org/knows":{"@id":"http://ex.org/person-4"}}',
+        )],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.current_timestamp())
+    store.append(turn)
+    run_incremental_snapshot_pipeline(spark, store, w)
+    store.append(turn)
+    res = run_incremental_snapshot_pipeline(spark, store, w)
+    assert res.buckets_processed == 1
+
+    full_triples = extract_triples(store.read(), dedup_turns=True)
+    _, _, full_edges = canonicalize(full_triples.localCheckpoint())
+    cols_e = ["src_canon", "pred", "dst_canon", "provenance"]
+    assert _sorted_triples(res.triples) == _sorted_triples(full_triples)
+    assert sorted(tuple(r) for r in res.edges.select(*cols_e).collect()) == (
+        sorted(tuple(r) for r in full_edges.select(*cols_e).collect())
+    )
